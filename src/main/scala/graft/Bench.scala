@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
+import scala.util.control.NonFatal
 
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
@@ -11,26 +12,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // session-build home of the TIMESTAMP(NANOS) flag (see GraftSession)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // localCheckpoint blocks (sealAfter, loop rotations) are freed by
-      // the ContextCleaner only when their RDDs are GC'd; the default
-      // periodic-GC interval (30 min) is longer than the whole bench,
-      // so a 200-query marathon accretes dead blocks in the 8g heap
-      // until late queries feel the pressure (observed: a tail-end OOM
-      // and inflated g13 late iterations). 30 s keeps the floor flat.
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local("graft-bench", cpus)
     // warm the JVM once so timings measure the engine, not first-touch
     // codegen/JIT: one relational query (parquet+agg paths) and one tiny
     // synthetic PageRank (iteration join/agg/checkpoint paths)
@@ -39,7 +22,7 @@ object Bench {
       import spark.implicits._
       val tiny = (0L until 2000L).map(i => (i, (i * 7 + 1) % 2000)).toDF("src", "dst")
       graft.operators.PageRank.runFixed(spark, tiny, k = 2)
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     // two reps, report the min: measures the engine's steady state
     // instead of JIT/GC noise (observed ±30% swings between identical
     // runs); the second rep is skipped for queries already over 30s so
@@ -59,7 +42,7 @@ object Bench {
         df.write.format("noop").mode("overwrite").save()
         Right(((System.nanoTime() - t0) / 1e9, df))
       } catch {
-        case e: Throwable => Left(e.getClass.getSimpleName)
+        case NonFatal(e) => Left(e.getClass.getSimpleName)
       }
     }
     // stage-level resource accounting (shuffle/spill/input bytes) per
@@ -90,9 +73,8 @@ object Bench {
     }
     val calib1t = calibOnce()
     val calibWide = {
-      val nThreads = cpus.toInt
       val t0 = System.nanoTime()
-      val threads = (0 until nThreads).map { _ =>
+      val threads = (0 until cpus).map { _ =>
         val t = new Thread(() => { calibOnce(); () })
         t.start(); t
       }
@@ -243,7 +225,7 @@ object Bench {
         extras += "\"q14_max_rel_err\":" +
           "%.4f".formatLocal(java.util.Locale.ROOT, err)
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           System.err.println(s"[bench] q14 accuracy probe failed: ${e.getClass.getSimpleName}")
       }
     }
@@ -274,7 +256,7 @@ object Bench {
         extras += "\"q20_max_rel_err\":" +
           "%.5f".formatLocal(java.util.Locale.ROOT, err)
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           System.err.println(s"[bench] q20 accuracy probe failed: ${e.getClass.getSimpleName}")
       }
     }
@@ -340,7 +322,7 @@ object Bench {
         (walls, calib, calibW)
       }
     } catch {
-      case _: Throwable => (Map.empty[String, Double], None, None)
+      case NonFatal(_) => (Map.empty[String, Double], None, None)
     }
     // committed idle WORK invariants (shuffle-read + input MB per
     // query, r14 verdict #5): bytes don't drift with host speed the
@@ -383,7 +365,7 @@ object Bench {
               "regression rules are OFF this run")
         parsed
       }
-    } catch { case _: Throwable => Map.empty }
+    } catch { case NonFatal(_) => Map.empty }
     // per-query resource rows, augmented with (a) post-query cache
     // occupancy and (b) the committed idle wall + drift ratio, so an
     // idle-to-idle drift (the r11 g13 case: +38% with an unchanged
@@ -585,7 +567,7 @@ object Bench {
       java.nio.file.Paths.get("BENCH_QUERIES.json"),
       (queriesLine + "\n").getBytes("UTF-8"))
     catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         System.err.println(s"[bench] queries sidecar write failed: ${e.getClass.getSimpleName}")
     }
     println(queriesLine)
@@ -599,7 +581,7 @@ object Bench {
       java.nio.file.Paths.get(detailOut),
       (detail + "\n").getBytes("UTF-8"))
     catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         System.err.println(s"[bench] detail write failed: ${e.getClass.getSimpleName}")
     }
     println(detail)

@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.ConfScope
 import graft.operators._
 import graft.sources.EdgeListReader
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -181,32 +182,21 @@ object SparkEntry {
     */
   private def skewJoin(
       s: SparkSession, dir: String, skewOn: Boolean): DataFrame = {
-    val keys = Seq(
-      "spark.sql.adaptive.skewJoin.enabled",
-      "spark.sql.adaptive.forceOptimizeSkewedJoin",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold")
-    val saved = keys.map(k => k -> s.conf.getOption(k))
-    try {
-      s.conf.set("spark.sql.adaptive.skewJoin.enabled", skewOn.toString)
-      s.conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin",
-        skewOn.toString)
-      s.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
-      // thresholds sized to the ×64 bench fixture (r11 rescale: at the
-      // old ×16 both twins finished in ~1 s and the pair demonstrated
-      // nothing — the g18 fixture-growth treatment applied here): the
-      // hub partition carries ~32 MB at sf0.1, the 997 non-hub keys
-      // ~100 KB each, so 1m splits exactly the hub and the measured
-      // idle ratio is ≥ 2× (see BENCH_DETAIL skew_noaqe_sec /
-      // skew_aqe_sec)
-      s.conf.set(
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "1m")
-      s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    // thresholds sized to the ×64 bench fixture (r11 rescale: at the
+    // old ×16 both twins finished in ~1 s and the pair demonstrated
+    // nothing — the g18 fixture-growth treatment applied here): the
+    // hub partition carries ~32 MB at sf0.1, the 997 non-hub keys
+    // ~100 KB each, so 1m splits exactly the hub and the measured
+    // idle ratio is ≥ 2× (see BENCH_DETAIL skew_noaqe_sec /
+    // skew_aqe_sec)
+    ConfScope(s,
+      "spark.sql.adaptive.skewJoin.enabled" -> skewOn.toString,
+      "spark.sql.adaptive.forceOptimizeSkewedJoin" -> skewOn.toString,
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1m",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1m",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
       val ev = t(s, dir, "events")
       // probe side: ×64 row multiplier, half of all rows remapped to hub
       // key 0 — the deterministic power-law stand-in. Each replica gets
@@ -236,7 +226,7 @@ object SparkEntry {
         .agg(count(lit(1)).as("r_n"))
         .localCheckpoint()
       // sealAfter materializes INSIDE the conf scope — a lazy return
-      // would execute after the finally block restored the session
+      // would execute after the scope restored the session
       graft.operators.CacheScope.sealAfter(
         left.join(right, Seq("jk"))
           .groupBy(pmod(col("jk"), lit(16)).as("bucket"))
@@ -244,9 +234,6 @@ object SparkEntry {
             count(lit(1)).as("n_rows"),
             sum(col("r_n")).as("sum_rn"),
             round(sum(col("value")), 2).as("sum_value")))
-    } finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
     }
   }
 
@@ -6416,11 +6403,9 @@ object SparkEntry {
       import sp.implicits._
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = sp.sqlContext
-      val confKey = "spark.sql.streaming.stateStore.providerClass"
-      val savedConf = s.conf.getOption(confKey)
-      s.conf.set(confKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+      ConfScope(s,
+        "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
         val all = graft.sources.Tables.events(s, dir)
           .selectExpr("event_id", "ts", "user_id", "event_type", "value")
           .as[graft.streaming.EventStreams.Event]
@@ -6454,9 +6439,6 @@ object SparkEntry {
           .localCheckpoint() // detaches from the sink view before the drop
         s.catalog.dropTempView(qname)
         out
-      } finally savedConf match {
-        case Some(v) => s.conf.set(confKey, v)
-        case None => s.conf.unset(confKey)
       }
     },
     "st15_stream_topk" -> ((s, dir) =>

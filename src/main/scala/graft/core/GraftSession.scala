@@ -33,18 +33,17 @@ object GraftSession {
       // parquet semantics mid-session.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // localCheckpoint blocks (sealAfter, loop rotations) are freed by
+      // the ContextCleaner only when their RDDs are GC'd; the default
+      // periodic-GC interval (30 min) is longer than a whole bench run,
+      // so a long-lived session (the Bench query marathon, the shared
+      // test session, a pipeline CLI) accretes dead blocks in the heap
+      // until late queries feel the pressure (observed in Bench: a
+      // tail-end OOM and inflated g13 late iterations). 30 s keeps the
+      // floor flat.
+      .config("spark.cleaner.periodicGC.interval", "30s")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
-  /** Apply engine settings to an externally-created session (driver-owned
-    * sessions in Verify/Bench).
-    */
-  def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark
   }
 }

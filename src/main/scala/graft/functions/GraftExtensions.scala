@@ -8,8 +8,8 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
 /** SQL-function builders for the native expressions, shared by the two
   * registration paths:
   *
-  *   - session BUILD time: `SparkSession.builder().withExtensions(new
-  *     GraftExtensions)` or `--conf spark.sql.extensions=
+  *   - session BUILD time: `.withExtensions(new GraftExtensions)`
+  *     when building the session, or `--conf spark.sql.extensions=
   *     graft.functions.GraftExtensions` — the standard library
   *     injection point;
   *   - LIVE session: [[VectorFunctions.registerSqlFunctions]] (used by

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.ConfScope
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -152,71 +153,11 @@ object PageRank {
     * and the max() below honors it.
     */
   private[graft] def estimateEdgeParts(edgesRaw: DataFrame): Int = {
-    val spark = edgesRaw.sparkSession
-    val plan = edgesRaw
-      .select(col("src"), col("dst"))
-      .queryExecution.optimizedPlan
-    val stats = plan.stats
-    val estRows = stats.rowCount
-      .getOrElse {
-        // A join-derived edge source (e.g. the orders ⋈ lineitem
-        // co-occurrence graph) carries a MULTIPLICATIVE size estimate —
-        // measured 1.1 TB for a 587k-edge graph — which slams into the
-        // 2048 cap and sizes every iteration at thousands of near-empty
-        // tasks. The sum of the plan's LEAF estimates is the honest
-        // scale bound for the working sets this sizing protects: a row
-        // must be scanned before it can be joined, and the per-task
-        // dedup/probe tables are keyed by (near-)distinct edges, which
-        // track leaf scale, not join-output scale. min(top, Σ leaves)
-        // repairs the join case and is the identity on file-scan plans
-        // (such a plan IS its leaf).
-        val top = stats.sizeInBytes / 12
-        val leaves = plan.collectLeaves()
-          .map(l => l.stats.rowCount.getOrElse(l.stats.sizeInBytes / 12))
-          .sum
-        top.min(leaves)
-      }
-      .min(BigInt(Long.MaxValue)).toLong
+    val estRows =
+      PlanScope.estimateRows(edgesRaw.select(col("src"), col("dst")))
     math.max(
-      spark.sessionState.conf.numShufflePartitions,
+      edgesRaw.sparkSession.sessionState.conf.numShufflePartitions,
       math.min((estRows / 750000L) + 1L, 2048L).toInt)
-  }
-
-  // Refcounted AQE suppression, keyed PER SESSION: the conf being guarded
-  // is per-SparkSession, so the (depth, saved-value) bookkeeping must be
-  // too — a JVM-global counter would let loop A's exit restore session
-  // A's saved value onto session B (leaving A without AQE forever).
-  // Within one session, concurrent broadcast-mode loops (parallel test
-  // suites, embedded CLI) still save/restore correctly: the original
-  // value is captured by the FIRST entering loop and restored by the
-  // LAST exiting one. While any loop runs, other queries on the same
-  // session also plan without AQE; that is a local-mode latency trade,
-  // not a correctness issue.
-  private val aqeKey = "spark.sql.adaptive.enabled"
-  private val aqeLock = new Object
-  private val aqeState =
-    scala.collection.mutable.Map.empty[SparkSession, (Int, Option[String])]
-
-  private def suppressAqe(spark: SparkSession): Unit = aqeLock.synchronized {
-    aqeState.get(spark) match {
-      case Some((depth, saved)) => aqeState(spark) = (depth + 1, saved)
-      case None =>
-        aqeState(spark) = (1, spark.conf.getOption(aqeKey))
-        spark.conf.set(aqeKey, "false")
-    }
-  }
-
-  private def restoreAqe(spark: SparkSession): Unit = aqeLock.synchronized {
-    aqeState.get(spark) match {
-      case Some((1, saved)) =>
-        aqeState.remove(spark)
-        saved match {
-          case Some(v) => spark.conf.set(aqeKey, v)
-          case None    => spark.conf.unset(aqeKey)
-        }
-      case Some((depth, saved)) => aqeState(spark) = (depth - 1, saved)
-      case None => // unbalanced restore: nothing saved, nothing to do
-    }
   }
 
   /** @param teleport optional personalization: `(id LONG, w DOUBLE)`
@@ -449,12 +390,14 @@ object PageRank {
     // broadcast joins + one exchange) — AQE's stage-by-stage
     // materialization only adds a scheduling barrier per exchange,
     // measured ~15% of iteration wall-clock at sf0.1. Suppress it for
-    // the loop (refcounted: overlapping runs on a shared session restore
+    // the loop (ConfScope: overlapping runs on a shared session restore
     // the ORIGINAL value only when the last loop exits, so interleaved
     // save/restore can't leave AQE permanently off). The shuffle
     // fallback path keeps AQE: there runtime re-planning (skew-join
     // splitting, partition coalescing) is exactly what we want at scale.
-    if (bcast) suppressAqe(spark)
+    val noAqe =
+      if (bcast) Seq("spark.sql.adaptive.enabled" -> "false") else Seq.empty
+    ConfScope(spark, noAqe: _*) {
     try {
 
     while (iter < cfg.maxIter && !converged) {
@@ -599,9 +542,7 @@ object PageRank {
       if (avgDiff <= cfg.tol && iter >= cfg.minIter) converged = true
     }
 
-    } finally {
-      if (bcast) restoreAqe(spark)
-      resListener.foreach(spark.sparkContext.removeSparkListener)
+    } finally resListener.foreach(spark.sparkContext.removeSparkListener)
     }
 
     edges.unpersist(false)

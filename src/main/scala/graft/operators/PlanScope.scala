@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.ConfScope
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Scoped, refcounted NARROWING of `spark.sql.shuffle.partitions` for
@@ -15,44 +16,41 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * session width — a 100 TB graph keeps its full parallelism, and the
   * estimate comes free from Catalyst statistics (no input pass).
   *
-  * Same discipline as [[PageRank]]'s refcounted AQE suppression, keyed
-  * PER SESSION: the first entering loop saves the session value and
-  * narrows, nested loops refcount, the last exit restores. While a
-  * tiny-graph loop runs, OTHER queries on the same session also plan at
-  * the narrowed width — a local-mode latency trade on concurrent
-  * sessions-sharing tests, never a correctness issue (stated, the AQE
-  * scope's exact caveat).
+  * The save/set/restore is [[graft.core.ConfScope]]'s, refcounted per
+  * (session, key): the first entering loop narrows, nested loops leave
+  * the width alone, the last exit restores. While a tiny-graph loop
+  * runs, OTHER queries on the same session also plan at the narrowed
+  * width (the ConfScope caveat).
   */
 private[graft] object PlanScope {
 
-  private val key = "spark.sql.shuffle.partitions"
+  private val widthKey = "spark.sql.shuffle.partitions"
 
-  /** Session knobs that are pure per-round overhead once the loop is
-    * PROVABLY tiny (they flip only when the estimate-derived narrowing
-    * itself fires, so at real scale none of them moves):
-    *
-    *  - runtime Bloom-filter injection: every gain/relax round joins a
-    *    localCheckpoint-rotated state frame, whose `ExistingRDD` scan
-    *    carries no size statistic — Spark's injection heuristic reads
-    *    "unknown" as "huge application side" and plants
-    *    `bloom_filter_agg`/`might_contain` pairs on fixture-sized
-    *    joins (measured: THREE 8M-bit BitArrays built, serialized and
-    *    broadcast per 200-vertex Louvain round — a megabyte of filter
-    *    per kilobyte of data, plus one subquery job each). At real
-    *    scale the filters are useful and stay on.
+  /** Set together with the narrowed width, and only when it is set (so
+    * at real scale it never moves): runtime Bloom-filter injection, pure
+    * per-round overhead once the loop is PROVABLY tiny. Every gain/relax
+    * round joins a localCheckpoint-rotated state frame, whose
+    * `ExistingRDD` scan carries no size statistic — Spark's injection
+    * heuristic reads "unknown" as "huge application side" and plants
+    * `bloom_filter_agg`/`might_contain` pairs on fixture-sized joins
+    * (measured: THREE 8M-bit BitArrays built, serialized and broadcast
+    * per 200-vertex Louvain round — a megabyte of filter per kilobyte of
+    * data, plus one subquery job each). At real scale the filters are
+    * useful and stay on.
     */
-  private val tinyLoopConfs: Seq[(String, String)] = Seq(
-    "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "false")
+  private val bloomKey = "spark.sql.optimizer.runtime.bloomFilter.enabled"
 
-  private val lock = new Object
-  private val state =
-    scala.collection.mutable.Map.empty[
-      SparkSession, (Int, Map[String, Option[String]])]
-
-  /** Catalyst row-count estimate of `df` (leaf-sum bounded, the
-    * [[PageRank.estimateEdgeParts]] argument: join-derived plans carry
-    * multiplicative top-level estimates, but a row must be scanned
-    * before it can be joined, so Σ leaves bounds the working set).
+  /** Catalyst row-count estimate of `df`, no job run: `rowCount` when
+    * the optimizer carries it, else `sizeInBytes` at 12 bytes/row,
+    * bounded by the sum of the plan's LEAF estimates. A join-derived
+    * source (e.g. the orders ⋈ lineitem co-occurrence graph) carries a
+    * MULTIPLICATIVE size estimate — measured 1.1 TB for a 587k-edge
+    * graph. A row must be scanned before it can be joined, and the
+    * working sets sized from this estimate are keyed by (near-)distinct
+    * rows, which track leaf scale, not join-output scale. min(top,
+    * Σ leaves) repairs the join case and is the identity on file-scan
+    * plans (such a plan IS its leaf). Also sizes
+    * [[PageRank.estimateEdgeParts]].
     */
   private[graft] def estimateRows(df: DataFrame): Long = {
     val plan = df.queryExecution.optimizedPlan
@@ -78,42 +76,19 @@ private[graft] object PlanScope {
       estRows / 8192L + 1L,
       spark.sessionState.conf.numShufflePartitions.toLong)).toInt
 
-  /** Run `body` with the session's shuffle width narrowed to `target`
-    * (no-op when `target` ≥ the current width). Re-entrant per session;
-    * exceptions restore on every path.
+  /** Run `body` with the session's shuffle width narrowed to `target`.
+    * A target ≥ the current width pins the current values of both keys
+    * instead, so a nested, narrower scope does nothing: the outermost
+    * loop decides. Re-entrant per session; exceptions restore on every
+    * path.
     */
   def narrowShufflePartitions[T](
       spark: SparkSession, target: Int)(body: => T): T = {
-    lock.synchronized {
-      state.get(spark) match {
-        case Some((depth, saved)) =>
-          state(spark) = (depth + 1, saved)
-        case None =>
-          val cur = spark.sessionState.conf.numShufflePartitions
-          if (target < cur) {
-            val toSet = (key -> target.toString) +: tinyLoopConfs
-            val saved = toSet.map { case (k, _) =>
-              k -> spark.conf.getOption(k)
-            }.toMap
-            state(spark) = (1, saved)
-            toSet.foreach { case (k, v) => spark.conf.set(k, v) }
-          } else state(spark) = (1, Map.empty)
-      }
-    }
-    try body
-    finally lock.synchronized {
-      state.get(spark) match {
-        case Some((1, saved)) =>
-          state.remove(spark)
-          saved.foreach {
-            case (k, Some(v)) => spark.conf.set(k, v)
-            case (k, None)    => spark.conf.unset(k)
-          }
-        case Some((depth, saved)) =>
-          state(spark) = (depth - 1, saved)
-        case None => () // unbalanced exit: nothing saved, nothing to do
-      }
-    }
+    val confs =
+      if (target < spark.sessionState.conf.numShufflePartitions)
+        Seq(widthKey -> target.toString, bloomKey -> "false")
+      else Seq(widthKey, bloomKey).map(k => k -> spark.conf.get(k))
+    ConfScope(spark, confs: _*)(body)
   }
 
   /** [[narrowShufflePartitions]] sized from `frame`'s own Catalyst

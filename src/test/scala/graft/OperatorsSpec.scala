@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.ConfScope
 import graft.operators._
 import graft.sources.IterationStateIO
 import graft.streaming.EventStreams
@@ -598,34 +599,27 @@ class StreamingSpec extends AnyFunSuite {
     import sp.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = sp.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val rows = Seq(
-      (1L, "a", 5.0), (2L, "a", 9.0), (3L, "a", 7.0),
-      (4L, "b", 1.0), (5L, "b", 8.0))
-    val ms = MemoryStream[(Long, String, Double)]
-    val q = EventStreams.topValuesStream(
-      ms.toDS().toDF("event_id", "event_type", "value"), k = 2)
-      .writeStream.format("memory").queryName("st15_rocks")
-      .outputMode("complete").start()
-    try {
-      ms.addData(rows(0), rows(3))
-      q.processAllAvailable()
-      ms.addData(rows(1), rows(4), rows(2))
-      q.processAllAvailable()
-      val got = spark.table("st15_rocks").collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(got == Set(
-        ("a", 2L, 9.0), ("a", 3L, 7.0),
-        ("b", 5L, 8.0), ("b", 4L, 1.0)), got)
-    } finally {
-      q.stop()
-      saved match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    ConfScope(spark, "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+      val rows = Seq(
+        (1L, "a", 5.0), (2L, "a", 9.0), (3L, "a", 7.0),
+        (4L, "b", 1.0), (5L, "b", 8.0))
+      val ms = MemoryStream[(Long, String, Double)]
+      val q = EventStreams.topValuesStream(
+        ms.toDS().toDF("event_id", "event_type", "value"), k = 2)
+        .writeStream.format("memory").queryName("st15_rocks")
+        .outputMode("complete").start()
+      try {
+        ms.addData(rows(0), rows(3))
+        q.processAllAvailable()
+        ms.addData(rows(1), rows(4), rows(2))
+        q.processAllAvailable()
+        val got = spark.table("st15_rocks").collect()
+          .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
+        assert(got == Set(
+          ("a", 2L, 9.0), ("a", 3L, 7.0),
+          ("b", 5L, 8.0), ("b", 4L, 1.0)), got)
+      } finally q.stop()
     }
   }
 
@@ -634,35 +628,28 @@ class StreamingSpec extends AnyFunSuite {
     import sp.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = sp.sqlContext
-    val confKey = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(confKey)
-    spark.conf.set(confKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    def ev(id: Long, u: Long, v: Double) = EventStreams.Event(
-      id, new java.sql.Timestamp(1700000000000L + id), u, "view", v)
-    val ms = MemoryStream[EventStreams.Event]
-    val q = EventStreams.spendLedger(ms.toDS())
-      .writeStream.format("memory").queryName("st17_unit")
-      .outputMode("update").start()
-    try {
-      ms.addData(ev(1, 1, 2.0), ev(2, 1, 3.0), ev(3, 2, 7.0))
-      q.processAllAvailable()
-      val mid = spark.table("st17_unit").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(mid == Set((1L, 2L, 5.0), (2L, 1L, 7.0)), mid)
-      // batch 2 continues FROM the stored state, not from zero
-      ms.addData(ev(4, 1, 10.0))
-      q.processAllAvailable()
-      val last = spark.table("st17_unit").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        .groupBy(_._1).map { case (u, rows) => rows.maxBy(_._2) }.toSet
-      assert(last == Set((1L, 3L, 15.0), (2L, 1L, 7.0)), last)
-    } finally {
-      q.stop()
-      saved match {
-        case Some(v) => spark.conf.set(confKey, v)
-        case None => spark.conf.unset(confKey)
-      }
+    ConfScope(spark, "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+      def ev(id: Long, u: Long, v: Double) = EventStreams.Event(
+        id, new java.sql.Timestamp(1700000000000L + id), u, "view", v)
+      val ms = MemoryStream[EventStreams.Event]
+      val q = EventStreams.spendLedger(ms.toDS())
+        .writeStream.format("memory").queryName("st17_unit")
+        .outputMode("update").start()
+      try {
+        ms.addData(ev(1, 1, 2.0), ev(2, 1, 3.0), ev(3, 2, 7.0))
+        q.processAllAvailable()
+        val mid = spark.table("st17_unit").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+        assert(mid == Set((1L, 2L, 5.0), (2L, 1L, 7.0)), mid)
+        // batch 2 continues FROM the stored state, not from zero
+        ms.addData(ev(4, 1, 10.0))
+        q.processAllAvailable()
+        val last = spark.table("st17_unit").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+          .groupBy(_._1).map { case (u, rows) => rows.maxBy(_._2) }.toSet
+        assert(last == Set((1L, 3L, 15.0), (2L, 1L, 7.0)), last)
+      } finally q.stop()
     }
   }
 

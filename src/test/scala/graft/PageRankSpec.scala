@@ -300,6 +300,41 @@ class PageRankSpec extends AnyFunSuite {
     assert(a.keySet == b.keySet)
     a.foreach { case (k, v) => assert(math.abs(v - b(k)) < 1e-12) }
   }
+
+  test("broadcast-mode iterations run without AQE; the shuffle fallback keeps it") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val e = edges(1L -> 2L, 2L -> 1L, 2L -> 3L, 3L -> 1L)
+    val before = spark.conf.getAll
+    // each iteration runs two queries, the only ones that touch
+    // prev_rank: the state checkpoint and the metrics pass
+    def iterationPlansAdaptive(cfg: PageRankConfig): Seq[Boolean] = {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+      val listener = new QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
+        def onFailure(f: String, qe: QueryExecution, ex: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        PageRank.run(spark, e, cfg)
+        def iters = seen.toArray(Array.empty[QueryExecution]).toSeq
+          .filter(_.analyzed.toString.contains("prev_rank"))
+        // the listener bus is asynchronous
+        val deadline = System.nanoTime() + 10000000000L
+        while (iters.size < 2 * cfg.maxIter && System.nanoTime() < deadline)
+          Thread.sleep(20)
+        iters.map(_.executedPlan.isInstanceOf[AdaptiveSparkPlanExec])
+      } finally spark.listenerManager.unregister(listener)
+    }
+    val base = PageRankConfig(maxIter = 2, tol = -1, minIter = 2)
+    val bcast = iterationPlansAdaptive(base)
+    assert(bcast.size == 4 && bcast.forall(!_), bcast)
+    val fallback =
+      iterationPlansAdaptive(base.copy(broadcastStateMaxBytes = 0L))
+    assert(fallback.size == 4 && fallback.forall(identity), fallback)
+    assert(spark.conf.getAll == before)
+  }
 }
 
 /** Differential: DataFrame impl vs GraphX BSP twin must agree to 1e-12

@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.ConfScope
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
@@ -285,9 +286,8 @@ class PlanSpec extends AnyFunSuite {
     */
   private def concretePlan(
       build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.execution.SparkPlan = {
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try build.queryExecution.executedPlan
-    finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    ConfScope(spark, "spark.sql.adaptive.enabled" -> "false")(
+      build.queryExecution.executedPlan)
   }
 
   test("g25 kCore peel round: cached adjacency never re-exchanges, count is map-side combined") {
@@ -330,13 +330,12 @@ class PlanSpec extends AnyFunSuite {
       // side fits a broadcast — the bucketed SMJ path is the one the
       // layout exists for (at gate scale the planner would broadcast
       // and skip bucketing entirely)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val p =
-        try {
+        ConfScope(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
           val j = spark.table(to)
             .join(spark.table(tl), col("o_orderkey") === col("l_orderkey"))
           concretePlan(j).toString
-        } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+        }
       assert(!p.contains("Exchange"), p)
       assert(p.contains("Bucketed: true"), p)
       assert(p.contains("SortMergeJoin"), p)
@@ -661,17 +660,14 @@ class PlanSpec extends AnyFunSuite {
     // selective dim filter must materialize as bloom_filter_agg on the
     // dim and a might_contain pre-filter on the FACT side of the
     // shuffle — rows dropped before they are exchanged. Confs restored
-    // in finally; the q34 gate row runs under defaults and pins that
+    // by ConfScope; the q34 gate row runs under defaults and pins that
     // injection never changes the answer.
-    val confs = Seq(
+    ConfScope(spark,
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold"
         -> "100000000",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold"
         -> "0",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val p = spark.read.parquet(s"$dir/lineitem.parquet")
         .join(
           spark.read.parquet(s"$dir/orders.parquet")
@@ -683,9 +679,6 @@ class PlanSpec extends AnyFunSuite {
         .queryExecution.executedPlan.toString
       assert(p.contains("bloom_filter_agg"), "no bloom built on dim: " + p)
       assert(p.contains("might_contain"), "no fact-side pre-filter: " + p)
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

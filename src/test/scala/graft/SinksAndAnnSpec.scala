@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.ConfScope
 import graft.operators.Similarity
 import graft.sources.Sinks
 import org.apache.spark.sql.SparkSession
@@ -373,9 +374,7 @@ class SinksSpec extends AnyFunSuite {
     Sinks.writeBucketed(spark, a, "bkt_a", "k", 8)
     Sinks.writeBucketed(spark, b, "bkt_b", "k", 8)
     // disable broadcast so the join must use the bucket layout
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    ConfScope(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = spark.table("bkt_a").join(spark.table("bkt_b"), "k")
       joined.collect() // force final AQE plan
       val plan = joined.queryExecution.executedPlan.toString
@@ -383,7 +382,7 @@ class SinksSpec extends AnyFunSuite {
         !plan.contains("Exchange hashpartitioning"),
         s"bucketed join must not shuffle:\n$plan")
       assert(joined.count() == 1000)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("partitioned write prunes directories on the partition predicate") {

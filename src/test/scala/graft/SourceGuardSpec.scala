@@ -1,0 +1,35 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+
+/** Each concern keeps its one home in `src/main/scala`: sessions are built
+  * only by `GraftSession`, and session conf is set or unset only by
+  * `ConfScope`. A hand-rolled copy elsewhere fails here.
+  */
+class SourceGuardSpec extends AnyFunSuite {
+  private val root = Paths.get("src/main/scala")
+
+  private def offenders(pattern: String, home: String): Seq[String] = {
+    val re = pattern.r
+    val files = Files.walk(root)
+    try files.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .filterNot(p => p.getFileName.toString == home)
+      .filter(p => re.findFirstIn(Files.readString(p)).isDefined)
+      .map(p => root.relativize(p).toString)
+      .toSeq.sorted
+    finally files.close()
+  }
+
+  test("SparkSession.builder appears only in GraftSession") {
+    assert(Files.isDirectory(root))
+    assert(offenders("""SparkSession\s*\.\s*builder""", "GraftSession.scala").isEmpty)
+  }
+
+  test("conf.set / conf.unset appear only in ConfScope") {
+    assert(offenders("""conf\s*\.\s*(set|unset)\s*\(""", "ConfScope.scala").isEmpty)
+  }
+}

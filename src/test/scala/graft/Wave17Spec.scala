@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.ConfScope
 import graft.metrics.RegressionRule
 import graft.operators.{PageRank, PageRankConfig, PlanScope}
 import graft.sources.{ClaimTimeoutException, CommitClaim, LakeTable}
@@ -203,6 +204,51 @@ class PlanScopeSpec extends AnyFunSuite {
           .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
       }
     assert(labelsAt(1) == labelsAt(3))
+  }
+
+  // ConfScope, the save/set/restore under PlanScope and PageRank's AQE
+  // scope: refcounted per (session, key), restored from getAll
+  private val aqeKey = "spark.sql.adaptive.enabled"
+
+  test("ConfScope: two keys nested (narrowing outside, AQE inside) restore independently") {
+    val before = spark.conf.getAll
+    val (width0, aqe0) = (spark.conf.get(key), spark.conf.get(aqeKey))
+    PlanScope.narrowShufflePartitions(spark, 1) {
+      ConfScope(spark, aqeKey -> "false") {
+        assert(spark.conf.get(key) == "1")
+        assert(spark.conf.get(aqeKey) == "false")
+      }
+      assert(spark.conf.get(aqeKey) == aqe0, "inner exit restores its own key")
+      assert(spark.conf.get(key) == "1", "inner exit must not touch the outer key")
+    }
+    assert(spark.conf.get(key) == width0)
+    assert(spark.conf.getAll == before)
+  }
+
+  test("ConfScope: a nested scope on the same key keeps the outer value") {
+    val before = spark.conf.getAll
+    ConfScope(spark, aqeKey -> "false") {
+      ConfScope(spark, aqeKey -> "true") {
+        assert(spark.conf.get(aqeKey) == "false", "the outer value wins")
+      }
+      assert(spark.conf.get(aqeKey) == "false", "inner exit must not restore")
+    }
+    assert(spark.conf.getAll == before)
+  }
+
+  test("ConfScope: a throwing body restores, and an unset key is unset again") {
+    // a registered key with a default nothing in the engine sets:
+    // getOption would report its default, getAll knows it is unset
+    val unsetKey = "spark.sql.files.maxRecordsPerFile"
+    val before = spark.conf.getAll
+    assert(!before.contains(unsetKey))
+    intercept[RuntimeException](
+      ConfScope(spark, unsetKey -> "7", aqeKey -> "false") {
+        assert(spark.conf.get(unsetKey) == "7")
+        sys.error("boom")
+      })
+    assert(!spark.conf.getAll.contains(unsetKey))
+    assert(spark.conf.getAll == before)
   }
 
   test("narrowForRows narrows by an exact count and restores") {

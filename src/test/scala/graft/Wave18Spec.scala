@@ -71,7 +71,10 @@ class Wave18Spec extends AnyFunSuite {
   }
 
   test("an explicit session bloom setting survives the scope round-trip") {
-    val before = spark.conf.getOption(bloomKey)
+    // set by hand, not through ConfScope: an outer ConfScope would hold
+    // the key, and the narrowing scope under test would then leave it
+    // alone. getAll, not getOption, so an unset key is unset again.
+    val before = spark.conf.getAll.get(bloomKey)
     try {
       spark.conf.set(bloomKey, "true")
       PlanScope.narrowShufflePartitions(spark, 1) {

@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.ConfScope
 import graft.operators.Cdc
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -189,18 +190,14 @@ class SkewJoinSpec extends AnyFunSuite {
     assert(key(on).nonEmpty)
     // plan shape: rebuild the same skewed join with the tuned confs and
     // check the FINAL adaptive plan did split the hub partition
-    val s = spark
-    val keys = Map(
+    ConfScope(spark,
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1m",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1m",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-    val saved = keys.keys.map(k => k -> s.conf.getOption(k)).toSeq
-    try {
-      keys.foreach { case (k, v) => s.conf.set(k, v) }
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
       val ev = spark.read.parquet(s"$dir/events.parquet")
       // ×1024 multiplier (vs the entry's ×64): at sf0.001 the hub
       // partition must clear the same 1m skew threshold the entry's
@@ -234,9 +231,6 @@ class SkewJoinSpec extends AnyFunSuite {
       val finalPlan = joined.queryExecution.executedPlan.toString
       assert(finalPlan.contains("skew=true"),
         "AQE did not split the skewed partition: " + finalPlan)
-    } finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
     }
   }
 }
