@@ -13,13 +13,19 @@ object Verify {
     // only the named queries, e.g. GRAFT_VERIFY_ONLY=e14_pq_codes,e15_sign_knn
     val only = sys.env.get("GRAFT_VERIFY_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    SparkEntry.queries
+    // a query that throws writes no output directory; its name goes to
+    // failed_queries.json so oracle_check.py can fail it even when it
+    // has no oracle SQL
+    val failed = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case NonFatal(e) =>
+      .flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -38,6 +44,8 @@ object Verify {
       .filter { case (k, _) => only.forall(_.contains(k)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/failed_queries.json"),
+      failed.map(q).mkString("[", ",", "]"))
     spark.stop()
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import scala.util.control.NonFatal
 
 /** Deterministic cache lifetimes for multi-stage operator pipelines.
   *
@@ -35,6 +36,14 @@ private[graft] object CacheScope {
     intermediates.foreach(_.unpersist(false))
     out
   }
+
+  /** Runs `body`; if it throws, unpersists `held` and rethrows — for
+    * guards and setup actions that can fail after an operator persisted
+    * its frames, so a failed call leaves nothing in the CacheManager.
+    */
+  def releaseOnThrow[T](held: DataFrame*)(body: => T): T =
+    try body
+    catch { case NonFatal(e) => held.foreach(_.unpersist(false)); throw e }
 
   /** The LOOP-STATE rotation: eager localCheckpoint (cuts lineage,
     * materializes for the round's driver action) PLUS a statistics

@@ -197,7 +197,8 @@ object GraphBuilder {
     * + fixed iteration count + total-order tie-break is the
     * oracle-checkable formulation — asynchronous LPA (the textbook
     * variant) is schedule-dependent and cannot be certified against
-    * another engine.
+    * another engine. This is [[labelPropagationConverged]]'s loop with
+    * the stop test off, so the oracle can unroll it.
     *
     * Plan per iteration: one shuffle join of the (cached,
     * nbr-partitioned) adjacency stream against the |V|-sized label
@@ -208,49 +209,8 @@ object GraphBuilder {
     * the same class as one PageRank iteration: shuffle bytes ∝ |E| for
     * the label fan-out, map-side-combined aggregation down to |V|.
     */
-  def labelPropagation(edges: DataFrame, k: Int): DataFrame = {
-    require(k >= 1, "k must be >= 1")
-    // narrowed planning for tiny graphs (see PlanScope) — the argmax
-    // algebra is exact-integer, partition-count independent
-    PlanScope.narrowFor(edges) {
-    val ue = undirectedSimple(edges)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val und = ue.select(col("u").as("vtx"), col("v").as("nbr"))
-      .union(ue.select(col("v").as("vtx"), col("u").as("nbr")))
-      .repartition(col("nbr"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // persisted: the |V|-sized universe re-enters every iteration's
-    // left-outer recombine — unpersisted it would recompute the
-    // 2·|E|-scan distinct once per round
-    val verts = vertices(edges)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = verts.select(col("id"), col("id").as("lbl"))
-    var prevCp: DataFrame = null
-    for (_ <- 1 to k) {
-      val adopted = und
-        .join(labels.select(col("id").as("nbr"), col("lbl")), Seq("nbr"))
-        .groupBy(col("vtx"), col("lbl"))
-        .agg(count("*").as("cnt"))
-        .groupBy(col("vtx"))
-        // argmax (cnt, -lbl): highest count, then smallest label
-        .agg(max_by(col("lbl"), struct(col("cnt"), -col("lbl")))
-          .as("new_lbl"))
-      val next = verts
-        .join(
-          adopted.select(col("vtx").as("id"), col("new_lbl")),
-          Seq("id"), "left_outer")
-        .select(col("id"), coalesce(col("new_lbl"), col("id")).as("lbl"))
-        .transform(CacheScope.rotate) // eager: truncates the per-iteration lineage
-      if (prevCp != null) prevCp.unpersist(false)
-      prevCp = next
-      labels = next
-    }
-    ue.unpersist(false)
-    und.unpersist(false)
-    verts.unpersist(false)
-    labels
-    }
-  }
+  def labelPropagation(edges: DataFrame, k: Int): DataFrame =
+    lpaLoop(edges, k, stopOnStable = false)._1
 
   /** [[labelPropagation]] run TO LABEL STABILITY — the early-stop twin
     * (O14/O16 discipline, PageRankDriver.java:207-216): iterate the
@@ -268,8 +228,16 @@ object GraphBuilder {
     * the no-op round that proved stability.
     */
   def labelPropagationConverged(
-      edges: DataFrame, maxIter: Int = 100): (DataFrame, Int) = {
-    require(maxIter >= 1, "maxIter must be >= 1")
+      edges: DataFrame, maxIter: Int = 100): (DataFrame, Int) =
+    lpaLoop(edges, maxIter, stopOnStable = true)
+
+  private def lpaLoop(
+      edges: DataFrame,
+      maxIter: Int,
+      stopOnStable: Boolean): (DataFrame, Int) = {
+    require(maxIter >= 1, "k must be >= 1")
+    // narrowed planning for tiny graphs (see PlanScope) — the argmax
+    // algebra is exact-integer, partition-count independent
     PlanScope.narrowFor(edges) {
     val ue = undirectedSimple(edges)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -277,6 +245,9 @@ object GraphBuilder {
       .union(ue.select(col("v").as("vtx"), col("u").as("nbr")))
       .repartition(col("nbr"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // persisted: the |V|-sized universe re-enters every iteration's
+    // left-outer recombine — unpersisted it would recompute the
+    // 2·|E|-scan distinct once per round
     val verts = vertices(edges)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var labels = verts.select(col("id"), col("id").as("lbl")).transform(CacheScope.rotate)
@@ -288,6 +259,7 @@ object GraphBuilder {
         .groupBy(col("vtx"), col("lbl"))
         .agg(count("*").as("cnt"))
         .groupBy(col("vtx"))
+        // argmax (cnt, -lbl): highest count, then smallest label
         .agg(max_by(col("lbl"), struct(col("cnt"), -col("lbl")))
           .as("new_lbl"))
       val next = verts
@@ -297,14 +269,15 @@ object GraphBuilder {
         .select(col("id"), coalesce(col("new_lbl"), col("id")).as("lbl"))
         .transform(CacheScope.rotate) // eager: truncates lineage, feeds the change count
       iters += 1
-      // one |V|-sized co-keyed join: zero changed labels == fixpoint
-      val changed = next
-        .join(labels.withColumnRenamed("lbl", "prev_lbl"), Seq("id"))
-        .filter(col("lbl") =!= col("prev_lbl"))
-        .count()
+      if (stopOnStable) {
+        // one |V|-sized co-keyed join: zero changed labels == fixpoint
+        stable = next
+          .join(labels.withColumnRenamed("lbl", "prev_lbl"), Seq("id"))
+          .filter(col("lbl") =!= col("prev_lbl"))
+          .count() == 0L
+      }
       labels.unpersist(false)
       labels = next
-      if (changed == 0L) stable = true
     }
     ue.unpersist(false)
     und.unpersist(false)
@@ -520,11 +493,10 @@ object GraphBuilder {
   /** k-core decomposition by fixed-round peeling: each round recomputes
     * every surviving vertex's degree WITHIN the surviving set and drops
     * vertices below `k`; after `rounds` peels the survivors are reported
-    * with their final internal degree. Fixed rounds (not
-    * run-to-fixpoint) keep the operator oracle-unrollable — pick
+    * with their final internal degree. This is [[kCoreConverged]]'s
+    * loop with the stop test off, so the oracle can unroll it — pick
     * `rounds` ≥ the peel depth of the graph and the result IS the k-core
-    * (peeling is monotone, so extra rounds are no-ops); or use
-    * [[kCoreConverged]], which detects the fixpoint itself. All-integer
+    * (peeling is monotone, so extra rounds are no-ops). All-integer
     * degree arithmetic ⇒ hash-exact across engines and partitionings.
     *
     * Scale shape (100 TB): the undirected adjacency is built,
@@ -539,29 +511,8 @@ object GraphBuilder {
     * the same eager localCheckpoint rotation as the other iterative
     * loops. Output: `id LONG, core_deg LONG` (survivors only).
     */
-  def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    require(k >= 1 && rounds >= 1, "need k >= 1 and rounds >= 1")
-    // narrowed planning for tiny graphs (see PlanScope): the peel is a
-    // set-valued fixpoint (degrees are integer counts), partition-count
-    // independent; at scale the estimate keeps full width.
-    PlanScope.narrowFor(edges) {
-    val (ue, und) = kCoreAdjacency(edges)
-    var s = vertices(edges)
-    var prevCp: DataFrame = null
-    for (_ <- 1 to rounds) {
-      val next = kCoreInternalDeg(und, s)
-        .filter(col("deg") >= k)
-        .select(col("id"))
-        .transform(CacheScope.rotate) // eager: truncates the per-round lineage
-      if (prevCp != null) prevCp.unpersist(false)
-      prevCp = next
-      s = next
-    }
-    val out = kCoreInternalDeg(und, s)
-      .select(col("id"), col("deg").as("core_deg"))
-    CacheScope.sealAfter(out, ue, und, s)
-    }
-  }
+  def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame =
+    kCoreLoop(edges, k, rounds, stopOnStable = false)._1
 
   /** k-core run TO FIXPOINT — [[kCore]]'s peel with the reference's
     * early-stop discipline (convergence loop O14/O16,
@@ -577,24 +528,35 @@ object GraphBuilder {
     * the last of which is the no-op round that proved stability.
     */
   def kCoreConverged(
-      edges: DataFrame, k: Int, maxRounds: Int = 1000): (DataFrame, Int) = {
-    require(k >= 1 && maxRounds >= 1, "need k >= 1 and maxRounds >= 1")
-    // narrowed planning for tiny graphs — see [[kCore]]'s note
+      edges: DataFrame, k: Int, maxRounds: Int = 1000): (DataFrame, Int) =
+    kCoreLoop(edges, k, maxRounds, stopOnStable = true)
+
+  private def kCoreLoop(
+      edges: DataFrame,
+      k: Int,
+      maxRounds: Int,
+      stopOnStable: Boolean): (DataFrame, Int) = {
+    require(k >= 1 && maxRounds >= 1, "need k >= 1 and rounds >= 1")
+    // narrowed planning for tiny graphs (see PlanScope): the peel is a
+    // set-valued fixpoint (degrees are integer counts), partition-count
+    // independent; at scale the estimate keeps full width.
     PlanScope.narrowFor(edges) {
     val (ue, und) = kCoreAdjacency(edges)
     var s = vertices(edges)
     var prevCount = -1L
     var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
+    var stable = false
+    while (!stable && rounds < maxRounds) {
       val next = kCoreInternalDeg(und, s)
         .filter(col("deg") >= k)
         .select(col("id"))
         .transform(CacheScope.rotate) // eager: truncates lineage AND feeds the count
-      val c = next.count()
       rounds += 1
-      if (c == prevCount) converged = true
-      prevCount = c
+      if (stopOnStable) {
+        val c = next.count()
+        stable = c == prevCount
+        prevCount = c
+      }
       s.unpersist(false)
       s = next
     }
@@ -808,9 +770,9 @@ object GraphBuilder {
     * support. The edge analogue of [[kCore]]'s vertex peel, one level
     * up the cohesion ladder (every k-truss lives inside the (k−1)-core)
     * — the community-core primitive at 100 TB where vertex cores are
-    * too loose. Fixed rounds keep it oracle-unrollable (peeling is
-    * monotone: rounds ≥ the cascade depth ⇒ THE k-truss; extra rounds
-    * are no-ops); [[kTrussConverged]] detects the fixpoint itself.
+    * too loose. This is [[kTrussConverged]]'s loop with the stop test
+    * off, so the oracle can unroll it (peeling is monotone: rounds ≥ the
+    * cascade depth ⇒ THE k-truss; extra rounds are no-ops).
     * All-integer supports ⇒ hash-exact across engines/partitionings.
     *
     * Per-round cost is a triangle listing on the SHRINKING edge set,
@@ -820,19 +782,8 @@ object GraphBuilder {
     * costs anywhere. Output: `u LONG, v LONG, support LONG`
     * (survivors, u < v, support within the truss).
     */
-  def kTruss(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    require(k >= 3 && rounds >= 1, "need k >= 3 and rounds >= 1")
-    // narrowed planning for tiny graphs — see [[kCore]]'s note
-    PlanScope.narrowFor(edges) {
-    var ue = undirectedSimple(edges).transform(CacheScope.rotate)
-    for (_ <- 1 to rounds) {
-      ue = edgeSupport(ue)
-        .filter(col("support") >= k - 2)
-        .select(col("u"), col("v")) // eager: edgeSupport seals each round
-    }
-    edgeSupport(ue)
-    }
-  }
+  def kTruss(edges: DataFrame, k: Int, rounds: Int): DataFrame =
+    kTrussLoop(edges, k, rounds, stopOnStable = false)._1
 
   /** [[kTruss]] run TO FIXPOINT — peel until the surviving edge count
     * is stable (monotone peeling ⇒ stable count = stable set = the
@@ -842,8 +793,15 @@ object GraphBuilder {
     * proved stability.
     */
   def kTrussConverged(
-      edges: DataFrame, k: Int, maxRounds: Int = 1000): (DataFrame, Int) = {
-    require(k >= 3 && maxRounds >= 1, "need k >= 3 and maxRounds >= 1")
+      edges: DataFrame, k: Int, maxRounds: Int = 1000): (DataFrame, Int) =
+    kTrussLoop(edges, k, maxRounds, stopOnStable = true)
+
+  private def kTrussLoop(
+      edges: DataFrame,
+      k: Int,
+      maxRounds: Int,
+      stopOnStable: Boolean): (DataFrame, Int) = {
+    require(k >= 3 && maxRounds >= 1, "need k >= 3 and rounds >= 1")
     // narrowed planning for tiny graphs — see [[kCore]]'s note
     PlanScope.narrowFor(edges) {
     var ue = undirectedSimple(edges).transform(CacheScope.rotate)
@@ -851,14 +809,15 @@ object GraphBuilder {
     var rounds = 0
     var stable = false
     while (!stable && rounds < maxRounds) {
-      val next = edgeSupport(ue)
+      ue = edgeSupport(ue)
         .filter(col("support") >= k - 2)
-        .select(col("u"), col("v"))
-      val c = next.count()
+        .select(col("u"), col("v")) // eager: edgeSupport seals each round
       rounds += 1
-      if (c == prev) stable = true
-      prev = c
-      ue = next
+      if (stopOnStable) {
+        val c = ue.count()
+        stable = c == prev
+        prev = c
+      }
     }
     (edgeSupport(ue), rounds)
     }

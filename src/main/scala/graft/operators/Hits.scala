@@ -34,55 +34,15 @@ import org.apache.spark.storage.StorageLevel
   */
 object Hits {
 
-  /** @param edgesRaw `src LONG, dst LONG` (deduped internally)
+  /** [[runConverged]]'s loop with the stop test off, so the oracle can
+    * unroll it; no driver action runs per round.
+    * @param edgesRaw `src LONG, dst LONG` (deduped internally)
     * @param k fixed iteration count
     * @return `id, auth DOUBLE, hub DOUBLE` over the full vertex
     *   universe, each column L1-normalized (sums to 1)
     */
-  def run(edgesRaw: DataFrame, k: Int): DataFrame = {
-    require(k >= 1, "k must be >= 1")
-    // narrowed planning for tiny graphs (see PlanScope): every round
-    // plans 2 gather exchanges; on a fixture-sized graph the session
-    // width schedules hundreds of sub-millisecond tasks per round. At
-    // scale the estimate keeps the session width (narrowFor only
-    // narrows). Values are unchanged: integer sums are exact under any
-    // partitioning.
-    PlanScope.narrowFor(edgesRaw) {
-    val e = edgesRaw.select(col("src"), col("dst")).dropDuplicates()
-    val eSrc = e.repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
-    val eDst = e.repartition(col("dst")).persist(StorageLevel.MEMORY_AND_DISK)
-    val verts = GraphBuilder.vertices(e)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var h = verts.select(col("id"), lit(1.0).as("h"))
-    var araw: DataFrame = null
-    var prevCp: DataFrame = null
-    for (i <- 1 to k) {
-      val ar = authGather(eSrc, h)
-      // the last round's authority frame feeds BOTH the hub gather and
-      // the final projection — checkpoint it so the plan is shared, not
-      // recomputed
-      val arShared = if (i == k) ar.transform(CacheScope.rotate) else ar
-      val next = hubGather(eDst, arShared)
-        .transform(CacheScope.rotate) // eager: truncates the per-round lineage
-      if (prevCp != null) prevCp.unpersist(false)
-      prevCp = next
-      h = next
-      araw = arShared
-    }
-    val sa = araw.agg(sum(col("a")).as("sa"))
-    val sh = h.agg(sum(col("h")).as("sh"))
-    val out = verts
-      .join(araw.withColumnRenamed("a", "araw"), Seq("id"), "left_outer")
-      .join(h.withColumnRenamed("h", "hraw"), Seq("id"), "left_outer")
-      .crossJoin(sa)
-      .crossJoin(sh)
-      .select(
-        col("id"),
-        (coalesce(col("araw"), lit(0.0)) / col("sa")).as("auth"),
-        (coalesce(col("hraw"), lit(0.0)) / col("sh")).as("hub"))
-    CacheScope.sealAfter(out, eSrc, eDst, verts, araw, h)
-    }
-  }
+  def run(edgesRaw: DataFrame, k: Int): DataFrame =
+    powerLoop(edgesRaw, k, stopOnStable = false, tol = 0.0, minIter = 1)._1
 
   /** [[run]] TO CONVERGENCE on a NORMALIZED-score L1 delta — the
     * O14/O16 early-stop discipline for the last fixed-round loop that
@@ -91,17 +51,16 @@ object Hits {
     * consumes: per iteration, Σ_v |ĥ_i(v) − ĥ_{i-1}(v)| where
     * ĥ = h/Σh (ĥ_0 = 1/N uniform — the normalized all-ones init); stop
     * when the delta ≤ `tol` AND `i ≥ minIter` (the g6 guard against a
-    * deceptively-quiet first step), else cap at `maxK`. The fixed-round
-    * form stays action-free per round; this twin pays ONE driver action
-    * per round (a single aggregate emitting the round's Σh and delta
-    * together), exactly the per-round scalar class of the PageRank
-    * loop. The returned scores at stop depth n are identical to
-    * [[run]](edges, n) — which is how the g24b oracle replays the rule:
-    * unroll to maxK, recompute every delta, select the chosen
-    * iteration. `tol` must be chosen with numeric margin: deltas are
-    * double sums whose accumulation order differs across engines
-    * (the g6b discipline — pick a threshold with wide gaps to the
-    * neighbouring iterations' deltas).
+    * deceptively-quiet first step), else cap at `maxK`. This form pays
+    * ONE driver action per round (a single aggregate emitting the
+    * round's Σh and delta together), exactly the per-round scalar class
+    * of the PageRank loop. The returned scores at stop depth n are
+    * identical to [[run]](edges, n) — which is how the g24b oracle
+    * replays the rule: unroll to maxK, recompute every delta, select
+    * the chosen iteration. `tol` must be chosen with numeric margin:
+    * deltas are double sums whose accumulation order differs across
+    * engines (the g6b discipline — pick a threshold with wide gaps to
+    * the neighbouring iterations' deltas).
     * @return (scores as in [[run]], iterations actually run)
     */
   def runConverged(
@@ -109,56 +68,77 @@ object Hits {
       maxK: Int,
       tol: Double,
       minIter: Int = 2): (DataFrame, Int) = {
-    require(maxK >= 1, "maxK must be >= 1")
     require(minIter >= 1 && minIter <= maxK, "need 1 <= minIter <= maxK")
-    // narrowed planning for tiny graphs — see [[run]]'s note
+    powerLoop(edgesRaw, maxK, stopOnStable = true, tol, minIter)
+  }
+
+  private def powerLoop(
+      edgesRaw: DataFrame,
+      maxK: Int,
+      stopOnStable: Boolean,
+      tol: Double,
+      minIter: Int): (DataFrame, Int) = {
+    require(maxK >= 1, "k must be >= 1")
+    // narrowed planning for tiny graphs (see PlanScope): every round
+    // plans 2 gather exchanges; on a fixture-sized graph the session
+    // width schedules hundreds of sub-millisecond tasks per round. At
+    // scale the estimate keeps the session width (narrowFor only
+    // narrows). Values are unchanged: integer sums are exact under any
+    // partitioning.
     PlanScope.narrowFor(edgesRaw) {
-    val e = edgesRaw.select(col("src"), col("dst")).dropDuplicates()
-    val eSrc = e.repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
-    val eDst = e.repartition(col("dst")).persist(StorageLevel.MEMORY_AND_DISK)
-    val verts = GraphBuilder.vertices(e)
+    val (eSrc, eDst) = edgeCopies(edgesRaw)
+    val verts = GraphBuilder.vertices(eSrc)
       .persist(StorageLevel.MEMORY_AND_DISK)
     var h = verts.select(col("id"), lit(1.0).as("h"))
       .transform(CacheScope.rotate)
-    var prevSh = verts.count().toDouble // Σh_0 = N
-    // fail loudly on an edgeless graph (the family's require style): the
-    // per-round metric aggregate would otherwise yield NULL sums and NPE
-    // at getDouble, and the Σh normalization divides by 0 (ADVICE r13);
-    // the count above already ran, so this guard costs nothing
-    require(prevSh > 0,
-      "HITS requires a non-empty edge set (no vertices to score)")
+    var prevSh = 0.0
+    if (stopOnStable) {
+      prevSh = verts.count().toDouble // Σh_0 = N
+      // fail loudly on an edgeless graph (the family's require style):
+      // the per-round metric aggregate would otherwise yield NULL sums
+      // and NPE at getDouble, and the Σh normalization divides by 0
+      // (ADVICE r13); the count above already ran, so this guard costs
+      // nothing
+      CacheScope.releaseOnThrow(eSrc, eDst, verts) {
+        require(prevSh > 0,
+          "HITS requires a non-empty edge set (no vertices to score)")
+      }
+    }
     var araw: DataFrame = null
-    var prevH: DataFrame = h
-    var prevAr: DataFrame = null
     var iters = 0
     var stop = false
     while (iters < maxK && !stop) {
-      val ar = authGather(eSrc, h).transform(CacheScope.rotate)
-      val next = hubGather(eDst, ar).transform(CacheScope.rotate)
       iters += 1
-      // one action per round: Σh_i and the normalized delta together
-      // (the 1-row Σh frame rides the plan via crossJoin — no second
-      // job). full_outer: support(h_i) excludes outdeg-0 vertices the
-      // init covered, and both coalesce to 0 in the diff.
-      val shF = next.agg(sum(col("h")).as("sh"))
-      val row = next.withColumnRenamed("h", "hn")
-        .join(prevH.withColumnRenamed("h", "hp"), Seq("id"), "full_outer")
-        .crossJoin(shF)
-        .agg(
-          sum(abs(
-            coalesce(col("hn"), lit(0.0)) / col("sh") -
-              coalesce(col("hp"), lit(0.0)) / lit(prevSh))).as("delta"),
-          first(col("sh")).as("sh"))
-        .first()
-      val delta = row.getDouble(0)
-      prevSh = row.getDouble(1)
-      if (iters >= minIter && delta <= tol) stop = true
-      if (prevAr != null) prevAr.unpersist(false)
-      prevH.unpersist(false)
-      prevH = next
-      prevAr = ar
+      val ar = authGather(eSrc, h)
+      // the authority frame of a round that can be the last feeds BOTH
+      // the hub gather and the final projection — checkpoint it so the
+      // plan is shared, not recomputed
+      val arShared =
+        if (stopOnStable || iters == maxK) ar.transform(CacheScope.rotate) else ar
+      val next = hubGather(eDst, arShared)
+        .transform(CacheScope.rotate) // eager: truncates the per-round lineage
+      if (stopOnStable) {
+        // one action per round: Σh_i and the normalized delta together
+        // (the 1-row Σh frame rides the plan via crossJoin — no second
+        // job). full_outer: support(h_i) excludes outdeg-0 vertices the
+        // init covered, and both coalesce to 0 in the diff.
+        val shF = next.agg(sum(col("h")).as("sh"))
+        val row = next.withColumnRenamed("h", "hn")
+          .join(h.withColumnRenamed("h", "hp"), Seq("id"), "full_outer")
+          .crossJoin(shF)
+          .agg(
+            sum(abs(
+              coalesce(col("hn"), lit(0.0)) / col("sh") -
+                coalesce(col("hp"), lit(0.0)) / lit(prevSh))).as("delta"),
+            first(col("sh")).as("sh"))
+          .first()
+        prevSh = row.getDouble(1)
+        stop = iters >= minIter && row.getDouble(0) <= tol
+      }
+      if (araw != null) araw.unpersist(false)
+      h.unpersist(false)
       h = next
-      araw = ar
+      araw = arShared
     }
     val sa = araw.agg(sum(col("a")).as("sa"))
     val sh = h.agg(sum(col("h")).as("sh"))
@@ -175,8 +155,9 @@ object Hits {
     }
   }
 
-  /** The two pre-partitioned persisted edge copies the loop gathers
-    * over — exposed for the PlanSpec exchange audit.
+  /** The loop's two pre-partitioned persisted edge copies (one by src
+    * for the authority gather, one by dst for the hub gather) — also
+    * the PlanSpec exchange audit's setup.
     */
   private[graft] def edgeCopies(edgesRaw: DataFrame): (DataFrame, DataFrame) = {
     val e = edgesRaw.select(col("src"), col("dst")).dropDuplicates()

@@ -236,32 +236,16 @@ object Louvain {
 
   /** MULTILEVEL Louvain: `levels` × (gain-move rounds → contract),
     * labels projected back through every level so the result labels
-    * the ORIGINAL vertices. Fixed `roundsPerLevel` keeps the whole
-    * trajectory oracle-unrollable; each level runs on a graph
-    * |communities| wide (the point of contraction — level 2+ cost is
-    * driven by the community count, not |V|). Returns `(id, lbl)` on
-    * the input graph's vertex set.
+    * the ORIGINAL vertices. Each level runs on a graph |communities|
+    * wide (the point of contraction — level 2+ cost is driven by the
+    * community count, not |V|). This is [[multilevelConverged]]'s
+    * ladder with the stop tests off (every level runs exactly
+    * `roundsPerLevel` rounds), so the oracle can unroll it. Returns
+    * `(id, lbl)` on the input graph's vertex set.
     */
   def multilevel(
-      edges: DataFrame, roundsPerLevel: Int, levels: Int): DataFrame = {
-    require(levels >= 1, "levels must be >= 1")
-    var w = fromEdges(edges)
-    var mapping: DataFrame = null
-    PlanScope.narrowFor(w) {
-    for (_ <- 1 to levels) {
-      val lab = moveRoundsWeighted(w, roundsPerLevel)
-      mapping =
-        if (mapping == null) lab
-        else CacheScope.rotate(
-          mapping
-            .join(lab.select(col("id").as("lbl"), col("lbl").as("lbl2")),
-              Seq("lbl"))
-            .select(col("id"), col("lbl2").as("lbl")))
-      w = contractWeighted(w, lab)
-    }
-    mapping
-    }
-  }
+      edges: DataFrame, roundsPerLevel: Int, levels: Int): DataFrame =
+    ladder(edges, None, roundsPerLevel, levels, stopOnStable = false)._1
 
   /** [[multilevel]] with the LADDER DEPTH decided by the algorithm's
     * own stopping rule — the dimension a user cannot guess: the level
@@ -303,32 +287,8 @@ object Louvain {
   def multilevelConverged(
       edges: DataFrame,
       maxRoundsPerLevel: Int = 20,
-      maxLevels: Int = 10): (DataFrame, Int) = {
-    require(maxLevels >= 1, "maxLevels must be >= 1")
-    var w = fromEdges(edges)
-    var mapping: DataFrame = null
-    var level = 0
-    var done = false
-    PlanScope.narrowFor(w) {
-    while (level < maxLevels && !done) {
-      val lab = moveRoundsConverged(w, maxRoundsPerLevel)._1
-      level += 1
-      val moved = lab.filter(col("id") =!= col("lbl")).count()
-      mapping =
-        if (mapping == null) lab
-        else CacheScope.rotate(
-          mapping
-            .join(lab.select(col("id").as("lbl"), col("lbl").as("lbl2")),
-              Seq("lbl"))
-            .select(col("id"), col("lbl2").as("lbl")))
-      if (moved == 0L) done = true
-      // rotate the (|C|²-bounded, small) contracted graph so the level
-      // ladder's lineage stays flat at any depth
-      else w = CacheScope.rotate(contractWeighted(w, lab))
-    }
-    (mapping, level)
-    }
-  }
+      maxLevels: Int = 10): (DataFrame, Int) =
+    ladder(edges, None, maxRoundsPerLevel, maxLevels, stopOnStable = true)
 
   /** WARM multilevel ladder (g58b — [[multilevelConverged]] seeded at
     * level 0): the first move phase enters warm from `init` and stops
@@ -344,51 +304,44 @@ object Louvain {
       edges: DataFrame,
       init: DataFrame,
       maxRoundsPerLevel: Int = 20,
-      maxLevels: Int = 10): (DataFrame, Int) = {
-    require(maxLevels >= 1, "maxLevels must be >= 1")
-    val w0 = fromEdges(edges)
-    PlanScope.narrowFor(w0) {
-    val lab0 = runMoves(w0, maxRoundsPerLevel, stopOnStable = true,
-      Some(init))._1
-    var mapping = lab0
-    var w = CacheScope.rotate(contractWeighted(w0, lab0))
-    var level = 1
-    var done = false
-    while (level < maxLevels && !done) {
-      val lab = moveRoundsConverged(w, maxRoundsPerLevel)._1
-      level += 1
-      val moved = lab.filter(col("id") =!= col("lbl")).count()
-      mapping = CacheScope.rotate(
-        mapping
-          .join(lab.select(col("id").as("lbl"), col("lbl").as("lbl2")),
-            Seq("lbl"))
-          .select(col("id"), col("lbl2").as("lbl")))
-      if (moved == 0L) done = true
-      else w = CacheScope.rotate(contractWeighted(w, lab))
-    }
-    (mapping, level)
-    }
-  }
+      maxLevels: Int = 10): (DataFrame, Int) =
+    ladder(edges, Some(init), maxRoundsPerLevel, maxLevels, stopOnStable = true)
 
-  /** Fixed-budget warm ladder — the oracle-unrollable twin of
-    * [[multilevelConvergedWarm]] (the [[multilevel]]/[[multilevelConverged]]
-    * relationship, warm): level 0 runs exactly `roundsPerLevel` warm
-    * rounds from `init`, each further level `roundsPerLevel` cold
+  /** [[multilevelConvergedWarm]]'s ladder with the stop tests off, so
+    * the oracle can unroll it: level 0 runs exactly `roundsPerLevel`
+    * warm rounds from `init`, each further level `roundsPerLevel` cold
     * rounds on the contraction.
     */
   def multilevelWarm(
       edges: DataFrame,
       init: DataFrame,
       roundsPerLevel: Int,
-      levels: Int): DataFrame = {
-    require(levels >= 1, "levels must be >= 1")
+      levels: Int): DataFrame =
+    ladder(edges, Some(init), roundsPerLevel, levels, stopOnStable = false)._1
+
+  /** The one level ladder: move phase ([[runMoves]], level 0 seeded
+    * from `init` when given) → project the labels back → contract.
+    */
+  private def ladder(
+      edges: DataFrame,
+      init: Option[DataFrame],
+      roundsPerLevel: Int,
+      maxLevels: Int,
+      stopOnStable: Boolean): (DataFrame, Int) = {
+    require(maxLevels >= 1, "levels must be >= 1")
     var w = fromEdges(edges)
     var mapping: DataFrame = null
+    var level = 0
+    var done = false
     PlanScope.narrowFor(w) {
-    for (i <- 1 to levels) {
-      val lab =
-        if (i == 1) moveRoundsWeightedWarm(w, roundsPerLevel, init)
-        else moveRoundsWeighted(w, roundsPerLevel)
+    while (level < maxLevels && !done) {
+      val seed = if (level == 0) init else None
+      val lab = runMoves(w, roundsPerLevel, stopOnStable, seed)._1
+      level += 1
+      // a warm level 0 keeps runMoves' own stability rule: its seeded
+      // labels are not the identity even at a fixpoint
+      if (stopOnStable && seed.isEmpty)
+        done = lab.filter(col("id") =!= col("lbl")).count() == 0L
       mapping =
         if (mapping == null) lab
         else CacheScope.rotate(
@@ -396,9 +349,15 @@ object Louvain {
             .join(lab.select(col("id").as("lbl"), col("lbl").as("lbl2")),
               Seq("lbl"))
             .select(col("id"), col("lbl2").as("lbl")))
-      w = contractWeighted(w, lab)
+      if (!done) {
+        // the converged ladder rotates the (|C|²-bounded, small)
+        // contracted graph so its lineage stays flat at any depth; the
+        // fixed ladder keeps it lazy, saving a job per level
+        val next = contractWeighted(w, lab)
+        w = if (stopOnStable) CacheScope.rotate(next) else next
+      }
     }
-    mapping
+    (mapping, level)
     }
   }
 
@@ -498,7 +457,8 @@ object Louvain {
     * discipline), the weighted-degree frame (each non-self edge adds w
     * at both ends, a self-loop adds 2w — A_ii = 2w), and the total
     * edge weight m (a driver scalar; it multiplies into every gain as
-    * a literal). Caller unpersists all three frames.
+    * a literal, required positive). Caller unpersists all three frames;
+    * if the m aggregate or its guard fails, they are released here.
     */
   private[graft] def louvainFrames(
       wedges: DataFrame): (DataFrame, DataFrame, DataFrame, Long) = {
@@ -533,7 +493,12 @@ object Louvain {
           .select(col("v").as("id"), col("w").as("kw")))
       .groupBy(col("id")).agg(sum(col("kw")).as("kv"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val m: Long = we.agg(coalesce(sum(col("w")), lit(0L))).first().getLong(0)
+    // the m aggregate is where a fractional weight's raise_error fires
+    val m = CacheScope.releaseOnThrow(we, und, kv) {
+      val m = we.agg(coalesce(sum(col("w")), lit(0L))).first().getLong(0)
+      require(m > 0, "empty graph")
+      m
+    }
     (we, und, kv, m)
   }
 
@@ -545,7 +510,6 @@ object Louvain {
     require(maxRounds >= 1, "maxRounds must be >= 1")
     PlanScope.narrowFor(wedges) {
     val (we, und, kv, m) = louvainFrames(wedges)
-    require(m > 0, "empty graph")
 
     // cold: every vertex its own singleton; warm: seed labels joined
     // onto THIS graph's vertex universe (new vertices → singleton,

@@ -293,10 +293,12 @@ object PageRank {
         val twInGraph = tw.join(verts, Seq("id")).select(col("id"), col("w"))
         val tot =
           twInGraph.agg(coalesce(sum(col("w")), lit(0.0))).first().getDouble(0)
-        require(
-          tot > 0,
-          "teleport weights must have a positive sum over vertices present " +
-            "in the graph")
+        CacheScope.releaseOnThrow(edges) {
+          require(
+            tot > 0,
+            "teleport weights must have a positive sum over vertices " +
+              "present in the graph")
+        }
         // no broadcast hint: a seed set broadcasts on its own size
         // estimate, while a full |V|-sized personalization vector must
         // be allowed to shuffle-join — this happens ONCE at setup, not
@@ -320,7 +322,7 @@ object PageRank {
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     val n = state0.count() // action: materializes edges + state; N for formula
-    require(n > 0, "empty graph")
+    CacheScope.releaseOnThrow(edges, state0)(require(n > 0, "empty graph"))
     val bcast = n * stateRowBytes <= cfg.broadcastStateMaxBytes
 
     // init: uniform 1/N (PageRankDriver.java:102-108; NetworkX keeps the
@@ -350,10 +352,12 @@ object PageRank {
         warmTmp = seeded
         val tot = seeded
           .agg(coalesce(sum(col("rank")), lit(0.0))).first().getDouble(0)
-        require(
-          tot > 0,
-          "warm-start ranks must carry positive total mass over the " +
-            "current graph's vertices")
+        CacheScope.releaseOnThrow(edges, state0, seeded) {
+          require(
+            tot > 0,
+            "warm-start ranks must carry positive total mass over the " +
+              "current graph's vertices")
+        }
         seeded.select(
           col("id") +: col("outdeg") +: carry :+
             (col("rank") / tot).as("rank"): _*)

@@ -29,44 +29,17 @@ import org.apache.spark.storage.StorageLevel
   */
 object ShortestPaths {
 
-  /** @param edges `src LONG, dst LONG, w DOUBLE` (positive weights;
+  /** [[runConverged]]'s loop with the stop test off, so the oracle can
+    * unroll it.
+    * @param edges `src LONG, dst LONG, w DOUBLE` (positive weights;
     *   duplicate (src, dst) rows are fine — min relaxation absorbs them)
     * @param sources `id LONG` seed vertices, all starting at distance 0
     * @param rounds fixed relaxation-round count (path length bound)
     * @return `id LONG, dist DOUBLE` for every vertex reachable within
     *   `rounds` edges of a seed
     */
-  def run(edges: DataFrame, sources: DataFrame, rounds: Int): DataFrame = {
-    require(rounds >= 1, "rounds must be >= 1")
-    // narrowed planning for tiny graphs (see PlanScope): each round
-    // plans a join + min-agg exchange pair; fixture-sized graphs pay
-    // scheduling, not data, at the session width. min over doubles is
-    // exact, so values are partition-count independent. At scale the
-    // estimate keeps full width.
-    PlanScope.narrowFor(edges) {
-    val e = edges
-      .select(col("src").as("id"), col("dst"), col("w").cast("double").as("w"))
-      .repartition(col("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var dist = sources.select(col("id"), lit(0.0).as("dist"))
-    var prevCp: DataFrame = null
-    for (_ <- 1 to rounds) {
-      val relaxed = dist
-        .join(e, Seq("id"))
-        .select(col("dst").as("id"), (col("dist") + col("w")).as("dist"))
-      val next = dist
-        .union(relaxed)
-        .groupBy(col("id"))
-        .agg(min(col("dist")).as("dist"))
-        .transform(CacheScope.rotate) // eager: truncates the per-round lineage
-      if (prevCp != null) prevCp.unpersist(false)
-      prevCp = next
-      dist = next
-    }
-    e.unpersist(false)
-    dist
-    }
-  }
+  def run(edges: DataFrame, sources: DataFrame, rounds: Int): DataFrame =
+    relaxLoop(edges, sources, rounds, stopOnStable = false)._1
 
   /** [[run]] TO CONVERGENCE — stop when a relaxation round improves
     * ZERO distances (no new vertex reached, no distance lowered): the
@@ -89,13 +62,25 @@ object ShortestPaths {
       edges: DataFrame,
       sources: DataFrame,
       maxRounds: Int = 50): (DataFrame, Int) = {
-    require(maxRounds >= 1, "maxRounds must be >= 1")
     // fail loudly instead of silently returning an empty frame (the
     // Hits.runConverged guard's sibling, ADVICE r13): an empty seed set
     // is a caller bug, not a graph with no reachable vertices
     require(!sources.isEmpty,
       "SSSP requires a non-empty source set")
-    // narrowed planning for tiny graphs — see [[run]]'s note
+    relaxLoop(edges, sources, maxRounds, stopOnStable = true)
+  }
+
+  private def relaxLoop(
+      edges: DataFrame,
+      sources: DataFrame,
+      maxRounds: Int,
+      stopOnStable: Boolean): (DataFrame, Int) = {
+    require(maxRounds >= 1, "rounds must be >= 1")
+    // narrowed planning for tiny graphs (see PlanScope): each round
+    // plans a join + min-agg exchange pair; fixture-sized graphs pay
+    // scheduling, not data, at the session width. min over doubles is
+    // exact, so values are partition-count independent. At scale the
+    // estimate keeps full width.
     PlanScope.narrowFor(edges) {
     val e = edges
       .select(col("src").as("id"), col("dst"), col("w").cast("double").as("w"))
@@ -103,7 +88,6 @@ object ShortestPaths {
       .persist(StorageLevel.MEMORY_AND_DISK)
     var dist = sources.select(col("id"), lit(0.0).as("dist"))
       .transform(CacheScope.rotate)
-    var prevCp: DataFrame = dist
     var rounds = 0
     var stable = false
     while (rounds < maxRounds && !stable) {
@@ -114,17 +98,17 @@ object ShortestPaths {
         .union(relaxed)
         .groupBy(col("id"))
         .agg(min(col("dist")).as("dist"))
-        .transform(CacheScope.rotate)
+        .transform(CacheScope.rotate) // eager: truncates the per-round lineage
       rounds += 1
-      // improved = newly reached OR strictly lowered; min over doubles
-      // is exact (no accumulation), so zero-improved is a crisp fixpoint
-      val improved = next
-        .join(dist.withColumnRenamed("dist", "prev"), Seq("id"), "left_outer")
-        .filter(col("prev").isNull || col("dist") < col("prev"))
-        .count()
-      if (improved == 0L) stable = true
-      prevCp.unpersist(false)
-      prevCp = next
+      if (stopOnStable) {
+        // improved = newly reached OR strictly lowered; min over doubles
+        // is exact (no accumulation), so zero-improved is a crisp fixpoint
+        stable = next
+          .join(dist.withColumnRenamed("dist", "prev"), Seq("id"), "left_outer")
+          .filter(col("prev").isNull || col("dist") < col("prev"))
+          .count() == 0L
+      }
+      dist.unpersist(false)
       dist = next
     }
     e.unpersist(false)

@@ -178,6 +178,37 @@ class DedupSpec extends AnyFunSuite {
       Similarity.nearDupPairs(emb, 0.3, bits = 2).count()
     }
     check("tfidfKeywords") { TextOps.tfidfKeywords(d, k = 2).count() }
+    // the iterative operators: the fixed and the converged form of each loop
+    val g = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 3L),
+      (5L, 6L)).toDF("src", "dst")
+    val wg = g.withColumn("w", lit(1.0))
+    val seed = Seq(1L).toDF("id")
+    val prior = Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 4L), (5L, 4L))
+      .toDF("id", "lbl")
+    check("labelPropagation") { GraphBuilder.labelPropagation(g, 2).count() }
+    check("labelPropagationConverged") {
+      GraphBuilder.labelPropagationConverged(g)._1.count()
+    }
+    check("kCore") { GraphBuilder.kCore(g, 2, 3).count() }
+    check("kCoreConverged") { GraphBuilder.kCoreConverged(g, 2)._1.count() }
+    check("kTruss") { GraphBuilder.kTruss(g, 3, 2).count() }
+    check("kTrussConverged") { GraphBuilder.kTrussConverged(g, 3)._1.count() }
+    check("ShortestPaths.run") { ShortestPaths.run(wg, seed, 3).count() }
+    check("ShortestPaths.runConverged") {
+      ShortestPaths.runConverged(wg, seed)._1.count()
+    }
+    check("Hits.run") { Hits.run(g, 3).count() }
+    check("Hits.runConverged") { Hits.runConverged(g, 10, 1e-9)._1.count() }
+    check("Louvain.multilevel") { Louvain.multilevel(g, 3, 2).count() }
+    check("Louvain.multilevelConverged") {
+      Louvain.multilevelConverged(g, 3, 3)._1.count()
+    }
+    check("Louvain.multilevelWarm") {
+      Louvain.multilevelWarm(g, prior, 3, 2).count()
+    }
+    check("Louvain.multilevelConvergedWarm") {
+      Louvain.multilevelConvergedWarm(g, prior, 3, 3)._1.count()
+    }
   }
 
   test("near-dup components: chain merges, min doc_id is the label") {

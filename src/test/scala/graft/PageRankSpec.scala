@@ -201,11 +201,27 @@ class PageRankSpec extends AnyFunSuite {
     val q = ranksMap(PageRank.run(spark, e, cfg, teleport = Some(clean)))
     assert(p.keySet == q.keySet)
     p.foreach { case (k, v) => assert(math.abs(v - q(k)) < 1e-12) }
-    // an all-ghost teleport is an error, not a silent zero-division
+    // an all-ghost teleport is an error, not a silent zero-division;
+    // like every setup guard it releases what it persisted before throwing
+    sp.sharedState.cacheManager.clearCache()
     val ghostOnly = Seq((99L, 1.0)).toDF("id", "w")
     intercept[IllegalArgumentException] {
       PageRank.run(spark, e, cfg, teleport = Some(ghostOnly))
     }
+    assert(sp.sharedState.cacheManager.isEmpty,
+      "all-ghost teleport failure leaked cache entries")
+    val ex = intercept[IllegalArgumentException] {
+      PageRank.run(spark, edges(), cfg)
+    }
+    assert(ex.getMessage.contains("empty graph"), ex.getMessage)
+    assert(sp.sharedState.cacheManager.isEmpty,
+      "empty-graph failure leaked cache entries")
+    val massless = Seq((1L, 0.0), (2L, 0.0), (3L, 0.0)).toDF("id", "rank")
+    intercept[IllegalArgumentException] {
+      PageRank.run(spark, e, cfg, initRanks = Some(massless))
+    }
+    assert(sp.sharedState.cacheManager.isEmpty,
+      "zero-mass warm-start failure leaked cache entries")
   }
 
   test("estimateEdgeParts inspects stats without running a job") {

@@ -47,11 +47,21 @@ class LouvainWeightContractSpec extends AnyFunSuite {
     val sp = spark
     import sp.implicits._
     val frac = Seq((0L, 1L, 0.5), (1L, 2L, 0.25)).toDF("u", "v", "w")
+    sp.sharedState.cacheManager.clearCache()
     val ex = intercept[Exception] {
       Louvain.moveRoundsWeighted(frac, 1).collect()
     }
     assert(ex.getMessage.contains("integral edge weights"),
       s"expected the integral-weight error, got: ${ex.getMessage}")
+    assert(sp.sharedState.cacheManager.isEmpty,
+      "fractional-weight failure leaked cache entries")
+    val ex2 = intercept[IllegalArgumentException] {
+      Louvain.moveRoundsWeighted(
+        Seq.empty[(Long, Long, Long)].toDF("u", "v", "w"), 1)
+    }
+    assert(ex2.getMessage.contains("empty graph"), ex2.getMessage)
+    assert(sp.sharedState.cacheManager.isEmpty,
+      "empty-graph failure leaked cache entries")
   }
 
   test("integral double weights pass the guard and run") {

@@ -687,10 +687,13 @@ class ConvergedEmptyGuardSpec extends AnyFunSuite {
     val sp = spark
     import sp.implicits._
     val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
+    sp.sharedState.cacheManager.clearCache()
     val ex = intercept[IllegalArgumentException] {
       graft.operators.Hits.runConverged(empty, maxK = 5, tol = 1e-6)
     }
     assert(ex.getMessage.contains("non-empty edge set"))
+    assert(sp.sharedState.cacheManager.isEmpty,
+      "edgeless-graph failure leaked cache entries")
   }
 
   test("SSSP converged fails loudly on an empty source set") {

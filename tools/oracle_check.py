@@ -5,9 +5,11 @@ Usage: python3 tools/oracle_check.py <sfDir> <verifyOutDir>
 
 Reads each <verifyOutDir>/<name> parquet (written by graft.Verify), runs the
 matching oracle SQL from oracle_sql.json in DuckDB over the sfDir tables,
-sorts columns by name and rows by all columns, and compares values.
+sorts columns by name and rows by all columns, and compares values. Every
+query Verify lists in failed_queries.json (it threw, so it wrote no output)
+counts as a failure, with or without oracle SQL.
 """
-import json, sys, math
+import json, os, sys, math
 import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -68,7 +70,12 @@ def main(sf_dir, out_dir):
             failures += 1
         else:
             print(f"PASS {name} ({len(g)} rows)")
-    rows_only = [d for d in sorted(__import__('os').listdir(out_dir))
+    failed_path = f"{out_dir}/failed_queries.json"
+    crashed = json.load(open(failed_path)) if os.path.exists(failed_path) else []
+    for name in sorted(set(crashed) - set(oracle)):
+        print(f"FAIL {name}: threw in graft.Verify, no output written")
+        failures += 1
+    rows_only = [d for d in sorted(os.listdir(out_dir))
                  if d not in oracle and not d.endswith('.json')]
     for name in rows_only:
         n = con.execute(
