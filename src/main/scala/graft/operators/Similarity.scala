@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{
+  ArrayType, DoubleType, IntegerType, LongType, StructField, StructType}
 
 /** Vector-similarity operators over an `embeddings(vec_id, embedding
   * ARRAY<FLOAT>, label)` table.
@@ -144,17 +147,14 @@ object Similarity {
       k: Int,
       m: Int,
       rerankR: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(probeIds.nonEmpty, "need at least one probe id")
     require(rerankR >= k, "rerankR must be >= k")
     // the probe side re-derives its truncation from a PUSHED-DOWN id
     // filter scan (|probes| rows) instead of sharing a persisted
     // truncated-corpus frame: no cache, no eager materialization — the
     // whole funnel stays ONE lazy plan, and the corpus-side truncation
     // is computed exactly once inside the candidate scan
-    val probesT = broadcast(
-      truncateRenorm(embeddings.filter(col("vec_id").isin(probeIds: _*)), m)
-        .select(col("vec_id").as("probe_id"), col("tvec").as("pt")))
+    val probesT = probeSide(
+      embeddings, probeIds, Seq(col("tvec").as("pt")), truncateRenorm(_, m))
     val shortlist = truncateRenorm(embeddings, m)
       .crossJoin(probesT)
       .filter(col("vec_id") =!= col("probe_id"))
@@ -166,27 +166,7 @@ object Similarity {
         .topK(col("t_sim"), col("vec_id"), rerankR).as("topk"))
       .select(col("probe_id"), explode(col("topk")).as("t"))
       .select(col("probe_id"), col("t.vec_id").as("vec_id"))
-    val probesF = broadcast(
-      embeddings
-        .filter(col("vec_id").isin(probeIds: _*))
-        .select(
-          col("vec_id").as("probe_id"), asDouble(col("embedding")).as("p"))
-        .withColumn("p_nrm", norm(col("p"))))
-    val wTop = Window
-      .partitionBy(col("probe_id"))
-      .orderBy(desc("cos_sim"), asc("vec_id"))
-    embeddings
-      .select(col("vec_id"), asDouble(col("embedding")).as("e"))
-      .join(broadcast(shortlist), Seq("vec_id"))
-      .join(probesF, Seq("probe_id"))
-      .select(
-        col("probe_id"), col("vec_id"),
-        round(
-          cosinePre(col("e"), col("p"), norm(col("e")), col("p_nrm")),
-          6).as("cos_sim"))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= k)
-      .drop("rn")
+    exactRerank(embeddings, probeIds, shortlist, k)
   }
 
   /** Exact all-pairs near-dup within a blocking key (e.g. `label`):
@@ -236,16 +216,8 @@ object Similarity {
     * shuffle.
     */
   def knnBatch(
-      embeddings: DataFrame, probeIds: Seq[Long], k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window
-      .partitionBy(col("probe_id"))
-      .orderBy(desc("cos_sim"), asc("vec_id"))
-    scoreAgainstProbes(embeddings, probeIds)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .drop("rn")
-  }
+      embeddings: DataFrame, probeIds: Seq[Long], k: Int): DataFrame =
+    topBySim(scoreAgainstProbes(embeddings, probeIds), k)
 
   /** BATCHED exact kNN through the native bounded top-k AGGREGATE
     * ([[graft.functions.TopKAggExpr]]) instead of [[knnBatch]]'s window:
@@ -422,12 +394,7 @@ object Similarity {
   private def scoreAgainstProbes(
       embeddings: DataFrame, probeIds: Seq[Long],
       corpusPred: Option[Column] = None): DataFrame = {
-    require(probeIds.nonEmpty, "need at least one probe id")
-    val probes = broadcast(
-      embeddings
-        .filter(col("vec_id").isin(probeIds: _*))
-        .select(col("vec_id").as("probe_id"), asDouble(col("embedding")).as("p"))
-        .withColumn("p_nrm", norm(col("p"))))
+    val probes = probeVectors(embeddings, probeIds)
     corpusPred.fold(embeddings)(embeddings.filter)
       .select(col("vec_id"), asDouble(col("embedding")).as("e"))
       .withColumn("nrm", norm(col("e")))
@@ -436,8 +403,86 @@ object Similarity {
       .select(
         col("probe_id"),
         col("vec_id"),
-        round(cosinePre(col("e"), col("p"), col("nrm"), col("p_nrm")), 6)
-          .as("cos_sim"))
+        probeSim(col("e"), col("nrm")).as("cos_sim"))
+  }
+
+  /** The broadcast probe side of every batched form: the rows of
+    * `probeIds` in `vecs`, shaped by `pre` (which sees only those rows, so
+    * the id filter stays below it), as `probe_id` plus `cols`.
+    */
+  private def probeSide(
+      vecs: DataFrame, probeIds: Seq[Long], cols: Seq[Column],
+      pre: DataFrame => DataFrame = identity): DataFrame = {
+    require(probeIds.nonEmpty, "need at least one probe id")
+    broadcast(
+      pre(vecs.filter(col("vec_id").isin(probeIds: _*)))
+        .select(col("vec_id").as("probe_id") +: cols: _*))
+  }
+
+  /** [[probeSide]]'s `(probe_id, p, p_nrm)` frame over an embeddings
+    * table: the probe norm folds once per probe, never per scored row.
+    */
+  private def probeVectors(
+      embeddings: DataFrame, probeIds: Seq[Long]): DataFrame =
+    probeSide(embeddings, probeIds, Seq(asDouble(col("embedding")).as("p")))
+      .withColumn("p_nrm", norm(col("p")))
+
+  /** [[probeSide]]'s columns over a frame that already stores `e, nrm`
+    * (an index's lists, [[nswSearch]]'s base).
+    */
+  private val storedProbe = Seq(col("e").as("p"), col("nrm").as("p_nrm"))
+
+  /** Rounded cosine of a row's vector `v` (norm `vn`) to its probe's. */
+  private def probeSim(v: Column, vn: Column): Column =
+    round(cosinePre(v, col("p"), vn, col("p_nrm")), 6)
+
+  /** The one windowed top-k cut: the first `k` rows of each window
+    * partition of `w`, in `w`'s order.
+    */
+  private def topPerKey(df: DataFrame, w: WindowSpec, k: Int): DataFrame =
+    df.withColumn("rn", row_number().over(w)).filter(col("rn") <= k).drop("rn")
+
+  /** The top-k boundary of every windowed kNN form: per probe, rounded
+    * `sim` DESC then vec_id ASC, so float noise cannot reorder it.
+    */
+  private def topBySim(
+      df: DataFrame, k: Int, sim: String = "cos_sim"): DataFrame =
+    topPerKey(
+      df,
+      Window.partitionBy(col("probe_id")).orderBy(desc(sim), asc("vec_id")),
+      k)
+
+  /** The list choice of every IVF probe: each `key`'s `nProbe` nearest
+    * centroids to its `p` (norm `p_nrm`) by (c_sim DESC, c_id ASC), as
+    * the probe frame's columns plus `c_id`.
+    */
+  private def nearestLists(
+      probes: DataFrame, centroids: DataFrame, nProbe: Int,
+      key: String = "probe_id"): DataFrame =
+    topPerKey(
+      probes.crossJoin(centroids).withColumn("c_sim",
+        cosinePre(col("p"), col("c_emb"), col("p_nrm"), col("c_nrm"))),
+      Window.partitionBy(col(key)).orderBy(desc("c_sim"), asc("c_id")),
+      nProbe)
+      .select((probes.columns.toSeq :+ "c_id").map(col): _*)
+
+  /** The exact rerank tail of every funnel: a `(probe_id, vec_id,
+    * carry…)` shortlist rescored by full-precision cosine against
+    * `embeddings` — a broadcast shortlist and one column-pruned pass, so
+    * only |probes|·R rows are scored — then cut to the top `k` per probe.
+    */
+  private def exactRerank(
+      embeddings: DataFrame, probeIds: Seq[Long], shortlist: DataFrame,
+      k: Int, carry: String*): DataFrame = {
+    val out = Seq(col("probe_id"), col("vec_id")) ++ carry.map(col) :+
+      probeSim(col("e"), norm(col("e"))).as("cos_sim")
+    topBySim(
+      embeddings
+        .select(col("vec_id"), asDouble(col("embedding")).as("e"))
+        .join(broadcast(shortlist), Seq("vec_id"))
+        .join(probeVectors(embeddings, probeIds), Seq("probe_id"))
+        .select(out: _*),
+      k)
   }
 
   /** Bounded top-k ranking tail shared by [[knnBatchAgg]] and
@@ -493,13 +538,13 @@ object Similarity {
   }
 
   /** Build an [[IvfIndex]]: a deterministic coarse quantizer — stride
-    * sampling seeds the centroids (every `stride`-th vector by id: seeded
-    * sampling without randomness), then `kmeansIter` Lloyd iterations of
-    * spherical k-means refine them. Each Lloyd pass is one assignment
-    * scan of the persisted base (broadcast centroids, max cosine via
-    * max_by — the argmax folds inside the hash aggregate, no window
-    * sort) plus one per-(list, dimension) mean (explode → map-side
-    * combined hash-agg). Everything about the refinement is pinned
+    * sampling seeds the centroids ([[strideSeeds]]: every ⌊n/nList⌋-th
+    * vector by id, topped up when ids leave gaps), then `kmeansIter`
+    * Lloyd iterations of spherical k-means refine them. Each Lloyd pass
+    * is one assignment scan of the persisted base (broadcast centroids,
+    * max cosine via max_by — the argmax folds inside the hash aggregate,
+    * no window sort) plus one per-(list, dimension) mean
+    * ([[lloydMeans]]). Everything about the refinement is pinned
     * deterministic: fixed init, FIXED iteration count, lowest-c_id
     * tie-breaks, and per-dimension means rounded to 9 dp so float
     * summation order cannot leak into the stored centroids. Empty
@@ -510,7 +555,8 @@ object Similarity {
     * bound [[writeIvfIndex]]'s layout relies on). `kmeansIter = 0`
     * degrades to the raw stride sample. The final assignment is
     * materialized eagerly: "build" is the one pass a user pays up front
-    * so probes don't.
+    * so probes don't. The handle's `nList` is the number of centroids
+    * built: fewer than asked when the corpus has fewer vectors.
     */
   def buildIvfIndex(
       embeddings: DataFrame,
@@ -520,7 +566,6 @@ object Similarity {
     import spark.implicits._
     val emb = asDouble(col("embedding"))
     val n = embeddings.count()
-    val stride = math.max(n / nList, 1L)
     // base projection persisted so each vector's norm folds ONCE, not
     // once per (vector, centroid) pair — and every Lloyd pass rescans
     // the SAME cached frame instead of re-reading the source
@@ -528,30 +573,13 @@ object Similarity {
       .select(col("vec_id"), emb.as("e"))
       .withColumn("nrm", norm(col("e")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var cents: Seq[(Long, Seq[Double])] = base
-      .filter(pmod(col("vec_id"), lit(stride)) === 0)
-      // ordered before limit: an unordered limit picks whichever rows
-      // the scan reaches first, breaking the determinism contract
-      .orderBy(col("vec_id"))
-      .limit(nList)
-      .select(col("vec_id"), col("e"))
-      .collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq).toSeq
+    var cents = strideSeeds(base, n, nList)
     def centroidFrame(cs: Seq[(Long, Seq[Double])]): DataFrame =
       broadcast(
         cs.toDF("c_id", "c_emb").withColumn("c_nrm", norm(col("c_emb"))))
     for (_ <- 1 to kmeansIter) {
-      val updated = assignNearest(base, centroidFrame(cents))
-        .select(col("c_id"), posexplode(col("e")).as(Seq("d", "x")))
-        .groupBy(col("c_id"), col("d"))
-        .agg(round(avg(col("x")), 9).as("m"))
-        .groupBy(col("c_id"))
-        .agg(sort_array(collect_list(struct(col("d"), col("m")))).as("dm"))
-        .select(
-          col("c_id"),
-          transform(col("dm"), s => s.getField("m")).as("c_emb"))
-        .collect()
-        .map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq).toMap
+      val updated = lloydMeans(
+        assignNearest(base, centroidFrame(cents)), "c_id")(_.getLong(0))
       cents = cents.map { case (id, e) => id -> updated.getOrElse(id, e) }
     }
     val centroids = centroidFrame(cents)
@@ -562,7 +590,53 @@ object Similarity {
     // frame can go — probes must never re-trigger the assignment pass
     assigned.count()
     base.unpersist(false)
-    new IvfIndex(assigned, centroids, nList)
+    new IvfIndex(assigned, centroids, cents.length)
+  }
+
+  /** Deterministic seeds of [[buildIvfIndex]] and [[kmeansAssign]]:
+    * every ⌊n/k⌋-th vector by id (seeded sampling without randomness;
+    * the seed's vec_id labels its cluster). Id-modulo striding assumes
+    * ids roughly cover [0, n) — on, say, all-odd ids it selects nothing
+    * — so the lowest-id vectors not already seeds fill the remaining
+    * slots (a k-row TakeOrderedAndProject, never a global sort). On an
+    * id-contiguous corpus the top-up is a no-op, so the oracle's modulo
+    * replay stays exact there. `base` carries `vec_id, e`.
+    */
+  private def strideSeeds(
+      base: DataFrame, n: Long, k: Int): Seq[(Long, Seq[Double])] = {
+    // ordered before limit: an unordered limit picks whichever rows the
+    // scan reaches first, breaking the determinism contract
+    def lowest(df: DataFrame, m: Int): Seq[(Long, Seq[Double])] =
+      df.orderBy(col("vec_id")).limit(m).select(col("vec_id"), col("e"))
+        .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq).toSeq
+    val stride = math.max(n / k, 1L)
+    val strided =
+      lowest(base.filter(pmod(col("vec_id"), lit(stride)) === 0), k)
+    if (strided.length >= k || n <= strided.length) strided
+    else (strided ++ lowest(
+      base.filter(!col("vec_id").isin(strided.map(_._1): _*)),
+      k - strided.length)).sortBy(_._1)
+  }
+
+  /** One Lloyd mean update, shared by the trainers: per `keys` ×
+    * dimension, the mean of the assigned `e` rounded to 9 dp (float
+    * summation order cannot leak into the centroids), collected — k·dim
+    * cells, driver-bounded at any corpus size. A key with no members is
+    * absent, so its caller keeps the previous centroid.
+    */
+  private def lloydMeans[K](assigned: DataFrame, keys: String*)(
+      key: Row => K): Map[K, Seq[Double]] = {
+    val kc = keys.map(col)
+    assigned
+      .select(kc :+ posexplode(col("e")).as(Seq("d", "x")): _*)
+      .groupBy(kc :+ col("d"): _*)
+      .agg(round(avg(col("x")), 9).as("m"))
+      .groupBy(kc: _*)
+      .agg(sort_array(collect_list(struct(col("d"), col("m")))).as("dm"))
+      .select(kc :+ transform(col("dm"), s => s.getField("m")).as("c_emb"): _*)
+      .collect()
+      .map(r => key(r) -> r.getSeq[Double](keys.length).toSeq)
+      .toMap
   }
 
   /** Nearest-centroid assignment of every base vector in ONE
@@ -637,34 +711,7 @@ object Similarity {
     val spark = index.assigned.sparkSession
     val probeVec = index.assigned.filter(col("vec_id") === probeId)
       .select(col("e").as("probe_e"), col("nrm").as("probe_nrm"))
-    // the output filter keeps ROUNDED cos >= minCos, so a true cosine as
-    // low as minCos - 5e-7 can round into the result — the prune bound
-    // covers that margin (plus acos round-trip slack) before it cuts
-    val thetaTau = math.acos(math.max(-1.0, math.min(1.0, minCos - 1e-6)))
-    // driver-side prune decision: nList rows ranked against the probe
-    val centAngles = probeVec
-      .crossJoin(index.centroids)
-      .select(
-        col("c_id"),
-        acos(greatest(lit(-1.0), least(lit(1.0),
-          cosinePre(
-            col("probe_e"), col("c_emb"), col("probe_nrm"), col("c_nrm")))))
-          .as("ang"))
-      .collect()
-      .map(r => r.getLong(0) -> r.getDouble(1))
-    // fail fast on an unknown probe: an absent probeId would otherwise
-    // return an EMPTY frame, indistinguishable from "no vectors within
-    // radius". The check is free — the crossJoin against a missing
-    // probe row already collected zero angle rows, and a non-empty
-    // index always has centroids (listMaxAngle is empty only when the
-    // index itself is).
-    require(centAngles.nonEmpty || index.listMaxAngle.isEmpty,
-      s"probeIvfRange: probe vec_id=$probeId is not in the index")
-    val keep = centAngles.collect {
-      case (cId, ang)
-          if ang - index.listMaxAngle.getOrElse(cId, math.Pi) <=
-            thetaTau + 1e-9 => cId
-    }.toSeq
+    val keep = rangeLists(index, probeVec, probeId, minCos, "probeIvfRange")
     if (keep.isEmpty) {
       import spark.implicits._
       Seq.empty[(Long, Double)].toDF("vec_id", "cos_sim")
@@ -687,9 +734,25 @@ object Similarity {
     * assert the prune actually bites without reaching into internals.
     */
   def rangeListsScanned(
-      index: IvfIndex, probeId: Long, minCos: Double): Int = {
-    val probeVec = index.assigned.filter(col("vec_id") === probeId)
-      .select(col("e").as("probe_e"), col("nrm").as("probe_nrm"))
+      index: IvfIndex, probeId: Long, minCos: Double): Int =
+    rangeLists(
+      index,
+      index.assigned.filter(col("vec_id") === probeId)
+        .select(col("e").as("probe_e"), col("nrm").as("probe_nrm")),
+      probeId, minCos, "rangeListsScanned").size
+
+  /** The lists a radius search must scan: the centroid angles of the
+    * one-row `probeVec` (nList rows, collected) against the build-time
+    * radii, keeping every list the triangle-inequality bound cannot
+    * exclude. Fails on a probe that is not in the index: an absent
+    * probeId would otherwise read as "no vectors within radius". The
+    * check is free — a missing probe row collects zero angle rows, and a
+    * non-empty index always has centroids (listMaxAngle is empty only
+    * when the index itself is).
+    */
+  private def rangeLists(
+      index: IvfIndex, probeVec: DataFrame, probeId: Long, minCos: Double,
+      caller: String): Seq[Long] = {
     // the output filter keeps ROUNDED cos >= minCos, so a true cosine as
     // low as minCos - 5e-7 can round into the result — the prune bound
     // covers that margin (plus acos round-trip slack) before it cuts
@@ -703,14 +766,14 @@ object Similarity {
             col("probe_e"), col("c_emb"), col("probe_nrm"), col("c_nrm")))))
           .as("ang"))
       .collect()
-    // same unknown-probe guard as probeIvfRange: 0 lists scanned must
-    // mean "the prune proved them all empty", never "no such probe"
+      .map(r => r.getLong(0) -> r.getDouble(1))
     require(centAngles.nonEmpty || index.listMaxAngle.isEmpty,
-      s"rangeListsScanned: probe vec_id=$probeId is not in the index")
-    centAngles
-      .count(r =>
-        r.getDouble(1) - index.listMaxAngle.getOrElse(r.getLong(0), math.Pi)
-          <= thetaTau + 1e-9)
+      s"$caller: probe vec_id=$probeId is not in the index")
+    centAngles.collect {
+      case (cId, ang)
+          if ang - index.listMaxAngle.getOrElse(cId, math.Pi) <=
+            thetaTau + 1e-9 => cId
+    }.toSeq
   }
 
   /** BATCHED probe of a prebuilt [[IvfIndex]]: top-k for a SET of query
@@ -726,44 +789,19 @@ object Similarity {
       probeIds: Seq[Long],
       k: Int,
       nProbe: Int = 4): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(probeIds.nonEmpty, "need at least one probe id")
-    val probes = broadcast(
-      index.assigned
-        .filter(col("vec_id").isin(probeIds: _*))
-        .select(
-          col("vec_id").as("probe_id"),
-          col("e").as("probe_e"), col("nrm").as("probe_nrm")))
-    val wLists = Window
-      .partitionBy(col("probe_id"))
-      .orderBy(desc("c_sim"), asc("c_id"))
+    val probes = probeSide(index.assigned, probeIds, storedProbe)
     val probeLists = broadcast(
-      probes
-        .crossJoin(index.centroids)
-        .select(
-          col("probe_id"), col("c_id"),
-          cosinePre(
-            col("probe_e"), col("c_emb"),
-            col("probe_nrm"), col("c_nrm")).as("c_sim"))
-        .withColumn("rn", row_number().over(wLists))
-        .filter(col("rn") <= nProbe)
+      nearestLists(probes, index.centroids, nProbe)
         .select(col("probe_id"), col("c_id")))
-    val wTop = Window
-      .partitionBy(col("probe_id"))
-      .orderBy(desc("cos_sim"), asc("vec_id"))
-    index.assigned
-      .join(probeLists, Seq("c_id")) // broadcast: fans each member to its probing queries
-      .join(probes, Seq("probe_id"))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .select(
-        col("probe_id"),
-        col("vec_id"),
-        round(
-          cosinePre(col("e"), col("probe_e"), col("nrm"), col("probe_nrm")),
-          6).as("cos_sim"))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= k)
-      .drop("rn")
+    topBySim(
+      index.assigned
+        .join(probeLists, Seq("c_id")) // broadcast: fans each member to its probing queries
+        .join(probes, Seq("probe_id"))
+        .filter(col("vec_id") =!= col("probe_id"))
+        .select(
+          col("probe_id"), col("vec_id"),
+          probeSim(col("e"), col("nrm")).as("cos_sim")),
+      k)
   }
 
   /** One-shot IVF approximate kNN: build, probe, seal. Kept as the
@@ -854,22 +892,16 @@ object Similarity {
   def deleteFromIvfIndex(
       spark: SparkSession, path: String,
       deleteIds: DataFrame): Seq[Long] = {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("e", ArrayType(DoubleType)),
-      StructField("nrm", DoubleType),
-      StructField("c_id", LongType)))
     val del = deleteIds.select(col("vec_id")).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // blast radius: which lists hold a deleted id (bounded by nList)
-      val affected = spark.read.schema(schema).parquet(s"$path/lists")
+      val affected = readLists(spark, path)
         .join(broadcast(del), Seq("vec_id"))
         .select(col("c_id")).distinct()
         .collect().map(_.getLong(0)).toSeq.sorted
       if (affected.nonEmpty) {
-        val survivors = spark.read.schema(schema).parquet(s"$path/lists")
+        val survivors = readLists(spark, path)
           .filter(col("c_id").isin(affected: _*))
           .join(broadcast(del), Seq("vec_id"), "left_anti")
           .localCheckpoint() // materialize BEFORE touching the files
@@ -929,14 +961,8 @@ object Similarity {
   def rebalanceIvfIndex(
       spark: SparkSession, path: String,
       maxListSize: Long, kmeansIter: Int = 3): Seq[(Long, Long)] = {
-    import org.apache.spark.sql.types._
     import spark.implicits._
-    val schema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("e", ArrayType(DoubleType)),
-      StructField("nrm", DoubleType),
-      StructField("c_id", LongType)))
-    def lists = spark.read.schema(schema).parquet(s"$path/lists")
+    def lists = readLists(spark, path)
     // per-list sizes: c_id is the partition column and count needs no
     // data column, so this scan prices parquet footers, not pages
     val sizes = lists.groupBy(col("c_id")).agg(count(lit(1)).as("n"))
@@ -978,17 +1004,8 @@ object Similarity {
       .select(col("c_id"), col("vec_id"), col("best.e").as("e"),
         col("best.nrm").as("nrm"), col("best.sub").as("sub"))
     for (_ <- 1 to kmeansIter) {
-      val updated = assign(cents)
-        .select(col("c_id"), col("sub"), posexplode(col("e")).as(Seq("d", "x")))
-        .groupBy(col("c_id"), col("sub"), col("d"))
-        .agg(round(avg(col("x")), 9).as("m"))
-        .groupBy(col("c_id"), col("sub"))
-        .agg(sort_array(collect_list(struct(col("d"), col("m")))).as("dm"))
-        .select(col("c_id"), col("sub"),
-          transform(col("dm"), s => s.getField("m")).as("c_emb"))
-        .collect()
-        .map(r => (r.getLong(0), r.getInt(1)) -> r.getSeq[Double](2).toSeq)
-        .toMap
+      val updated = lloydMeans(assign(cents), "c_id", "sub")(r =>
+        (r.getLong(0), r.getInt(1)))
       cents = cents.map { case (c, s, e) =>
         (c, s, updated.getOrElse((c, s), e))
       }
@@ -1045,16 +1062,23 @@ object Similarity {
     * returned handle is a harmless no-op.
     */
   def readIvfIndex(spark: SparkSession, path: String): IvfIndex = {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("e", ArrayType(DoubleType)),
-      StructField("nrm", DoubleType),
-      StructField("c_id", LongType)))
-    val assigned = spark.read.schema(schema).parquet(s"$path/lists")
     val centroids = broadcast(spark.read.parquet(s"$path/centroids"))
-    new IvfIndex(assigned, centroids, centroids.count().toInt)
+    new IvfIndex(readLists(spark, path), centroids, centroids.count().toInt)
   }
+
+  /** The inverted lists of a disk index: `vec_id`, the stored vector
+    * `vec`, its norm `nrm` and the `c_id` partition column — the float
+    * layout by default. The explicit schema keeps c_id LongType.
+    */
+  private def readLists(
+      spark: SparkSession, path: String,
+      vec: StructField = StructField("e", ArrayType(DoubleType)),
+      nrm: String = "nrm"): DataFrame =
+    spark.read
+      .schema(StructType(Seq(
+        StructField("vec_id", LongType), vec,
+        StructField(nrm, DoubleType), StructField("c_id", LongType))))
+      .parquet(s"$path/lists")
 
   /** Batched probe with STATIC partition pruning — the disk-index twin
     * of [[probeIvfBatch]]. Which lists to probe is a tiny driver-side
@@ -1077,58 +1101,42 @@ object Similarity {
       // BEFORE ranking, so the top-k come from filtered candidates —
       // the pre-filter form, composing with the file-level pruning: the
       // scan reads nProbe/nList of the index AND only allowed rows rank
+      allowed: Option[DataFrame] = None): DataFrame =
+    probePruned(
+      index.assigned, col("e"), col("nrm"), index.centroids,
+      probeSide(index.assigned, probeIds, storedProbe), k, nProbe,
+      allowed = allowed)
+
+  /** The one pruned-list probe behind the three disk layouts. The
+    * (probe, list) pairs are a tiny driver-side decision — ≤ |probes| ×
+    * nProbe rows of a broadcast × broadcast product — collected and
+    * pushed as a literal `c_id IN (...)`, so on a partitioned layout the
+    * scan reads only the probed list directories (`PartitionFilters`,
+    * plan-asserted). `lists` carries each row's decoded vector `vec` and
+    * its norm `nrm`; `allowed`, when given, semi-joins the candidates
+    * before ranking; the rounded score lands in column `sim`.
+    */
+  private def probePruned(
+      lists: DataFrame, vec: Column, nrm: Column, centroids: DataFrame,
+      probes: DataFrame, k: Int, nProbe: Int, sim: String = "cos_sim",
       allowed: Option[DataFrame] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(probeIds.nonEmpty, "need at least one probe id")
-    val spark = index.assigned.sparkSession
+    val spark = lists.sparkSession
     import spark.implicits._
-    val probes = broadcast(
-      index.assigned
-        .filter(col("vec_id").isin(probeIds: _*))
-        .select(
-          col("vec_id").as("probe_id"),
-          col("e").as("probe_e"), col("nrm").as("probe_nrm")))
-    val wLists = Window
-      .partitionBy(col("probe_id"))
-      .orderBy(desc("c_sim"), asc("c_id"))
-    // bounded collect by construction: |probeIds| × nProbe (probe_id,
-    // c_id) pairs from a broadcast × broadcast product
-    val pairs = probes
-      .crossJoin(index.centroids)
-      .select(
-        col("probe_id"), col("c_id"),
-        cosinePre(
-          col("probe_e"), col("c_emb"),
-          col("probe_nrm"), col("c_nrm")).as("c_sim"))
-      .withColumn("rn", row_number().over(wLists))
-      .filter(col("rn") <= nProbe)
+    val pairs = nearestLists(probes, centroids, nProbe)
       .select(col("probe_id"), col("c_id"))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)))
-    val listIds = pairs.map(_._2).distinct.toSeq
-    val wTop = Window
-      .partitionBy(col("probe_id"))
-      .orderBy(desc("cos_sim"), asc("vec_id"))
-    val pruned = index.assigned
-      .filter(col("c_id").isin(listIds: _*)) // literal IN → partition pruning
-    val candidates = allowed match {
-      case Some(ok) => pruned.join(ok.select(col("vec_id")), Seq("vec_id"),
-        "left_semi")
-      case None => pruned
-    }
-    candidates
-      .join(broadcast(pairs.toSeq.toDF("probe_id", "c_id")), Seq("c_id"))
-      .join(probes, Seq("probe_id"))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .select(
-        col("probe_id"),
-        col("vec_id"),
-        round(
-          cosinePre(col("e"), col("probe_e"), col("nrm"), col("probe_nrm")),
-          6).as("cos_sim"))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= k)
-      .drop("rn")
+    val pruned = lists // literal IN → partition pruning
+      .filter(col("c_id").isin(pairs.map(_._2).distinct.toSeq: _*))
+    val candidates = allowed.fold(pruned)(ok =>
+      pruned.join(ok.select(col("vec_id")), Seq("vec_id"), "left_semi"))
+    topBySim(
+      candidates
+        .join(broadcast(pairs.toSeq.toDF("probe_id", "c_id")), Seq("c_id"))
+        .join(probes, Seq("probe_id"))
+        .filter(col("vec_id") =!= col("probe_id"))
+        .select(col("probe_id"), col("vec_id"), probeSim(vec, nrm).as(sim)),
+      k, sim)
   }
 
   /** Persist an [[IvfIndex]] as an INT8-QUANTIZED disk layout (IVF-SQ —
@@ -1180,64 +1188,20 @@ object Similarity {
       probeIds: Seq[Long],
       k: Int,
       nProbe: Int = 4): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(probeIds.nonEmpty, "need at least one probe id")
     val spark = embeddings.sparkSession
-    import spark.implicits._
-    val centroids = broadcast(spark.read.parquet(s"$path/centroids"))
+    val probes = probeVectors(embeddings, probeIds)
     val st = spark.read.parquet(s"$path/stats")
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
       .sortBy(_._1)
     val mnArr = array(st.map(s => lit(s._2)).toSeq: _*)
     val rngArr = array(st.map(s => lit(s._3)).toSeq: _*)
-    val probes = broadcast(
-      embeddings
-        .filter(col("vec_id").isin(probeIds: _*))
-        .select(
-          col("vec_id").as("probe_id"), asDouble(col("embedding")).as("p"))
-        .withColumn("p_nrm", norm(col("p"))))
-    val wLists = Window
-      .partitionBy(col("probe_id"))
-      .orderBy(desc("c_sim"), asc("c_id"))
-    // bounded collect: |probeIds| × nProbe pairs from a broadcast ×
-    // broadcast product (same discipline as probeIvfPruned)
-    val pairs = probes
-      .crossJoin(centroids)
-      .select(
-        col("probe_id"), col("c_id"),
-        cosinePre(col("p"), col("c_emb"), col("p_nrm"), col("c_nrm"))
-          .as("c_sim"))
-      .withColumn("rn", row_number().over(wLists))
-      .filter(col("rn") <= nProbe)
-      .select(col("probe_id"), col("c_id"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    val listIds = pairs.map(_._2).distinct.toSeq
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("codes", ArrayType(IntegerType)),
-      StructField("dnrm", DoubleType),
-      StructField("c_id", LongType)))
-    val wTop = Window
-      .partitionBy(col("probe_id"))
-      .orderBy(desc("cos_sim"), asc("vec_id"))
-    spark.read.schema(schema).parquet(s"$path/lists")
-      .filter(col("c_id").isin(listIds: _*)) // literal IN → partition pruning
-      // dequantize ONCE per stored row, before the probe fan-out
+    // dequantize ONCE per stored row, before the probe fan-out
+    val lists = readLists(
+      spark, path, StructField("codes", ArrayType(IntegerType)), "dnrm")
       .withColumn("dv", dequantize(col("codes"), mnArr, rngArr))
-      .join(broadcast(pairs.toSeq.toDF("probe_id", "c_id")), Seq("c_id"))
-      .join(probes, Seq("probe_id"))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .select(
-        col("probe_id"),
-        col("vec_id"),
-        round(
-          cosinePre(col("dv"), col("p"), col("dnrm"), col("p_nrm")),
-          6).as("cos_sim"))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= k)
-      .drop("rn")
+    probePruned(
+      lists, col("dv"), col("dnrm"),
+      broadcast(spark.read.parquet(s"$path/centroids")), probes, k, nProbe)
   }
 
   /** IVF-SQ probe with a full-precision RERANK tail — the production
@@ -1255,32 +1219,11 @@ object Similarity {
       k: Int,
       nProbe: Int = 4,
       rerankR: Int = 50): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(rerankR >= k, "rerankR must be >= k")
     val shortlist =
       probeIvfSqPruned(embeddings, path, probeIds, k = rerankR, nProbe)
         .select(col("probe_id"), col("vec_id"))
-    val probesF = broadcast(
-      embeddings
-        .filter(col("vec_id").isin(probeIds: _*))
-        .select(
-          col("vec_id").as("probe_id"), asDouble(col("embedding")).as("p"))
-        .withColumn("p_nrm", norm(col("p"))))
-    val wTop = Window
-      .partitionBy(col("probe_id"))
-      .orderBy(desc("cos_sim"), asc("vec_id"))
-    embeddings
-      .select(col("vec_id"), asDouble(col("embedding")).as("e"))
-      .join(broadcast(shortlist), Seq("vec_id"))
-      .join(probesF, Seq("probe_id"))
-      .select(
-        col("probe_id"), col("vec_id"),
-        round(
-          cosinePre(col("e"), col("p"), norm(col("e")), col("p_nrm")),
-          6).as("cos_sim"))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= k)
-      .drop("rn")
+    exactRerank(embeddings, probeIds, shortlist, k)
   }
 
   /** Persist an [[IvfIndex]] as a PQ-CODED disk layout (IVF-PQ — the
@@ -1335,11 +1278,8 @@ object Similarity {
       probeIds: Seq[Long],
       k: Int,
       nProbe: Int = 4): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(probeIds.nonEmpty, "need at least one probe id")
     val spark = embeddings.sparkSession
-    import spark.implicits._
-    val centroids = broadcast(spark.read.parquet(s"$path/centroids"))
+    val probes = probeVectors(embeddings, probeIds)
     val cbs: Seq[Seq[Seq[Double]]] = {
       val rows = spark.read.parquet(s"$path/codebook")
         .collect()
@@ -1350,52 +1290,14 @@ object Similarity {
       val kMax = rows.keys.map(_._2).max + 1
       (0 until mMax).map(mi => (0 until kMax).map(j => rows((mi, j))))
     }
-    val probes = broadcast(
-      embeddings
-        .filter(col("vec_id").isin(probeIds: _*))
-        .select(
-          col("vec_id").as("probe_id"), asDouble(col("embedding")).as("p"))
-        .withColumn("p_nrm", norm(col("p"))))
-    val wLists = Window
-      .partitionBy(col("probe_id"))
-      .orderBy(desc("c_sim"), asc("c_id"))
-    // bounded collect: |probeIds| × nProbe pairs (probeIvfPruned rule)
-    val pairs = probes
-      .crossJoin(centroids)
-      .select(
-        col("probe_id"), col("c_id"),
-        cosinePre(col("p"), col("c_emb"), col("p_nrm"), col("c_nrm"))
-          .as("c_sim"))
-      .withColumn("rn", row_number().over(wLists))
-      .filter(col("rn") <= nProbe)
-      .select(col("probe_id"), col("c_id"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    val listIds = pairs.map(_._2).distinct.toSeq
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("codes", ArrayType(IntegerType)),
-      StructField("rnrm", DoubleType),
-      StructField("c_id", LongType)))
-    val wTop = Window
-      .partitionBy(col("probe_id"))
-      .orderBy(desc("adc_sim"), asc("vec_id"))
-    spark.read.schema(schema).parquet(s"$path/lists")
-      .filter(col("c_id").isin(listIds: _*)) // literal IN → partition pruning
-      // reconstruct ONCE per stored row, before the probe fan-out
+    // reconstruct ONCE per stored row, before the probe fan-out
+    val lists = readLists(
+      spark, path, StructField("codes", ArrayType(IntegerType)), "rnrm")
       .withColumn("r", pqReconColumn(cbs, col("codes")))
-      .join(broadcast(pairs.toSeq.toDF("probe_id", "c_id")), Seq("c_id"))
-      .join(probes, Seq("probe_id"))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .select(
-        col("probe_id"), col("vec_id"),
-        round(
-          cosinePre(col("r"), col("p"), col("rnrm"), col("p_nrm")),
-          6).as("adc_sim"))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= k)
-      .drop("rn")
+    probePruned(
+      lists, col("r"), col("rnrm"),
+      broadcast(spark.read.parquet(s"$path/centroids")), probes, k, nProbe,
+      sim = "adc_sim")
   }
 
   /** One-shot batched IVF kNN: build, batch-probe, seal — the assignment
@@ -1629,30 +1531,17 @@ object Similarity {
       cbs: Seq[Seq[Seq[Double]]],
       probeIds: Seq[Long],
       topK: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(probeIds.nonEmpty, "need at least one probe id")
-    val recon = pqReconColumn(cbs, col("codes"))
-    val probes = broadcast(
-      embeddings
-        .filter(col("vec_id").isin(probeIds: _*))
-        .select(col("vec_id").as("probe_id"), asDouble(col("embedding")).as("q"))
-        .withColumn("q_nrm", norm(col("q"))))
-    val w = Window
-      .partitionBy(col("probe_id"))
-      .orderBy(desc("adc_sim"), asc("vec_id"))
-    pqEncodeCb(embeddings, cbs)
-      .select(col("vec_id"), recon.as("r"))
-      .withColumn("r_nrm", norm(col("r")))
-      .crossJoin(probes)
-      .filter(col("vec_id") =!= col("probe_id"))
-      .select(
-        col("probe_id"), col("vec_id"),
-        round(
-          cosinePre(col("r"), col("q"), col("r_nrm"), col("q_nrm")),
-          6).as("adc_sim"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= topK)
-      .drop("rn")
+    val probes = probeVectors(embeddings, probeIds)
+    topBySim(
+      pqEncodeCb(embeddings, cbs)
+        .select(col("vec_id"), pqReconColumn(cbs, col("codes")).as("r"))
+        .withColumn("r_nrm", norm(col("r")))
+        .crossJoin(probes)
+        .filter(col("vec_id") =!= col("probe_id"))
+        .select(
+          col("probe_id"), col("vec_id"),
+          probeSim(col("r"), col("r_nrm")).as("adc_sim")),
+      topK, "adc_sim")
   }
 
   /** Deterministic Lloyd-TRAINED PQ codebooks — the quality path the
@@ -1742,7 +1631,6 @@ object Similarity {
       m: Int,
       k: Int,
       trainIters: Int = 3): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(candR >= topK, "candR must be >= topK")
     val cbs =
       if (trainIters > 0) pqTrainCodebooks(embeddings, m, k, trainIters)
@@ -1753,26 +1641,7 @@ object Similarity {
       }
     val cands = pqAdcWith(embeddings, cbs, probeIds, candR)
       .select(col("probe_id"), col("vec_id"))
-    val probesF = broadcast(
-      embeddings
-        .filter(col("vec_id").isin(probeIds: _*))
-        .select(col("vec_id").as("probe_id"), asDouble(col("embedding")).as("q"))
-        .withColumn("q_nrm", norm(col("q"))))
-    val wTop = Window
-      .partitionBy(col("probe_id"))
-      .orderBy(desc("cos_sim"), asc("vec_id"))
-    embeddings
-      .select(col("vec_id"), asDouble(col("embedding")).as("e"))
-      .join(broadcast(cands), Seq("vec_id"))
-      .join(probesF, Seq("probe_id"))
-      .select(
-        col("probe_id"), col("vec_id"),
-        round(
-          cosinePre(col("e"), col("q"), norm(col("e")), col("q_nrm")),
-          6).as("cos_sim"))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= topK)
-      .drop("rn")
+    exactRerank(embeddings, probeIds, cands, topK)
   }
 
   // ──────────────── binary (sign) quantization + Hamming ────────────────
@@ -1815,50 +1684,23 @@ object Similarity {
       probeIds: Seq[Long],
       topK: Int,
       candR: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(probeIds.nonEmpty, "need at least one probe id")
     require(candR >= topK, "candR must be >= topK")
     val packed = signPack(embeddings)
-    val probesP = broadcast(
+    val probesP =
+      probeSide(packed, probeIds, Seq(col("lo").as("plo"), col("hi").as("phi")))
+    val cands = topPerKey(
       packed
-        .filter(col("vec_id").isin(probeIds: _*))
+        .crossJoin(probesP)
+        .filter(col("vec_id") =!= col("probe_id"))
         .select(
-          col("vec_id").as("probe_id"),
-          col("lo").as("plo"), col("hi").as("phi")))
-    val wH = Window
-      .partitionBy(col("probe_id"))
-      .orderBy(asc("hamming"), asc("vec_id"))
-    val cands = packed
-      .crossJoin(probesP)
-      .filter(col("vec_id") =!= col("probe_id"))
-      .select(
-        col("probe_id"), col("vec_id"),
-        (bit_count(col("lo").bitwiseXOR(col("plo"))) +
-          bit_count(col("hi").bitwiseXOR(col("phi")))).cast("long")
-          .as("hamming"))
-      .withColumn("rn", row_number().over(wH))
-      .filter(col("rn") <= candR)
-      .drop("rn")
-    val probesF = broadcast(
-      embeddings
-        .filter(col("vec_id").isin(probeIds: _*))
-        .select(col("vec_id").as("probe_id"), asDouble(col("embedding")).as("q"))
-        .withColumn("q_nrm", norm(col("q"))))
-    val wTop = Window
-      .partitionBy(col("probe_id"))
-      .orderBy(desc("cos_sim"), asc("vec_id"))
-    embeddings
-      .select(col("vec_id"), asDouble(col("embedding")).as("e"))
-      .join(broadcast(cands), Seq("vec_id"))
-      .join(probesF, Seq("probe_id"))
-      .select(
-        col("probe_id"), col("vec_id"), col("hamming"),
-        round(
-          cosinePre(col("e"), col("q"), norm(col("e")), col("q_nrm")),
-          6).as("cos_sim"))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= topK)
-      .drop("rn")
+          col("probe_id"), col("vec_id"),
+          (bit_count(col("lo").bitwiseXOR(col("plo"))) +
+            bit_count(col("hi").bitwiseXOR(col("phi")))).cast("long")
+            .as("hamming")),
+      Window.partitionBy(col("probe_id"))
+        .orderBy(asc("hamming"), asc("vec_id")),
+      candR)
+    exactRerank(embeddings, probeIds, cands, topK, "hamming")
   }
 
   /** All-pairs near-duplicate candidates above a cosine threshold via
@@ -1947,37 +1789,25 @@ object Similarity {
       m: Int,
       nList: Int = 16,
       nProbe: Int = 16): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(m >= 1 && nList >= 1 && nProbe >= 1 && nProbe <= nList,
       "need m >= 1 and 1 <= nProbe <= nList")
     val idx = buildIvfIndex(embeddings, nList)
     // each vector picks its nProbe nearest lists (the probeIvfBatch
     // ranking, applied to EVERY vector as a join, not a driver list)
-    val wl = Window.partitionBy(col("vec_id"))
-      .orderBy(desc("c_sim"), asc("c_id"))
-    val probeLists = idx.assigned
-      .select(col("vec_id"), col("e"), col("nrm"))
-      .crossJoin(idx.centroids) // broadcast: nList rows
-      .withColumn(
-        "c_sim",
-        cosinePre(col("e"), col("c_emb"), col("nrm"), col("c_nrm")))
-      .withColumn("rn", row_number().over(wl))
-      .filter(col("rn") <= nProbe)
-      .select(col("vec_id"), col("e"), col("nrm"), col("c_id"))
+    val probeLists = nearestLists(
+      idx.assigned.select(col("vec_id") +: storedProbe: _*),
+      idx.centroids, nProbe, key = "vec_id")
     // score only the probed lists' members; a pair met through several
     // lists dedups in the same aggregate that carries its (identical)
     // rounded score
     val cand = probeLists
       .join(
         idx.assigned.select(
-          col("c_id"), col("vec_id").as("nbr"),
-          col("e").as("ne"), col("nrm").as("nnrm")),
+          col("c_id"), col("vec_id").as("nbr"), col("e"), col("nrm")),
         Seq("c_id"))
       .filter(col("nbr") =!= col("vec_id"))
       .groupBy(col("vec_id").as("src"), col("nbr"))
-      .agg(max(
-        round(cosinePre(col("e"), col("ne"), col("nrm"), col("nnrm")), 6))
-        .as("cos_sim"))
+      .agg(max(probeSim(col("e"), col("nrm"))).as("cos_sim"))
     // per-src cut through the BOUNDED top-k aggregate (the e9/rankTopK
     // discipline), not a window: the window form sorts the ENTIRE
     // candidate stream per partition, while the m-capped heap keeps
@@ -2030,18 +1860,13 @@ object Similarity {
       k: Int,
       beamWidth: Int = 8,
       hops: Int = 3): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(probeIds.nonEmpty && k >= 1 && beamWidth >= 1 && hops >= 0,
       "need probes, k >= 1, beamWidth >= 1, hops >= 0")
     val base = embeddings
       .select(col("vec_id"), asDouble(col("embedding")).as("e"))
       .withColumn("nrm", norm(col("e")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val probes = broadcast(
-      base.filter(col("vec_id").isin(probeIds: _*))
-        .select(
-          col("vec_id").as("probe_id"),
-          col("e").as("pe"), col("nrm").as("pnrm")))
+    val probes = probeSide(base, probeIds, storedProbe)
     // fail fast on unknown probe ids: a missing probe would otherwise
     // walk nothing and silently emit zero rows for it — the
     // probeIvfRange discipline (the count is a bounded driver action on
@@ -2053,26 +1878,22 @@ object Similarity {
     val adj = graph.select(col("src"), col("nbr"))
       .repartition(col("src"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val entryId =
-      try {
-        require(probes.count() == probeIds.distinct.size,
-          s"nswSearch: some probe ids are not in the corpus " +
-            s"(${probeIds.distinct.size} requested)")
-        // fixed entry point: the graph's minimum vertex (1-row action)
-        // — the NSW convention of a designated enter-point, made
-        // deterministic. min over an empty adjacency is NULL (a
-        // 1-vector corpus builds a zero-edge graph) — fail as loudly
-        // as the unknown-probe require instead of an opaque NPE.
-        val entryRow = adj.agg(min(col("src"))).first()
-        require(!entryRow.isNullAt(0),
-          "nswSearch: graph has no edges — cannot derive an entry " +
-            "point (a corpus of fewer than 2 vectors builds an empty " +
-            "kNN graph)")
-        entryRow.getLong(0)
-      } catch {
-        case e: Throwable =>
-          base.unpersist(false); adj.unpersist(false); throw e
-      }
+    val entryId = CacheScope.releaseOnThrow(base, adj) {
+      require(probes.count() == probeIds.distinct.size,
+        s"nswSearch: some probe ids are not in the corpus " +
+          s"(${probeIds.distinct.size} requested)")
+      // fixed entry point: the graph's minimum vertex (1-row action)
+      // — the NSW convention of a designated enter-point, made
+      // deterministic. min over an empty adjacency is NULL (a
+      // 1-vector corpus builds a zero-edge graph) — fail as loudly
+      // as the unknown-probe require instead of an opaque NPE.
+      val entryRow = adj.agg(min(col("src"))).first()
+      require(!entryRow.isNullAt(0),
+        "nswSearch: graph has no edges — cannot derive an entry " +
+          "point (a corpus of fewer than 2 vectors builds an empty " +
+          "kNN graph)")
+      entryRow.getLong(0)
+    }
     // the walk MAY pass through the probe's own vertex (it scores 1.0
     // and anchors the beam — the standard ANN convention); the self row
     // is excluded only from the FINAL top-k. Excluding it mid-walk
@@ -2082,17 +1903,12 @@ object Similarity {
       .join(probes, Seq("probe_id"))
       .select(
         col("probe_id"), col("vec_id"),
-        round(cosinePre(col("e"), col("pe"), col("nrm"), col("pnrm")), 6)
-          .as("cos_sim"))
+        probeSim(col("e"), col("nrm")).as("cos_sim"))
     var visited = score(
       probes.select(col("probe_id")).withColumn("vec_id", lit(entryId)))
       .transform(CacheScope.rotate)
-    val wb = Window.partitionBy(col("probe_id"))
-      .orderBy(desc("cos_sim"), asc("vec_id"))
     for (_ <- 1 to hops) {
-      val frontier = visited
-        .withColumn("rn", row_number().over(wb))
-        .filter(col("rn") <= beamWidth)
+      val frontier = topBySim(visited, beamWidth)
         .select(col("probe_id"), col("vec_id").as("src"))
       val expanded = score(nswExpand(adj, frontier))
       visited = visited.unionByName(expanded)
@@ -2100,11 +1916,7 @@ object Similarity {
         .agg(max(col("cos_sim")).as("cos_sim"))
         .transform(CacheScope.rotate) // eager: cuts the per-hop lineage
     }
-    val out = visited
-      .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("rn", row_number().over(wb))
-      .filter(col("rn") <= k)
-      .select(col("probe_id"), col("vec_id"), col("cos_sim"))
+    val out = topBySim(visited.filter(col("vec_id") =!= col("probe_id")), k)
     CacheScope.sealAfter(out, base, adj)
   }
 
@@ -2167,50 +1979,14 @@ object Similarity {
       .select(col("vec_id"), asDouble(col("embedding")).as("e"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val n = base.count()
-    val stride = math.max(n / k, 1L)
-    var cents: Seq[(Long, Seq[Double])] = base
-      .filter(pmod(col("vec_id"), lit(stride)) === 0)
-      // ordered before limit: an unordered limit picks whichever rows
-      // the scan reaches first, breaking the determinism contract
-      .orderBy(col("vec_id"))
-      .limit(k)
-      .collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq).toSeq
-    // id-modulo striding assumes ids roughly cover [0, n) — on a
-    // corpus of, say, all-odd ids it selects NOTHING and the crossJoin
-    // against an empty centroid frame would silently drop every row.
-    // Deterministic top-up: the lowest-id vectors not already seeds
-    // fill the remaining slots (a k-row TakeOrderedAndProject — never
-    // a global sort). On an id-contiguous corpus the top-up is a
-    // no-op, so the oracle's modulo replay stays exact there.
-    if (cents.length < k && n > cents.length) {
-      val have = cents.map(_._1).toSet
-      val fill = base
-        .filter(!col("vec_id").isin(have.toSeq: _*))
-        .orderBy(col("vec_id"))
-        .limit(k - cents.length)
-        .collect()
-        .map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq).toSeq
-      cents = (cents ++ fill).sortBy(_._1)
-    }
-    require(cents.nonEmpty || n == 0,
-      "kmeansAssign: no seeds selected from a non-empty corpus")
+    var cents = strideSeeds(base, n, k)
     def centroidFrame(cs: Seq[(Long, Seq[Double])]): DataFrame =
       broadcast(cs.toDF("c_id", "c_emb"))
     def assign(centroids: DataFrame): DataFrame =
       assignEuclid(base, centroids)
     for (_ <- 1 to iters) {
-      val updated = assign(centroidFrame(cents))
-        .select(col("c_id"), posexplode(col("e")).as(Seq("dim", "x")))
-        .groupBy(col("c_id"), col("dim"))
-        .agg(round(avg(col("x")), 9).as("m"))
-        .groupBy(col("c_id"))
-        .agg(sort_array(collect_list(struct(col("dim"), col("m")))).as("dm"))
-        .select(
-          col("c_id"),
-          transform(col("dm"), s => s.getField("m")).as("c_emb"))
-        .collect()
-        .map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq).toMap
+      val updated =
+        lloydMeans(assign(centroidFrame(cents)), "c_id")(_.getLong(0))
       cents = cents.map { case (id, e) => id -> updated.getOrElse(id, e) }
     }
     val out = assign(centroidFrame(cents))

@@ -69,15 +69,24 @@ class AnnRecallSpec extends AnyFunSuite {
     // a prebuilt index must reproduce the exact batched kNN bit-for-bit
     // (same rounded-sim ranking keys), for every probe in the set
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-    val probes = Seq(0L, 1L, 2L, 3L, 4L)
-    val exact = Similarity.knnBatch(emb, probes, k = 10)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val index = Similarity.buildIvfIndex(emb, nList = 8)
-    try {
-      val full = Similarity.probeIvfBatch(index, probes, k = 10, nProbe = 8)
+    // 32 vectors with odd ids 1, 3, …, 63: the id stride (every 4th id)
+    // selects no seed at all, so the build must top the seeds up
+    val oddIds = emb.filter(col("vec_id") < 32)
+      .withColumn("vec_id", col("vec_id") * 2 + 1)
+    for ((corpus, probes) <- Seq(
+        emb -> Seq(0L, 1L, 2L, 3L, 4L), oddIds -> Seq(1L, 3L, 5L, 7L, 9L))) {
+      val exact = Similarity.knnBatch(corpus, probes, k = 10)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(full == exact)
-    } finally index.release()
+      val index = Similarity.buildIvfIndex(corpus, nList = 8)
+      try {
+        // at minCos = -1 the range prune keeps every centroid built
+        assert(index.nList == 8)
+        assert(Similarity.rangeListsScanned(index, probes.head, -1.0) == index.nList)
+        val full = Similarity.probeIvfBatch(index, probes, k = 10, nProbe = 8)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+        assert(full == exact)
+      } finally index.release()
+    }
   }
 
   test("disk index: round-trip probe equals in-memory probe and prunes partitions") {

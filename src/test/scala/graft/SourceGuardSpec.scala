@@ -6,8 +6,9 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Each concern keeps its one home in `src/main/scala`: sessions are built
-  * only by `GraftSession`, and session conf is set or unset only by
-  * `ConfScope`. A hand-rolled copy elsewhere fails here.
+  * only by `GraftSession`, session conf is set or unset only by
+  * `ConfScope`, and `Similarity` states its top-k window and its IVF list
+  * choice once each. A hand-rolled copy elsewhere fails here.
   */
 class SourceGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -31,5 +32,13 @@ class SourceGuardSpec extends AnyFunSuite {
 
   test("conf.set / conf.unset appear only in ConfScope") {
     assert(offenders("""conf\s*\.\s*(set|unset)\s*\(""", "ConfScope.scala").isEmpty)
+  }
+
+  test("Similarity has one top-k window and one IVF list choice") {
+    val src = Files.readString(root.resolve("graft/operators/Similarity.scala"))
+    def count(s: String): Int =
+      java.util.regex.Pattern.quote(s).r.findAllMatchIn(src).size
+    assert(count("row_number()") == 1)
+    assert(count("orderBy(desc(\"c_sim\")") == 1)
   }
 }
