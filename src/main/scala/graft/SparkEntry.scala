@@ -1,8 +1,9 @@
 package graft
 
-import graft.core.ConfScope
+import graft.core.{ConfScope, Scratch}
 import graft.operators._
 import graft.sources.EdgeListReader
+import graft.streaming.Replay
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -3690,26 +3691,18 @@ object SparkEntry {
       // copy hash-matches the plain table (the spec asserts the file
       // count actually shrank)
       val ev = graft.sources.Tables.events(s, dir)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_compact_io7").toString
-      try {
+      Scratch.sealedIn("graft_compact_io7") { case Seq(tmp) =>
         ev.select(col("event_id"), col("event_type"), col("value"))
           .repartition(32)
           .write.mode("overwrite").parquet(s"$tmp/small")
         s.read.parquet(s"$tmp/small")
           .coalesce(2)
           .write.mode("overwrite").parquet(s"$tmp/compact")
-        graft.operators.CacheScope.sealAfter(
-          s.read.parquet(s"$tmp/compact")
-            .groupBy(col("event_type"))
-            .agg(
-              count(lit(1)).as("n_events"),
-              round(sum(col("value")), 2).as("sum_value")))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        val root = java.nio.file.Paths.get(tmp)
-        java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+        s.read.parquet(s"$tmp/compact")
+          .groupBy(col("event_type"))
+          .agg(
+            count(lit(1)).as("n_events"),
+            round(sum(col("value")), 2).as("sum_value"))
       }
     },
     "io10_nested_pushdown" -> { (s, dir) =>
@@ -3728,22 +3721,14 @@ object SparkEntry {
           struct(
             col("value"), unix_micros(col("ts")).as("ts_us"))
             .as("metrics"))
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_nested_io10").toString
-      try {
+      Scratch.sealedIn("graft_nested_io10") { case Seq(tmp) =>
         ev.write.mode("overwrite").parquet(tmp)
-        graft.operators.CacheScope.sealAfter(
-          s.read.parquet(tmp)
-            .filter(col("meta.event_type") === "purchase")
-            .groupBy(col("meta.user_id").as("user_id"))
-            .agg(
-              count(lit(1)).as("n_events"),
-              round(sum(col("metrics.value")), 2).as("sum_value")))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        val root = java.nio.file.Paths.get(tmp)
-        java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+        s.read.parquet(tmp)
+          .filter(col("meta.event_type") === "purchase")
+          .groupBy(col("meta.user_id").as("user_id"))
+          .agg(
+            count(lit(1)).as("n_events"),
+            round(sum(col("metrics.value")), 2).as("sum_value"))
       }
     },
     "q44_transitions" -> { (s, dir) =>
@@ -3954,28 +3939,20 @@ object SparkEntry {
         .select(
           col("event_id"), unix_micros(col("ts")).as("ts_us"),
           col("event_type"), col("value"))
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_skip_io8").toString
-      try {
+      Scratch.sealedIn("graft_skip_io8") { case Seq(tmp) =>
         ev.repartitionByRange(8, col("ts_us"))
           .sortWithinPartitions(col("ts_us"))
           .write.mode("overwrite").parquet(tmp)
         // [2024-01-04, 2024-01-07): ~10% of the uniform 30-day span
-        graft.operators.CacheScope.sealAfter(
-          s.read.parquet(tmp)
-            .filter(col("ts_us") >= 1704326400000000L &&
-              col("ts_us") < 1704585600000000L)
-            .groupBy(col("event_type"))
-            .agg(
-              count(lit(1)).as("n_events"),
-              round(sum(col("value")), 2).as("sum_value"),
-              min(col("ts_us")).as("min_ts_us"),
-              max(col("ts_us")).as("max_ts_us")))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        val root = java.nio.file.Paths.get(tmp)
-        java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+        s.read.parquet(tmp)
+          .filter(col("ts_us") >= 1704326400000000L &&
+            col("ts_us") < 1704585600000000L)
+          .groupBy(col("event_type"))
+          .agg(
+            count(lit(1)).as("n_events"),
+            round(sum(col("value")), 2).as("sum_value"),
+            min(col("ts_us")).as("min_ts_us"),
+            max(col("ts_us")).as("max_ts_us"))
       }
     },
     "io9_zorder_skip" -> { (s, dir) =>
@@ -3992,9 +3969,7 @@ object SparkEntry {
       val ev = graft.sources.Tables.events(s, dir).select(
         col("event_id"), col("user_id"),
         dayofmonth(col("ts")).as("d"), col("event_type"), col("value"))
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_zorder_io9").toString
-      try {
+      Scratch.sealedIn("graft_zorder_io9") { case Seq(tmp) =>
         ev.withColumn(
             "z",
             graft.operators.Layout.zValue16(col("user_id"), col("d")))
@@ -4002,22 +3977,16 @@ object SparkEntry {
           .sortWithinPartitions(col("z"))
           .drop("z")
           .write.mode("overwrite").parquet(tmp)
-        graft.operators.CacheScope.sealAfter(
-          s.read.parquet(tmp)
-            .filter(col("user_id").between(3, 7) && col("d").between(4, 9))
-            .groupBy(col("event_type"))
-            .agg(
-              count(lit(1)).as("n_events"),
-              round(sum(col("value")), 2).as("sum_value"),
-              min(col("user_id")).as("min_u"),
-              max(col("user_id")).as("max_u"),
-              min(col("d")).as("min_d"),
-              max(col("d")).as("max_d")))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        val root = java.nio.file.Paths.get(tmp)
-        java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+        s.read.parquet(tmp)
+          .filter(col("user_id").between(3, 7) && col("d").between(4, 9))
+          .groupBy(col("event_type"))
+          .agg(
+            count(lit(1)).as("n_events"),
+            round(sum(col("value")), 2).as("sum_value"),
+            min(col("user_id")).as("min_u"),
+            max(col("user_id")).as("max_u"),
+            min(col("d")).as("min_d"),
+            max(col("d")).as("max_d"))
       }
     },
     "io11_deletion_vectors" -> { (s, dir) =>
@@ -4035,11 +4004,7 @@ object SparkEntry {
           md5(concat(col("doc_id").cast("string"), lit(":" + salt))),
           1, 5),
         16, 10).cast("long")
-      val baseTmp = java.nio.file.Files
-        .createTempDirectory("graft_io11_base").toString
-      val dvTmp = java.nio.file.Files
-        .createTempDirectory("graft_io11_dv").toString
-      try {
+      Scratch.sealedIn("graft_io11_base", "graft_io11_dv") { case Seq(baseTmp, dvTmp) =>
         docs.repartition(4).write.mode("overwrite").parquet(baseTmp)
         graft.sources.DeletionVectors.appendDeletes(
           docs.filter(pmod(draw("dv1"), lit(8L)) === 0L).select("doc_id"),
@@ -4047,21 +4012,13 @@ object SparkEntry {
         graft.sources.DeletionVectors.appendDeletes(
           docs.filter(pmod(draw("dv2"), lit(11L)) === 0L).select("doc_id"),
           dvTmp)
-        graft.operators.CacheScope.sealAfter(
-          graft.sources.DeletionVectors
-            .readMergeOnRead(s, baseTmp, dvTmp, "doc_id")
-            .filter(col("lang") === "en")
-            .groupBy(col("source"))
-            .agg(
-              count(lit(1)).as("n_docs"),
-              sum(col("n_chars")).as("sum_chars")))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        Seq(baseTmp, dvTmp).foreach { d =>
-          val root = java.nio.file.Paths.get(d)
-          java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-            .foreach(p => java.nio.file.Files.deleteIfExists(p))
-        }
+        graft.sources.DeletionVectors
+          .readMergeOnRead(s, baseTmp, dvTmp, "doc_id")
+          .filter(col("lang") === "en")
+          .groupBy(col("source"))
+          .agg(
+            count(lit(1)).as("n_docs"),
+            sum(col("n_chars")).as("sum_chars"))
       }
     },
     "io13_dv_fold_compact" -> { (s, dir) =>
@@ -4079,25 +4036,19 @@ object SparkEntry {
           md5(concat(col("doc_id").cast("string"), lit(":" + salt))),
           1, 5),
         16, 10).cast("long")
-      val baseTmp = java.nio.file.Files
-        .createTempDirectory("graft_io13_base").toString
-      val dvTmp = java.nio.file.Files
-        .createTempDirectory("graft_io13_dv").toString
-      val compTmp = java.nio.file.Files
-        .createTempDirectory("graft_io13_comp").toString
-      try {
-        docs.repartition(4).write.mode("overwrite").parquet(baseTmp)
-        graft.sources.DeletionVectors.appendDeletes(
-          docs.filter(pmod(draw("dv1"), lit(8L)) === 0L).select("doc_id"),
-          dvTmp)
-        graft.sources.DeletionVectors.appendDeletes(
-          docs.filter(pmod(draw("dv2"), lit(11L)) === 0L).select("doc_id"),
-          dvTmp)
-        graft.sources.DeletionVectors.foldCompact(
-          s, baseTmp, dvTmp, "doc_id", compTmp)
-        val dvRows = s.read.parquet(dvTmp)
-          .agg(count(lit(1)).as("dv_rows"))
-        graft.operators.CacheScope.sealAfter(
+      Scratch.sealedIn("graft_io13_base", "graft_io13_dv", "graft_io13_comp") {
+        case Seq(baseTmp, dvTmp, compTmp) =>
+          docs.repartition(4).write.mode("overwrite").parquet(baseTmp)
+          graft.sources.DeletionVectors.appendDeletes(
+            docs.filter(pmod(draw("dv1"), lit(8L)) === 0L).select("doc_id"),
+            dvTmp)
+          graft.sources.DeletionVectors.appendDeletes(
+            docs.filter(pmod(draw("dv2"), lit(11L)) === 0L).select("doc_id"),
+            dvTmp)
+          graft.sources.DeletionVectors.foldCompact(
+            s, baseTmp, dvTmp, "doc_id", compTmp)
+          val dvRows = s.read.parquet(dvTmp)
+            .agg(count(lit(1)).as("dv_rows"))
           graft.sources.DeletionVectors
             .readMergeOnRead(s, compTmp, dvTmp, "doc_id")
             .filter(col("lang") === "en")
@@ -4105,14 +4056,7 @@ object SparkEntry {
             .agg(
               count(lit(1)).as("n_docs"),
               sum(col("n_chars")).as("sum_chars"))
-            .crossJoin(broadcast(dvRows)))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        Seq(baseTmp, dvTmp, compTmp).foreach { d =>
-          val root = java.nio.file.Paths.get(d)
-          java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-            .foreach(p => java.nio.file.Files.deleteIfExists(p))
-        }
+            .crossJoin(broadcast(dvRows))
       }
     },
     "io12_time_travel" -> { (s, dir) =>
@@ -4124,25 +4068,17 @@ object SparkEntry {
       // rows must be invisible even though its files sit in the same
       // tree. The oracle replays the batch rule at the cut.
       val docs = t(s, dir, "documents")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_io12").toString
-      try {
+      Scratch.sealedIn("graft_io12") { case Seq(root) =>
         (0 to 2).foreach { b =>
           graft.sources.Snapshots.commit(
             docs.filter(pmod(col("doc_id"), lit(3L)) === b),
             root, version = b + 1)
         }
-        graft.operators.CacheScope.sealAfter(
-          graft.sources.Snapshots.readVersion(s, root, asOf = 2)
-            .groupBy(col("lang"))
-            .agg(
-              count(lit(1)).as("n_docs"),
-              sum(col("n_chars")).as("sum_chars")))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        val rootP = java.nio.file.Paths.get(root)
-        java.nio.file.Files.walk(rootP).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+        graft.sources.Snapshots.readVersion(s, root, asOf = 2)
+          .groupBy(col("lang"))
+          .agg(
+            count(lit(1)).as("n_docs"),
+            sum(col("n_chars")).as("sum_chars"))
       }
     },
     "io12b_snapshot_expire" -> { (s, dir) =>
@@ -4157,9 +4093,7 @@ object SparkEntry {
       // column. Expired-read-fails + orphan-swept + dirs-deleted are
       // spec-locked (Wave12).
       val docs = t(s, dir, "documents")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_io12b").toString
-      try {
+      Scratch.sealedIn("graft_io12b") { case Seq(root) =>
         (0 to 2).foreach { b =>
           graft.sources.Snapshots.commit(
             docs.filter(pmod(col("doc_id"), lit(3L)) === b),
@@ -4170,18 +4104,12 @@ object SparkEntry {
         graft.sources.Snapshots.expire(s, root, cut = 2)
         val mrows = s.read.parquet(s"$root/manifest")
           .agg(count(lit(1)).as("manifest_rows"))
-        graft.operators.CacheScope.sealAfter(
-          graft.sources.Snapshots.readVersion(s, root, asOf = 3)
-            .groupBy(col("lang"))
-            .agg(
-              count(lit(1)).as("n_docs"),
-              sum(col("n_chars")).as("sum_chars"))
-            .crossJoin(broadcast(mrows)))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        val rootP = java.nio.file.Paths.get(root)
-        java.nio.file.Files.walk(rootP).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+        graft.sources.Snapshots.readVersion(s, root, asOf = 3)
+          .groupBy(col("lang"))
+          .agg(
+            count(lit(1)).as("n_docs"),
+            sum(col("n_chars")).as("sum_chars"))
+          .crossJoin(broadcast(mrows))
       }
     },
     "io12c_atomic_expire" -> { (s, dir) =>
@@ -4200,9 +4128,7 @@ object SparkEntry {
       // between checkpoint/publish/swap/sweep) are spec-locked in
       // AtomicSnapshotSpec.
       val docs = t(s, dir, "documents")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_io12c").toString
-      try {
+      Scratch.sealedIn("graft_io12c") { case Seq(root) =>
         (0 to 2).foreach { b =>
           graft.sources.Snapshots.commitPtr(
             docs.filter(pmod(col("doc_id"), lit(3L)) === b),
@@ -4222,19 +4148,13 @@ object SparkEntry {
           .agg(count(lit(1)).as("manifest_rows"))
         val nGens = new java.io.File(s"$root/manifest").listFiles()
           .count(f => f.isDirectory && f.getName.startsWith("g="))
-        graft.operators.CacheScope.sealAfter(
-          graft.sources.Snapshots.readVersionPtr(s, root, asOf = 3)
-            .groupBy(col("lang"))
-            .agg(
-              count(lit(1)).as("n_docs"),
-              sum(col("n_chars")).as("sum_chars"))
-            .crossJoin(broadcast(mrows))
-            .withColumn("n_gens", lit(nGens.toLong)))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        val rootP = java.nio.file.Paths.get(root)
-        java.nio.file.Files.walk(rootP).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+        graft.sources.Snapshots.readVersionPtr(s, root, asOf = 3)
+          .groupBy(col("lang"))
+          .agg(
+            count(lit(1)).as("n_docs"),
+            sum(col("n_chars")).as("sum_chars"))
+          .crossJoin(broadcast(mrows))
+          .withColumn("n_gens", lit(nGens.toLong))
       }
     },
     "io14_changes_since" -> { (s, dir) =>
@@ -4247,9 +4167,7 @@ object SparkEntry {
       // returns the documented EMPTY frame (schema intact, zero rows);
       // its count rides the output as a hash-locked column.
       val docs = t(s, dir, "documents")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_io14").toString
-      try {
+      Scratch.sealedIn("graft_io14") { case Seq(root) =>
         (0 to 2).foreach { b =>
           graft.sources.Snapshots.commitPtr(
             docs.filter(pmod(col("doc_id"), lit(3L)) === b),
@@ -4259,18 +4177,12 @@ object SparkEntry {
           graft.sources.Snapshots.changesSincePtr(s, root, 1, 3)
         val emptyPoll =
           graft.sources.Snapshots.changesSincePtr(s, root, 3, 9).count()
-        graft.operators.CacheScope.sealAfter(
-          changes
-            .groupBy(col("lang"))
-            .agg(
-              count(lit(1)).as("n_docs"),
-              sum(col("n_chars")).as("sum_chars"))
-            .withColumn("empty_poll_rows", lit(emptyPoll)))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        val rootP = java.nio.file.Paths.get(root)
-        java.nio.file.Files.walk(rootP).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+        changes
+          .groupBy(col("lang"))
+          .agg(
+            count(lit(1)).as("n_docs"),
+            sum(col("n_chars")).as("sum_chars"))
+          .withColumn("empty_poll_rows", lit(emptyPoll))
       }
     },
     "io15_merge_upsert" -> { (s, dir) =>
@@ -4285,9 +4197,7 @@ object SparkEntry {
       // hash-matches the SQL merge semantics: matched rows replaced,
       // unmatched kept, new keys inserted.
       val docs = t(s, dir, "documents")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_io15").toString
-      try {
+      Scratch.sealedIn("graft_io15") { case Seq(root) =>
         val thr = docs.agg(max(col("doc_id"))).collect()(0).getLong(0) / 2
         val base = docs.filter(pmod(col("doc_id"), lit(3L)) < 2)
         graft.sources.LakeTable.append(
@@ -4303,19 +4213,13 @@ object SparkEntry {
           .withColumn("doc_id", col("doc_id") + 1000000000L)
         val rep = graft.sources.LakeTable.merge(
           updates.unionByName(inserts), root, "doc_id")
-        graft.operators.CacheScope.sealAfter(
-          graft.sources.LakeTable.read(s, root)
-            .groupBy(col("lang"))
-            .agg(
-              count(lit(1)).as("n_docs"),
-              sum(col("n_chars")).as("sum_chars"))
-            .withColumn(
-              "untouched_batches", lit(rep.untouched.size.toLong)))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        val rootP = java.nio.file.Paths.get(root)
-        java.nio.file.Files.walk(rootP).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+        graft.sources.LakeTable.read(s, root)
+          .groupBy(col("lang"))
+          .agg(
+            count(lit(1)).as("n_docs"),
+            sum(col("n_chars")).as("sum_chars"))
+          .withColumn(
+            "untouched_batches", lit(rep.untouched.size.toLong))
       }
     },
     "io16_stats_pruned_scan" -> { (s, dir) =>
@@ -4327,9 +4231,7 @@ object SparkEntry {
       // intersection in the ORACLE (b.kmax >= lo AND b.kmin <= hi), so
       // the pruning rule itself is hash-locked, not a brittle literal.
       val orders = t(s, dir, "orders")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_io16").toString
-      try {
+      Scratch.sealedIn("graft_io16") { case Seq(root) =>
         val mx = orders.agg(max(col("o_orderkey"))).collect()(0).getLong(0)
         val batchCol =
           least(lit(3L), expr(s"o_orderkey * 4 div ${mx + 1}"))
@@ -4340,19 +4242,13 @@ object SparkEntry {
         val hi = mx / 4
         val kept = graft.sources.LakeTable.planPruned(
           graft.sources.LakeTable.currentRows(s, root), 1L, hi).size
-        graft.operators.CacheScope.sealAfter(
-          graft.sources.LakeTable
-            .readPruned(s, root, "o_orderkey", 1L, hi)
-            .groupBy(col("o_orderstatus"))
-            .agg(
-              count(lit(1)).as("n_orders"),
-              round(sum(col("o_totalprice")), 2).as("sum_price"))
-            .withColumn("batches_read", lit(kept.toLong)))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        val rootP = java.nio.file.Paths.get(root)
-        java.nio.file.Files.walk(rootP).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+        graft.sources.LakeTable
+          .readPruned(s, root, "o_orderkey", 1L, hi)
+          .groupBy(col("o_orderstatus"))
+          .agg(
+            count(lit(1)).as("n_orders"),
+            round(sum(col("o_totalprice")), 2).as("sum_price"))
+          .withColumn("batches_read", lit(kept.toLong))
       }
     },
     "st25_feed_consume" -> { (s, dir) =>
@@ -4367,53 +4263,43 @@ object SparkEntry {
       // caught-up tick is a no-op. The read-back hash-matches the full
       // table: zero loss, zero duplication, offsets at head.
       val docs = t(s, dir, "documents")
-      val dirs = Seq("graft_st25b", "graft_st25c", "graft_st25o")
-        .map(p => java.nio.file.Files.createTempDirectory(p).toString)
-      val (bronze, consumer, out) = (dirs(0), dirs(1), dirs(2))
-      try {
-        val sp = s
-        import sp.implicits._
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = sp.sqlContext
-        def sink(df: DataFrame, from: Int, to: Int): Unit =
-          df.withColumn("feed_to", lit(to))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("feed_to")
-            .parquet(out)
-        graft.sources.Snapshots.commitPtr(
-          docs.filter(pmod(col("doc_id"), lit(3L)) === 0), bronze, 1)
-        val ticks = MemoryStream[Int]
-        val q = graft.streaming.ChangeFeed.streamingConsumer(
-          ticks.toDS().toDF(), bronze, consumer)(sink)
-        try {
-          ticks.addData(1); q.processAllAvailable() // consumes (0, 1]
+      Scratch.sealedIn("graft_st25b", "graft_st25c", "graft_st25o") {
+        case Seq(bronze, consumer, out) =>
+          val sp = s
+          import sp.implicits._
+          import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+          implicit val sqlCtx: org.apache.spark.sql.SQLContext = sp.sqlContext
+          def sink(df: DataFrame, from: Int, to: Int): Unit =
+            df.withColumn("feed_to", lit(to))
+              .write.mode("overwrite")
+              .option("partitionOverwriteMode", "dynamic")
+              .partitionBy("feed_to")
+              .parquet(out)
           graft.sources.Snapshots.commitPtr(
-            docs.filter(pmod(col("doc_id"), lit(3L)) === 1), bronze, 2)
-          graft.sources.Snapshots.commitPtr(
-            docs.filter(pmod(col("doc_id"), lit(3L)) === 2), bronze, 3)
-          // the crash: (1, 3] was processed but the offset commit died
-          sink(graft.sources.Snapshots
-            .changesSincePtr(s, bronze, 1, 3), 1, 3)
-          ticks.addData(2); q.processAllAvailable() // redelivers (1, 3]
-          ticks.addData(3); q.processAllAvailable() // caught up: no-op
-        } finally q.stop()
-        val off = graft.streaming.ChangeFeed
-          .committedOffset(s, consumer).toLong
-        graft.operators.CacheScope.sealAfter(
+            docs.filter(pmod(col("doc_id"), lit(3L)) === 0), bronze, 1)
+          val ticks = MemoryStream[Int]
+          val q = graft.streaming.ChangeFeed.streamingConsumer(
+            ticks.toDS().toDF(), bronze, consumer)(sink)
+          try {
+            ticks.addData(1); q.processAllAvailable() // consumes (0, 1]
+            graft.sources.Snapshots.commitPtr(
+              docs.filter(pmod(col("doc_id"), lit(3L)) === 1), bronze, 2)
+            graft.sources.Snapshots.commitPtr(
+              docs.filter(pmod(col("doc_id"), lit(3L)) === 2), bronze, 3)
+            // the crash: (1, 3] was processed but the offset commit died
+            sink(graft.sources.Snapshots
+              .changesSincePtr(s, bronze, 1, 3), 1, 3)
+            ticks.addData(2); q.processAllAvailable() // redelivers (1, 3]
+            ticks.addData(3); q.processAllAvailable() // caught up: no-op
+          } finally q.stop()
+          val off = graft.streaming.ChangeFeed
+            .committedOffset(s, consumer).toLong
           s.read.parquet(out)
             .groupBy(col("lang"))
             .agg(
               count(lit(1)).as("n_docs"),
               sum(col("n_chars")).as("sum_chars"))
-            .withColumn("final_offset", lit(off)))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        dirs.foreach { d =>
-          java.nio.file.Files.walk(java.nio.file.Paths.get(d))
-            .iterator().asScala.toSeq.reverse
-            .foreach(p => java.nio.file.Files.deleteIfExists(p))
-        }
+            .withColumn("final_offset", lit(off))
       }
     },
     "st30_cdf_source" -> { (s, dir) =>
@@ -4433,67 +4319,64 @@ object SparkEntry {
       // CHECKPOINT'S OWN offset log — the integration the bespoke
       // consumerDir could not give.
       val docs = t(s, dir, "documents")
-      val dirs = Seq("graft_st30l", "graft_st30k", "graft_st30o")
-        .map(p => java.nio.file.Files.createTempDirectory(p).toString)
-      val (lake, ckpt, out) = (dirs(0), dirs(1), dirs(2))
-      try {
-        val thr = docs.agg(max(col("doc_id"))).collect()(0).getLong(0) / 2
-        val base = docs.filter(pmod(col("doc_id"), lit(3L)) < 2)
-        graft.sources.LakeTable.append(
-          base.filter(col("doc_id") <= thr), lake, "doc_id") // g1
-        graft.sources.LakeTable.append(
-          base.filter(col("doc_id") > thr), lake, "doc_id") // g2
-        // one kill-and-restart leg: a FRESH query on the SAME
-        // checkpoint, drained and stopped (range-keyed idempotent
-        // sink: a replayed batch re-plans the same (start, end] and
-        // overwrites its own generation dir)
-        def leg(): Unit = {
-          val q = s.readStream.format("graft-cdf")
-            .option("key", "doc_id").load(lake)
-            .writeStream
-            .option("checkpointLocation", ckpt)
-            .foreachBatch { (df: DataFrame, _: Long) =>
-              df.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_generation")
-                .parquet(out)
-              ()
-            }
-            .start()
-          try q.processAllAvailable()
-          finally q.stop()
-        }
-        leg() // bootstrap at g2
-        val updates = docs
-          .filter(pmod(col("doc_id"), lit(6L)) === 0 &&
-            col("doc_id") <= thr)
-          .withColumn("n_chars", col("n_chars") + 1000L)
-        val inserts = docs
-          .filter(pmod(col("doc_id"), lit(3L)) === 2)
-          .withColumn("doc_id", col("doc_id") + 1000000000L)
-        graft.sources.LakeTable.merge(
-          updates.unionByName(inserts), lake, "doc_id") // g3
-        leg() // resumes from ckpt: (g2, g3]
-        graft.sources.LakeTable.applyChanges(
-          docs.filter(pmod(col("doc_id"), lit(12L)) === 3)
-            .withColumn("op", lit("D")),
-          lake, "doc_id") // g4
-        leg() // (g3, g4]
-        leg() // caught up: no batch
-        // the committed offset from the CHECKPOINT's offset log: the
-        // newest offsets file's last line is the generation name
-        val offDir = java.nio.file.Paths.get(s"$ckpt/offsets")
-        val last = java.nio.file.Files.list(offDir).iterator()
-        val newest = {
-          import scala.jdk.CollectionConverters._
-          last.asScala.toSeq
-            .filter(_.getFileName.toString.forall(_.isDigit))
-            .maxBy(_.getFileName.toString.toLong)
-        }
-        val offOrd = graft.sources.LakeTable.ordinal(
-          new String(java.nio.file.Files.readAllBytes(newest), "UTF-8")
-            .split("\n").filter(_.startsWith("g=")).last.trim)
-        graft.operators.CacheScope.sealAfter(
+      Scratch.sealedIn("graft_st30l", "graft_st30k", "graft_st30o") {
+        case Seq(lake, ckpt, out) =>
+          val thr = docs.agg(max(col("doc_id"))).collect()(0).getLong(0) / 2
+          val base = docs.filter(pmod(col("doc_id"), lit(3L)) < 2)
+          graft.sources.LakeTable.append(
+            base.filter(col("doc_id") <= thr), lake, "doc_id") // g1
+          graft.sources.LakeTable.append(
+            base.filter(col("doc_id") > thr), lake, "doc_id") // g2
+          // one kill-and-restart leg: a FRESH query on the SAME
+          // checkpoint, drained and stopped (range-keyed idempotent
+          // sink: a replayed batch re-plans the same (start, end] and
+          // overwrites its own generation dir)
+          def leg(): Unit = {
+            val q = s.readStream.format("graft-cdf")
+              .option("key", "doc_id").load(lake)
+              .writeStream
+              .option("checkpointLocation", ckpt)
+              .foreachBatch { (df: DataFrame, _: Long) =>
+                df.write.mode("overwrite")
+                  .option("partitionOverwriteMode", "dynamic")
+                  .partitionBy("_generation")
+                  .parquet(out)
+                ()
+              }
+              .start()
+            try q.processAllAvailable()
+            finally q.stop()
+          }
+          leg() // bootstrap at g2
+          val updates = docs
+            .filter(pmod(col("doc_id"), lit(6L)) === 0 &&
+              col("doc_id") <= thr)
+            .withColumn("n_chars", col("n_chars") + 1000L)
+          val inserts = docs
+            .filter(pmod(col("doc_id"), lit(3L)) === 2)
+            .withColumn("doc_id", col("doc_id") + 1000000000L)
+          graft.sources.LakeTable.merge(
+            updates.unionByName(inserts), lake, "doc_id") // g3
+          leg() // resumes from ckpt: (g2, g3]
+          graft.sources.LakeTable.applyChanges(
+            docs.filter(pmod(col("doc_id"), lit(12L)) === 3)
+              .withColumn("op", lit("D")),
+            lake, "doc_id") // g4
+          leg() // (g3, g4]
+          leg() // caught up: no batch
+          // the committed offset from the CHECKPOINT's offset log: the
+          // newest offsets file's last line is the generation name
+          val offDir = java.nio.file.Paths.get(s"$ckpt/offsets")
+          val last = java.nio.file.Files.list(offDir).iterator()
+          val newest = {
+            import scala.jdk.CollectionConverters._
+            last.asScala.toSeq
+              .filter(_.getFileName.toString.forall(_.isDigit))
+              .maxBy(_.getFileName.toString.toLong)
+          }
+          val offOrd = graft.sources.LakeTable.ordinal(
+            new String(java.nio.file.Files.readAllBytes(newest), "UTF-8")
+              .split("\n").filter(_.startsWith("g=")).last.trim)
           s.read.parquet(out)
             .withColumn("sign",
               when(col("_change_type").isin("insert", "update_post"), 1L)
@@ -4502,14 +4385,7 @@ object SparkEntry {
             .agg(
               sum(col("sign")).as("n_docs"),
               sum(col("sign") * col("n_chars")).as("sum_chars"))
-            .withColumn("final_gen", lit(offOrd)))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        dirs.foreach { d =>
-          java.nio.file.Files.walk(java.nio.file.Paths.get(d))
-            .iterator().asScala.toSeq.reverse
-            .foreach(p => java.nio.file.Files.deleteIfExists(p))
-        }
+            .withColumn("final_gen", lit(offOrd))
       }
     },
     "st29_lake_feed_stream" -> { (s, dir) =>
@@ -4529,61 +4405,58 @@ object SparkEntry {
       // must equal the live table state exactly: zero loss, zero
       // duplication, offset at the head generation.
       val docs = t(s, dir, "documents")
-      val dirs = Seq("graft_st29l", "graft_st29c", "graft_st29o")
-        .map(p => java.nio.file.Files.createTempDirectory(p).toString)
-      val (lake, consumer, out) = (dirs(0), dirs(1), dirs(2))
-      try {
-        val sp = s
-        import sp.implicits._
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = sp.sqlContext
-        def sink(df: DataFrame, from: Option[String], to: String): Unit =
-          df.withColumn(
-            "feed_to", lit(graft.sources.LakeTable.ordinal(to)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("feed_to")
-            .parquet(out)
-        val thr = docs.agg(max(col("doc_id"))).collect()(0).getLong(0) / 2
-        val base = docs.filter(pmod(col("doc_id"), lit(3L)) < 2)
-        graft.sources.LakeTable.append(
-          base.filter(col("doc_id") <= thr), lake, "doc_id") // g1
-        graft.sources.LakeTable.append(
-          base.filter(col("doc_id") > thr), lake, "doc_id") // g2
-        val ticks = MemoryStream[Int]
-        val q = graft.streaming.LakeChangeFeed.streamingConsumer(
-          ticks.toDS().toDF(), lake, "doc_id", consumer)(sink)
-        try {
-          ticks.addData(1); q.processAllAvailable() // bootstrap at g2
-          // merge wave → g3 (the io22 shape: updates + inserts)
-          val updates = docs
-            .filter(pmod(col("doc_id"), lit(6L)) === 0 &&
-              col("doc_id") <= thr)
-            .withColumn("n_chars", col("n_chars") + 1000L)
-          val inserts = docs
-            .filter(pmod(col("doc_id"), lit(3L)) === 2)
-            .withColumn("doc_id", col("doc_id") + 1000000000L)
-          graft.sources.LakeTable.merge(
-            updates.unionByName(inserts), lake, "doc_id")
-          // the crash: (g2, g3] was processed but the offset commit died
-          val from = graft.streaming.LakeChangeFeed
-            .committedGen(s, consumer).get
-          val head = graft.sources.LakeTable.currentName(s, lake).get
-          sink(graft.sources.LakeTable
-            .changesBetween(s, lake, "doc_id", from, head),
-            Some(from), head)
-          ticks.addData(2); q.processAllAvailable() // redelivers (g2, g3]
-          // CDC delete wave → g4 (deletes are −rows in the feed)
-          graft.sources.LakeTable.applyChanges(
-            docs.filter(pmod(col("doc_id"), lit(12L)) === 3)
-              .withColumn("op", lit("D")),
-            lake, "doc_id")
-          ticks.addData(3); q.processAllAvailable() // consumes (g3, g4]
-          ticks.addData(4); q.processAllAvailable() // caught up: no-op
-        } finally q.stop()
-        val offOrd = graft.sources.LakeTable.ordinal(
-          graft.streaming.LakeChangeFeed.committedGen(s, consumer).get)
-        graft.operators.CacheScope.sealAfter(
+      Scratch.sealedIn("graft_st29l", "graft_st29c", "graft_st29o") {
+        case Seq(lake, consumer, out) =>
+          val sp = s
+          import sp.implicits._
+          import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+          implicit val sqlCtx: org.apache.spark.sql.SQLContext = sp.sqlContext
+          def sink(df: DataFrame, from: Option[String], to: String): Unit =
+            df.withColumn(
+              "feed_to", lit(graft.sources.LakeTable.ordinal(to)))
+              .write.mode("overwrite")
+              .option("partitionOverwriteMode", "dynamic")
+              .partitionBy("feed_to")
+              .parquet(out)
+          val thr = docs.agg(max(col("doc_id"))).collect()(0).getLong(0) / 2
+          val base = docs.filter(pmod(col("doc_id"), lit(3L)) < 2)
+          graft.sources.LakeTable.append(
+            base.filter(col("doc_id") <= thr), lake, "doc_id") // g1
+          graft.sources.LakeTable.append(
+            base.filter(col("doc_id") > thr), lake, "doc_id") // g2
+          val ticks = MemoryStream[Int]
+          val q = graft.streaming.LakeChangeFeed.streamingConsumer(
+            ticks.toDS().toDF(), lake, "doc_id", consumer)(sink)
+          try {
+            ticks.addData(1); q.processAllAvailable() // bootstrap at g2
+            // merge wave → g3 (the io22 shape: updates + inserts)
+            val updates = docs
+              .filter(pmod(col("doc_id"), lit(6L)) === 0 &&
+                col("doc_id") <= thr)
+              .withColumn("n_chars", col("n_chars") + 1000L)
+            val inserts = docs
+              .filter(pmod(col("doc_id"), lit(3L)) === 2)
+              .withColumn("doc_id", col("doc_id") + 1000000000L)
+            graft.sources.LakeTable.merge(
+              updates.unionByName(inserts), lake, "doc_id")
+            // the crash: (g2, g3] was processed but the offset commit died
+            val from = graft.streaming.LakeChangeFeed
+              .committedGen(s, consumer).get
+            val head = graft.sources.LakeTable.currentName(s, lake).get
+            sink(graft.sources.LakeTable
+              .changesBetween(s, lake, "doc_id", from, head),
+              Some(from), head)
+            ticks.addData(2); q.processAllAvailable() // redelivers (g2, g3]
+            // CDC delete wave → g4 (deletes are −rows in the feed)
+            graft.sources.LakeTable.applyChanges(
+              docs.filter(pmod(col("doc_id"), lit(12L)) === 3)
+                .withColumn("op", lit("D")),
+              lake, "doc_id")
+            ticks.addData(3); q.processAllAvailable() // consumes (g3, g4]
+            ticks.addData(4); q.processAllAvailable() // caught up: no-op
+          } finally q.stop()
+          val offOrd = graft.sources.LakeTable.ordinal(
+            graft.streaming.LakeChangeFeed.committedGen(s, consumer).get)
           s.read.parquet(out)
             .withColumn("sign",
               when(col("_change_type").isin("insert", "update_post"), 1L)
@@ -4592,14 +4465,7 @@ object SparkEntry {
             .agg(
               sum(col("sign")).as("n_docs"),
               sum(col("sign") * col("n_chars")).as("sum_chars"))
-            .withColumn("final_gen", lit(offOrd)))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        dirs.foreach { d =>
-          java.nio.file.Files.walk(java.nio.file.Paths.get(d))
-            .iterator().asScala.toSeq.reverse
-            .foreach(p => java.nio.file.Files.deleteIfExists(p))
-        }
+            .withColumn("final_gen", lit(offOrd))
       }
     },
     "p13_medallion_merge" -> { (s, dir) =>
@@ -4615,54 +4481,44 @@ object SparkEntry {
       // hash-matches the from-scratch latest-state SQL; silver_batches
       // = 1 locks the rewrite consolidation.
       val docs = t(s, dir, "documents")
-      val dirs = Seq("graft_p13b", "graft_p13c", "graft_p13s")
-        .map(p => java.nio.file.Files.createTempDirectory(p).toString)
-      val (bronze, consumer, silver) = (dirs(0), dirs(1), dirs(2))
-      try {
-        graft.sources.Snapshots.commitPtr(docs, bronze, 1)
-        var first = true
-        def applyPoll(from: Int, to: Int): Unit = {
-          val delta = graft.sources.Snapshots
-            .changesSinceVersionedPtr(s, bronze, from, to)
-          val dataCols = delta.columns.filter(_ != "_commit_version")
-          val latest = delta.groupBy(col("doc_id"))
-            .agg(max_by(
-              struct(dataCols.map(col).toIndexedSeq: _*),
-              col("_commit_version")).as("r"))
-            .select(col("r.*"))
-          if (first) {
-            graft.sources.LakeTable.append(latest, silver, "doc_id")
-            first = false
-          } else graft.sources.LakeTable.merge(latest, silver, "doc_id")
-        }
-        graft.streaming.ChangeFeed.poll(s, bronze, consumer) {
-          (_, from, to) => applyPoll(from, to)
-        }
-        graft.sources.Snapshots.commitPtr(
-          docs.filter(pmod(col("doc_id"), lit(2L)) === 0)
-            .withColumn("n_chars", col("n_chars") + 10L), bronze, 2)
-        graft.sources.Snapshots.commitPtr(
-          docs.filter(pmod(col("doc_id"), lit(4L)) === 0)
-            .withColumn("n_chars", col("n_chars") + 100L), bronze, 3)
-        graft.streaming.ChangeFeed.poll(s, bronze, consumer) {
-          (_, from, to) => applyPoll(from, to)
-        }
-        val nBatches = graft.sources.LakeTable
-          .currentRows(s, silver).size.toLong
-        graft.operators.CacheScope.sealAfter(
+      Scratch.sealedIn("graft_p13b", "graft_p13c", "graft_p13s") {
+        case Seq(bronze, consumer, silver) =>
+          graft.sources.Snapshots.commitPtr(docs, bronze, 1)
+          var first = true
+          def applyPoll(from: Int, to: Int): Unit = {
+            val delta = graft.sources.Snapshots
+              .changesSinceVersionedPtr(s, bronze, from, to)
+            val dataCols = delta.columns.filter(_ != "_commit_version")
+            val latest = delta.groupBy(col("doc_id"))
+              .agg(max_by(
+                struct(dataCols.map(col).toIndexedSeq: _*),
+                col("_commit_version")).as("r"))
+              .select(col("r.*"))
+            if (first) {
+              graft.sources.LakeTable.append(latest, silver, "doc_id")
+              first = false
+            } else graft.sources.LakeTable.merge(latest, silver, "doc_id")
+          }
+          graft.streaming.ChangeFeed.poll(s, bronze, consumer) {
+            (_, from, to) => applyPoll(from, to)
+          }
+          graft.sources.Snapshots.commitPtr(
+            docs.filter(pmod(col("doc_id"), lit(2L)) === 0)
+              .withColumn("n_chars", col("n_chars") + 10L), bronze, 2)
+          graft.sources.Snapshots.commitPtr(
+            docs.filter(pmod(col("doc_id"), lit(4L)) === 0)
+              .withColumn("n_chars", col("n_chars") + 100L), bronze, 3)
+          graft.streaming.ChangeFeed.poll(s, bronze, consumer) {
+            (_, from, to) => applyPoll(from, to)
+          }
+          val nBatches = graft.sources.LakeTable
+            .currentRows(s, silver).size.toLong
           graft.sources.LakeTable.read(s, silver)
             .groupBy(col("lang"))
             .agg(
               count(lit(1)).as("n_docs"),
               sum(col("n_chars")).as("sum_chars"))
-            .withColumn("silver_batches", lit(nBatches)))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        dirs.foreach { d =>
-          java.nio.file.Files.walk(java.nio.file.Paths.get(d))
-            .iterator().asScala.toSeq.reverse
-            .foreach(p => java.nio.file.Files.deleteIfExists(p))
-        }
+            .withColumn("silver_batches", lit(nBatches))
       }
     },
     "io17_compact_cluster" -> { (s, dir) =>
@@ -4675,9 +4531,7 @@ object SparkEntry {
       // arithmetic and intersection rule — the clustering benefit
       // itself is hash-locked, not asserted.
       val docs = t(s, dir, "documents")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_io17").toString
-      try {
+      Scratch.sealedIn("graft_io17") { case Seq(root) =>
         (0L to 2L).foreach { b =>
           graft.sources.LakeTable.append(
             docs.filter(pmod(col("doc_id"), lit(3L)) === b),
@@ -4691,21 +4545,15 @@ object SparkEntry {
         graft.sources.LakeTable.compact(s, root, "doc_id", Seq(s1, s2))
         val rows = graft.sources.LakeTable.currentRows(s, root)
         val after = graft.sources.LakeTable.planPruned(rows, s1, s2 - 1).size
-        graft.operators.CacheScope.sealAfter(
-          graft.sources.LakeTable
-            .readPruned(s, root, "doc_id", s1, s2 - 1)
-            .groupBy(col("lang"))
-            .agg(
-              count(lit(1)).as("n_docs"),
-              sum(col("n_chars")).as("sum_chars"))
-            .withColumn("batches_before", lit(before.toLong))
-            .withColumn("batches_after", lit(after.toLong))
-            .withColumn("batches_total", lit(rows.size.toLong)))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        val rootP = java.nio.file.Paths.get(root)
-        java.nio.file.Files.walk(rootP).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+        graft.sources.LakeTable
+          .readPruned(s, root, "doc_id", s1, s2 - 1)
+          .groupBy(col("lang"))
+          .agg(
+            count(lit(1)).as("n_docs"),
+            sum(col("n_chars")).as("sum_chars"))
+          .withColumn("batches_before", lit(before.toLong))
+          .withColumn("batches_after", lit(after.toLong))
+          .withColumn("batches_total", lit(rows.size.toLong))
       }
     },
     "io18_cdc_apply" -> { (s, dir) =>
@@ -4718,9 +4566,7 @@ object SparkEntry {
       // drops victims, restates matches, and inserts the rest in one
       // full-outer pass over touched ∪ changes.
       val docs = t(s, dir, "documents")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_io18").toString
-      try {
+      Scratch.sealedIn("graft_io18") { case Seq(root) =>
         val thr = docs.agg(max(col("doc_id"))).collect()(0).getLong(0) / 2
         graft.sources.LakeTable.append(
           docs.filter(col("doc_id") <= thr), root, "doc_id")
@@ -4741,19 +4587,13 @@ object SparkEntry {
           .withColumn("op", lit("U"))
         val rep = graft.sources.LakeTable.applyChanges(
           dels.unionByName(upds).unionByName(ins), root, "doc_id")
-        graft.operators.CacheScope.sealAfter(
-          graft.sources.LakeTable.read(s, root)
-            .groupBy(col("lang"))
-            .agg(
-              count(lit(1)).as("n_docs"),
-              sum(col("n_chars")).as("sum_chars"))
-            .withColumn(
-              "untouched_batches", lit(rep.untouched.size.toLong)))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        val rootP = java.nio.file.Paths.get(root)
-        java.nio.file.Files.walk(rootP).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+        graft.sources.LakeTable.read(s, root)
+          .groupBy(col("lang"))
+          .agg(
+            count(lit(1)).as("n_docs"),
+            sum(col("n_chars")).as("sum_chars"))
+          .withColumn(
+            "untouched_batches", lit(rep.untouched.size.toLong))
       }
     },
     "io19_occ_merge" -> { (s, dir) =>
@@ -4768,9 +4608,7 @@ object SparkEntry {
       // refused, not silently applied. The free-running 4-writer race
       // is spec-locked (LakeTableSpec).
       val docs = t(s, dir, "documents")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_io19").toString
-      try {
+      Scratch.sealedIn("graft_io19") { case Seq(root) =>
         graft.sources.LakeTable.append(docs, root, "doc_id")
         val (rowsA, obsA) = graft.sources.LakeTable.currentState(s, root)
         graft.sources.LakeTable.merge(
@@ -4781,19 +4619,13 @@ object SparkEntry {
         graft.sources.LakeTable.merge(
           docs.filter(pmod(col("doc_id"), lit(3L)) === 1)
             .withColumn("n_chars", col("n_chars") + 7L), root, "doc_id")
-        graft.operators.CacheScope.sealAfter(
-          graft.sources.LakeTable.read(s, root)
-            .groupBy(col("lang"))
-            .agg(
-              count(lit(1)).as("n_docs"),
-              sum(col("n_chars")).as("sum_chars"))
-            .withColumn(
-              "conflicts_detected", lit(if (refused) 1L else 0L)))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        val rootP = java.nio.file.Paths.get(root)
-        java.nio.file.Files.walk(rootP).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+        graft.sources.LakeTable.read(s, root)
+          .groupBy(col("lang"))
+          .agg(
+            count(lit(1)).as("n_docs"),
+            sum(col("n_chars")).as("sum_chars"))
+          .withColumn(
+            "conflicts_detected", lit(if (refused) 1L else 0L))
       }
     },
     "p14_table_maintenance" -> { (s, dir) =>
@@ -4808,9 +4640,7 @@ object SparkEntry {
       // intersection, so both the data and the restored pruning are
       // hash-locked through the full maintenance chain.
       val docs = t(s, dir, "documents")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_p14").toString
-      try {
+      Scratch.sealedIn("graft_p14") { case Seq(root) =>
         val mx = docs.agg(max(col("doc_id"))).collect()(0).getLong(0)
         (0L to 2L).foreach { b =>
           graft.sources.LakeTable.append(
@@ -4831,20 +4661,14 @@ object SparkEntry {
         val rows = graft.sources.LakeTable.currentRows(s, root)
         val kept = graft.sources.LakeTable
           .planPruned(rows, mx / 2, mx).size
-        graft.operators.CacheScope.sealAfter(
-          graft.sources.LakeTable
-            .readPruned(s, root, "doc_id", mx / 2, mx)
-            .groupBy(col("lang"))
-            .agg(
-              count(lit(1)).as("n_docs"),
-              sum(col("n_chars")).as("sum_chars"))
-            .withColumn("batches_read", lit(kept.toLong))
-            .withColumn("batches_total", lit(rows.size.toLong)))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        val rootP = java.nio.file.Paths.get(root)
-        java.nio.file.Files.walk(rootP).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+        graft.sources.LakeTable
+          .readPruned(s, root, "doc_id", mx / 2, mx)
+          .groupBy(col("lang"))
+          .agg(
+            count(lit(1)).as("n_docs"),
+            sum(col("n_chars")).as("sum_chars"))
+          .withColumn("batches_read", lit(kept.toLong))
+          .withColumn("batches_total", lit(rows.size.toLong))
       }
     },
     "io20_retention_delete" -> { (s, dir) =>
@@ -4857,9 +4681,7 @@ object SparkEntry {
       // classification arithmetic — the cost asymmetry (1 rewrite out
       // of 4 batches for a 37.5% delete) is itself hash-locked.
       val docs = t(s, dir, "documents")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_io20").toString
-      try {
+      Scratch.sealedIn("graft_io20") { case Seq(root) =>
         val mx = docs.agg(max(col("doc_id"))).collect()(0).getLong(0)
         val batchCol = least(lit(3L), expr(s"doc_id * 4 div ${mx + 1}"))
         (0L to 3L).foreach { b =>
@@ -4869,24 +4691,18 @@ object SparkEntry {
         val cut = 3L * (mx + 1L) / 8L
         val rep = graft.sources.LakeTable
           .deleteRange(s, root, "doc_id", 0L, cut)
-        graft.operators.CacheScope.sealAfter(
-          graft.sources.LakeTable.read(s, root)
-            .groupBy(col("lang"))
-            .agg(
-              count(lit(1)).as("n_docs"),
-              sum(col("n_chars")).as("sum_chars"))
-            .withColumn(
-              "dropped_metadata_only",
-              lit(rep.droppedMetadataOnly.size.toLong))
-            .withColumn(
-              "rewritten_batches", lit(rep.rewritten.size.toLong))
-            .withColumn(
-              "untouched_batches", lit(rep.untouched.size.toLong)))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        val rootP = java.nio.file.Paths.get(root)
-        java.nio.file.Files.walk(rootP).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+        graft.sources.LakeTable.read(s, root)
+          .groupBy(col("lang"))
+          .agg(
+            count(lit(1)).as("n_docs"),
+            sum(col("n_chars")).as("sum_chars"))
+          .withColumn(
+            "dropped_metadata_only",
+            lit(rep.droppedMetadataOnly.size.toLong))
+          .withColumn(
+            "rewritten_batches", lit(rep.rewritten.size.toLong))
+          .withColumn(
+            "untouched_batches", lit(rep.untouched.size.toLong))
       }
     },
     "io21_schema_evolution" -> { (s, dir) =>
@@ -4898,9 +4714,7 @@ object SparkEntry {
       // merge already paid. sum/count of quality hash-lock both the
       // new values and the null-fill.
       val docs = t(s, dir, "documents")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_io21").toString
-      try {
+      Scratch.sealedIn("graft_io21") { case Seq(root) =>
         val thr = docs.agg(max(col("doc_id"))).collect()(0).getLong(0) / 2
         graft.sources.LakeTable.append(
           docs.filter(col("doc_id") <= thr), root, "doc_id")
@@ -4918,21 +4732,15 @@ object SparkEntry {
         val rep = graft.sources.LakeTable.merge(
           updates.unionByName(inserts), root, "doc_id",
           mergeSchema = true)
-        graft.operators.CacheScope.sealAfter(
-          graft.sources.LakeTable.read(s, root)
-            .groupBy(col("lang"))
-            .agg(
-              count(lit(1)).as("n_docs"),
-              sum(col("n_chars")).as("sum_chars"),
-              round(sum(col("quality")), 3).as("sum_quality"),
-              count(col("quality")).as("n_quality"))
-            .withColumn(
-              "untouched_batches", lit(rep.untouched.size.toLong)))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        val rootP = java.nio.file.Paths.get(root)
-        java.nio.file.Files.walk(rootP).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+        graft.sources.LakeTable.read(s, root)
+          .groupBy(col("lang"))
+          .agg(
+            count(lit(1)).as("n_docs"),
+            sum(col("n_chars")).as("sum_chars"),
+            round(sum(col("quality")), 3).as("sum_quality"),
+            count(col("quality")).as("n_quality"))
+          .withColumn(
+            "untouched_batches", lit(rep.untouched.size.toLong))
       }
     },
     "io22_row_change_feed" -> { (s, dir) =>
@@ -4946,9 +4754,7 @@ object SparkEntry {
       // locks the zero-work property: the untouched high batch is
       // carried by path and contributes nothing to the diff read.
       val docs = t(s, dir, "documents")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_io22").toString
-      try {
+      Scratch.sealedIn("graft_io22") { case Seq(root) =>
         val thr = docs.agg(max(col("doc_id"))).collect()(0).getLong(0) / 2
         val base = docs.filter(pmod(col("doc_id"), lit(3L)) < 2)
         graft.sources.LakeTable.append(
@@ -4969,19 +4775,13 @@ object SparkEntry {
         val carried = graft.sources.LakeTable.diffPlan(
           graft.sources.LakeTable.genRows(s, root, gFrom),
           graft.sources.LakeTable.genRows(s, root, gTo)).carried.size
-        graft.operators.CacheScope.sealAfter(
-          graft.sources.LakeTable
-            .changesBetween(s, root, "doc_id", gFrom, gTo)
-            .groupBy(col("_change_type"), col("lang"))
-            .agg(
-              count(lit(1)).as("n_rows"),
-              sum(col("n_chars")).as("sum_chars"))
-            .withColumn("carried_batches", lit(carried.toLong)))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        val rootP = java.nio.file.Paths.get(root)
-        java.nio.file.Files.walk(rootP).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+        graft.sources.LakeTable
+          .changesBetween(s, root, "doc_id", gFrom, gTo)
+          .groupBy(col("_change_type"), col("lang"))
+          .agg(
+            count(lit(1)).as("n_rows"),
+            sum(col("n_chars")).as("sum_chars"))
+          .withColumn("carried_batches", lit(carried.toLong))
       }
     },
     "io24_multicol_stats" -> { (s, dir) =>
@@ -5001,9 +4801,7 @@ object SparkEntry {
       val ev = graft.sources.Tables.events(s, dir).withColumn(
         "ts_days",
         datediff(col("ts"), lit("1970-01-01")).cast("long"))
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_io24").toString
-      try {
+      Scratch.sealedIn("graft_io24") { case Seq(root) =>
         (0L to 3L).foreach { i =>
           graft.sources.LakeTable.append(
             ev.filter(pmod(col("event_id"), lit(4L)) === i),
@@ -5029,22 +4827,16 @@ object SparkEntry {
         val post = graft.sources.LakeTable.currentRows(s, root)
         val postRead = graft.sources.LakeTable
           .planPrunedOn(post, "ts_days", dlo, dhi).size
-        graft.operators.CacheScope.sealAfter(
-          graft.sources.LakeTable
-            .readPrunedOn(s, root, "ts_days", dlo, dhi)
-            .groupBy(col("event_type"))
-            .agg(
-              count(lit(1)).as("n_events"),
-              round(sum(col("value")), 4).as("sum_value"))
-            .withColumn("pre_batches_read", lit(preRead.toLong))
-            .withColumn("pre_batches_total", lit(pre.size.toLong))
-            .withColumn("post_batches_read", lit(postRead.toLong))
-            .withColumn("post_batches_total", lit(post.size.toLong)))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        val rootP = java.nio.file.Paths.get(root)
-        java.nio.file.Files.walk(rootP).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+        graft.sources.LakeTable
+          .readPrunedOn(s, root, "ts_days", dlo, dhi)
+          .groupBy(col("event_type"))
+          .agg(
+            count(lit(1)).as("n_events"),
+            round(sum(col("value")), 4).as("sum_value"))
+          .withColumn("pre_batches_read", lit(preRead.toLong))
+          .withColumn("pre_batches_total", lit(pre.size.toLong))
+          .withColumn("post_batches_read", lit(postRead.toLong))
+          .withColumn("post_batches_total", lit(post.size.toLong))
       }
     },
     "io23_zorder_compact" -> { (s, dir) =>
@@ -5059,17 +4851,7 @@ object SparkEntry {
       // and the planning arithmetic that produced them, are replayed
       // by the oracle and ride the hash.
       val ord = t(s, dir, "orders")
-      val zroot = java.nio.file.Files
-        .createTempDirectory("graft_io23z").toString
-      val lexroot = java.nio.file.Files
-        .createTempDirectory("graft_io23l").toString
-      def rmrf(root: String): Unit = {
-        import scala.jdk.CollectionConverters._
-        val rootP = java.nio.file.Paths.get(root)
-        java.nio.file.Files.walk(rootP).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      }
-      try {
+      Scratch.sealedIn("graft_io23z", "graft_io23l") { case Seq(zroot, lexroot) =>
         (0L to 3L).foreach { i =>
           val part = ord.filter(pmod(col("o_orderkey"), lit(4L)) === i)
           graft.sources.LakeTable.append(part, zroot, "o_orderkey")
@@ -5092,19 +4874,16 @@ object SparkEntry {
           .planPrunedOn(zRows, "o_custkey", lo, hi).size
         val lexRead = graft.sources.LakeTable
           .planPrunedOn(lexRows, "o_custkey", lo, hi).size
-        graft.operators.CacheScope.sealAfter(
-          graft.sources.LakeTable
-            .readPrunedOn(s, zroot, "o_custkey", lo, hi)
-            .groupBy(col("o_orderstatus"))
-            .agg(
-              count(lit(1)).as("n_orders"),
-              round(sum(col("o_totalprice")), 2).as("sum_price"))
-            .withColumn("z_batches_read", lit(zRead.toLong))
-            .withColumn("z_batches_total", lit(zRows.size.toLong))
-            .withColumn("lex_batches_read", lit(lexRead.toLong))
-            .withColumn("lex_batches_total", lit(lexRows.size.toLong)))
-      } finally {
-        rmrf(zroot); rmrf(lexroot)
+        graft.sources.LakeTable
+          .readPrunedOn(s, zroot, "o_custkey", lo, hi)
+          .groupBy(col("o_orderstatus"))
+          .agg(
+            count(lit(1)).as("n_orders"),
+            round(sum(col("o_totalprice")), 2).as("sum_price"))
+          .withColumn("z_batches_read", lit(zRead.toLong))
+          .withColumn("z_batches_total", lit(zRows.size.toLong))
+          .withColumn("lex_batches_read", lit(lexRead.toLong))
+          .withColumn("lex_batches_total", lit(lexRows.size.toLong))
       }
     },
     "st26_stream_cdc_lake" -> { (s, dir) =>
@@ -5122,9 +4901,7 @@ object SparkEntry {
       import sp.implicits._
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = sp.sqlContext
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_st26").toString
-      try {
+      Scratch.sealedIn("graft_st26") { case Seq(root) =>
         val cols = Seq("doc_id", "text", "lang", "source", "n_chars", "op")
         val docs = t(s, dir, "documents")
           .select(
@@ -5153,18 +4930,12 @@ object SparkEntry {
           b3.toDF(cols: _*), root, "doc_id")
         val nBatches = graft.sources.LakeTable
           .currentRows(s, root).size.toLong
-        graft.operators.CacheScope.sealAfter(
-          graft.sources.LakeTable.read(s, root)
-            .groupBy(col("lang"))
-            .agg(
-              count(lit(1)).as("n_docs"),
-              sum(col("n_chars")).as("sum_chars"))
-            .withColumn("silver_batches", lit(nBatches)))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        val rootP = java.nio.file.Paths.get(root)
-        java.nio.file.Files.walk(rootP).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+        graft.sources.LakeTable.read(s, root)
+          .groupBy(col("lang"))
+          .agg(
+            count(lit(1)).as("n_docs"),
+            sum(col("n_chars")).as("sum_chars"))
+          .withColumn("silver_batches", lit(nBatches))
       }
     },
     "d34_hash_embed" -> ((s, dir) =>
@@ -5605,21 +5376,12 @@ object SparkEntry {
       // independent; at scale the estimate keeps the session width
       graft.operators.PlanScope.narrowFor(t(s, dir, "embeddings")) {
       val idx = Similarity.buildIvfIndex(t(s, dir, "embeddings"), nList = 16)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_ivf_e7").toString
-      try {
+      Scratch.sealedIn("graft_ivf_e7") { case Seq(tmp) =>
         Similarity.writeIvfIndex(idx, tmp)
         idx.release()
         val disk = Similarity.readIvfIndex(s, tmp)
-        graft.operators.CacheScope.sealAfter(
-          Similarity.probeIvfPruned(
-            disk, Seq(0L, 1L, 2L, 3L, 4L), k = 10, nProbe = 16))
-      } finally {
-        import java.nio.file.{Files, Paths}
-        import scala.jdk.CollectionConverters._
-        val root = Paths.get(tmp)
-        Files.walk(root).iterator().asScala.toSeq.reverse
-          .foreach(p => Files.deleteIfExists(p))
+        Similarity.probeIvfPruned(
+          disk, Seq(0L, 1L, 2L, 3L, 4L), k = 10, nProbe = 16)
       }
       }
     },
@@ -5636,24 +5398,15 @@ object SparkEntry {
       // narrowed planning for the fixture-sized corpus — see e7's note
       graft.operators.PlanScope.narrowFor(emb) {
       val idx = Similarity.buildIvfIndex(emb, nList = 16)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_ivf_e21").toString
-      try {
+      Scratch.sealedIn("graft_ivf_e21") { case Seq(tmp) =>
         Similarity.writeIvfIndex(idx, tmp)
         idx.release()
         val disk = Similarity.readIvfIndex(s, tmp)
         val allowed = emb.filter(col("label").isin(2, 7))
           .select(col("vec_id"))
-        graft.operators.CacheScope.sealAfter(
-          Similarity.probeIvfPruned(
-            disk, Seq(0L, 1L, 2L, 3L, 4L), k = 10, nProbe = 16,
-            allowed = Some(allowed)))
-      } finally {
-        import java.nio.file.{Files, Paths}
-        import scala.jdk.CollectionConverters._
-        val root = Paths.get(tmp)
-        Files.walk(root).iterator().asScala.toSeq.reverse
-          .foreach(p => Files.deleteIfExists(p))
+        Similarity.probeIvfPruned(
+          disk, Seq(0L, 1L, 2L, 3L, 4L), k = 10, nProbe = 16,
+          allowed = Some(allowed))
       }
       }
     },
@@ -5697,23 +5450,14 @@ object SparkEntry {
       graft.operators.PlanScope.narrowFor(emb) {
       val idx = Similarity.buildIvfIndex(
         emb.filter(pmod(col("vec_id"), lit(2)) === 0), nList = 16)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_ivf_e13").toString
-      try {
+      Scratch.sealedIn("graft_ivf_e13") { case Seq(tmp) =>
         Similarity.writeIvfIndex(idx, tmp)
         idx.release()
         Similarity.appendToIvfIndex(
           s, tmp, emb.filter(pmod(col("vec_id"), lit(2)) === 1))
         val disk = Similarity.readIvfIndex(s, tmp)
-        graft.operators.CacheScope.sealAfter(
-          Similarity.probeIvfPruned(
-            disk, Seq(0L, 1L, 2L, 3L, 4L), k = 10, nProbe = 16))
-      } finally {
-        import java.nio.file.{Files, Paths}
-        import scala.jdk.CollectionConverters._
-        val root = Paths.get(tmp)
-        Files.walk(root).iterator().asScala.toSeq.reverse
-          .foreach(p => Files.deleteIfExists(p))
+        Similarity.probeIvfPruned(
+          disk, Seq(0L, 1L, 2L, 3L, 4L), k = 10, nProbe = 16)
       }
       }
     },
@@ -5729,9 +5473,7 @@ object SparkEntry {
       // narrowed planning for the fixture-sized corpus — see e7's note
       graft.operators.PlanScope.narrowFor(emb) {
       val idx = Similarity.buildIvfIndex(emb, nList = 16)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_ivf_e27").toString
-      try {
+      Scratch.sealedIn("graft_ivf_e27") { case Seq(tmp) =>
         Similarity.writeIvfIndex(idx, tmp)
         idx.release()
         Similarity.deleteFromIvfIndex(
@@ -5739,15 +5481,8 @@ object SparkEntry {
           emb.filter(pmod(col("vec_id"), lit(2)) === 1)
             .select(col("vec_id")))
         val disk = Similarity.readIvfIndex(s, tmp)
-        graft.operators.CacheScope.sealAfter(
-          Similarity.probeIvfPruned(
-            disk, Seq(0L, 2L, 4L, 6L, 8L), k = 10, nProbe = 16))
-      } finally {
-        import java.nio.file.{Files, Paths}
-        import scala.jdk.CollectionConverters._
-        val root = Paths.get(tmp)
-        Files.walk(root).iterator().asScala.toSeq.reverse
-          .foreach(p => Files.deleteIfExists(p))
+        Similarity.probeIvfPruned(
+          disk, Seq(0L, 2L, 4L, 6L, 8L), k = 10, nProbe = 16)
       }
       }
     },
@@ -5764,23 +5499,14 @@ object SparkEntry {
       // narrowed planning for the fixture-sized corpus — see e7's note
       graft.operators.PlanScope.narrowFor(emb) {
       val idx = Similarity.buildIvfIndex(emb, nList = 16)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_ivf_e28").toString
-      try {
+      Scratch.sealedIn("graft_ivf_e28") { case Seq(tmp) =>
         Similarity.writeIvfIndex(idx, tmp)
         idx.release()
         val meanSize = math.max(1L, emb.count() / 16)
         Similarity.rebalanceIvfIndex(s, tmp, maxListSize = meanSize)
         val disk = Similarity.readIvfIndex(s, tmp)
-        graft.operators.CacheScope.sealAfter(
-          Similarity.probeIvfPruned(
-            disk, Seq(1L, 3L, 5L, 7L, 9L), k = 10, nProbe = disk.nList))
-      } finally {
-        import java.nio.file.{Files, Paths}
-        import scala.jdk.CollectionConverters._
-        val root = Paths.get(tmp)
-        Files.walk(root).iterator().asScala.toSeq.reverse
-          .foreach(p => Files.deleteIfExists(p))
+        Similarity.probeIvfPruned(
+          disk, Seq(1L, 3L, 5L, 7L, 9L), k = 10, nProbe = disk.nList)
       }
       }
     },
@@ -5798,9 +5524,7 @@ object SparkEntry {
       // warm path mis-normalizes, breaks the hash.
       val all = EdgeListReader.fromOrdersCached(s, dir)
       val pred = (col("src") + col("dst")) % 5 =!= 0
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_p12").toString
-      try {
+      Scratch.sealedIn("graft_p12") { case Seq(root) =>
         graft.sources.Snapshots.commitPtr(all.filter(pred), root, 1)
         graft.sources.Snapshots.commitPtr(all.filter(!pred), root, 2)
         val oldEdges =
@@ -5810,13 +5534,7 @@ object SparkEntry {
         val prior = PageRank.runFixed(s, oldEdges, k = 3).ranks
         val res = PageRank.runFixed(
           s, oldEdges.union(delta), k = 2, initRanks = Some(prior))
-        graft.operators.CacheScope.sealAfter(
-          res.ranks.select(col("id"), round(col("rank"), 9).as("rank_r")))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        val rootP = java.nio.file.Paths.get(root)
-        java.nio.file.Files.walk(rootP).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+        res.ranks.select(col("id"), round(col("rank"), 9).as("rank_r"))
       }
     },
     "p11_index_lifecycle" -> { (s, dir) =>
@@ -5836,9 +5554,7 @@ object SparkEntry {
       graft.operators.PlanScope.narrowFor(emb) {
       val idx = Similarity.buildIvfIndex(
         emb.filter(pmod(col("vec_id"), lit(2)) === 0), nList = 16)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_ivf_p11").toString
-      try {
+      Scratch.sealedIn("graft_ivf_p11") { case Seq(tmp) =>
         Similarity.writeIvfIndex(idx, tmp)
         idx.release()
         Similarity.appendToIvfIndex(
@@ -5851,15 +5567,8 @@ object SparkEntry {
         Similarity.rebalanceIvfIndex(
           s, tmp, maxListSize = math.max(1L, survivors.count() / 16))
         val disk = Similarity.readIvfIndex(s, tmp)
-        graft.operators.CacheScope.sealAfter(
-          Similarity.probeIvfPruned(
-            disk, Seq(1L, 2L, 4L, 5L, 7L), k = 10, nProbe = disk.nList))
-      } finally {
-        import java.nio.file.{Files, Paths}
-        import scala.jdk.CollectionConverters._
-        val root = Paths.get(tmp)
-        Files.walk(root).iterator().asScala.toSeq.reverse
-          .foreach(p => Files.deleteIfExists(p))
+        Similarity.probeIvfPruned(
+          disk, Seq(1L, 2L, 4L, 5L, 7L), k = 10, nProbe = disk.nList)
       }
       }
     },
@@ -5876,19 +5585,9 @@ object SparkEntry {
       // any refresh that lost, duplicated, or misplaced a vector
       // breaks the hash.
       val emb = t(s, dir, "embeddings")
-      val feed = java.nio.file.Files
-        .createTempDirectory("graft_p15_feed").toString
-      val idxRoot = java.nio.file.Files
-        .createTempDirectory("graft_p15_idx").toString
-      def rmrf(root: String): Unit = {
-        import scala.jdk.CollectionConverters._
-        val rootP = java.nio.file.Paths.get(root)
-        java.nio.file.Files.walk(rootP).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      }
       // narrowed planning for the fixture-sized corpus — see e7's note
       graft.operators.PlanScope.narrowFor(emb) {
-      try {
+      Scratch.sealedIn("graft_p15_feed", "graft_p15_idx") { case Seq(feed, idxRoot) =>
         graft.sources.Snapshots.commitPtr(
           emb.filter(pmod(col("vec_id"), lit(3)) < 2), feed, version = 1)
         graft.sources.Snapshots.commitPtr(
@@ -5908,12 +5607,9 @@ object SparkEntry {
           s, idxRoot,
           graft.sources.Snapshots.changesSincePtr(s, feed, 2, 3))
         val disk = Similarity.readIvfIndex(s, idxRoot)
-        graft.operators.CacheScope.sealAfter(
-          Similarity.probeIvfPruned(
-            disk, Seq(1L, 2L, 3L, 4L, 5L), k = 10,
-            nProbe = disk.nList))
-      } finally {
-        rmrf(feed); rmrf(idxRoot)
+        Similarity.probeIvfPruned(
+          disk, Seq(1L, 2L, 3L, 4L, 5L), k = 10,
+          nProbe = disk.nList)
       }
       }
     },
@@ -5929,9 +5625,7 @@ object SparkEntry {
       // the from-scratch recompute of the final state: incremental ≡
       // recompute, with feed_rows pinning the delta size.
       val docs = t(s, dir, "documents")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_p16").toString
-      try {
+      Scratch.sealedIn("graft_p16") { case Seq(root) =>
         val thr = docs.agg(max(col("doc_id"))).collect()(0).getLong(0) / 2
         val base = docs.filter(pmod(col("doc_id"), lit(3L)) < 2)
         graft.sources.LakeTable.append(
@@ -5964,21 +5658,15 @@ object SparkEntry {
         val delta = feed.groupBy(col("lang")).agg(
           sum(sign).as("dn"),
           sum(sign * col("n_chars")).as("dchars"))
-        graft.operators.CacheScope.sealAfter(
-          gold0.join(delta, Seq("lang"), "full_outer")
-            .select(
-              col("lang"),
-              (coalesce(col("n_docs"), lit(0L)) +
-                coalesce(col("dn"), lit(0L))).as("n_docs"),
-              (coalesce(col("sum_chars"), lit(0L)) +
-                coalesce(col("dchars"), lit(0L))).as("sum_chars"))
-            .filter(col("n_docs") > 0)
-            .withColumn("feed_rows", lit(feedRows)))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        val rootP = java.nio.file.Paths.get(root)
-        java.nio.file.Files.walk(rootP).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+        gold0.join(delta, Seq("lang"), "full_outer")
+          .select(
+            col("lang"),
+            (coalesce(col("n_docs"), lit(0L)) +
+              coalesce(col("dn"), lit(0L))).as("n_docs"),
+            (coalesce(col("sum_chars"), lit(0L)) +
+              coalesce(col("dchars"), lit(0L))).as("sum_chars"))
+          .filter(col("n_docs") > 0)
+          .withColumn("feed_rows", lit(feedRows))
       }
     },
     "e22_knn_graph" -> ((s, dir) =>
@@ -6020,22 +5708,14 @@ object SparkEntry {
       // operator needs the width
       val g = graft.operators.Similarity.knnGraphIvf(
         emb, m = 8, nList = 16, nProbe = 16)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_nsw_e24").toString
-      try {
+      Scratch.sealedIn("graft_nsw_e24") { case Seq(tmp) =>
         g.withColumn("bucket", pmod(col("src"), lit(8)))
           .write.mode("overwrite").partitionBy("bucket").parquet(tmp)
         val disk = s.read.parquet(tmp)
           .select(col("src"), col("nbr"), col("cos_sim"))
-        graft.operators.CacheScope.sealAfter(
-          graft.operators.Similarity.nswSearch(
-            disk, emb, probeIds = Seq(0L, 1L, 2L, 3L, 4L),
-            k = 10, beamWidth = 8, hops = 3))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        val root = java.nio.file.Paths.get(tmp)
-        java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+        graft.operators.Similarity.nswSearch(
+          disk, emb, probeIds = Seq(0L, 1L, 2L, 3L, 4L),
+          k = 10, beamWidth = 8, hops = 3)
       }
     },
     "e25_kmeans" -> ((s, dir) =>
@@ -6070,21 +5750,12 @@ object SparkEntry {
       // narrowed planning for the fixture-sized corpus — see e7's note
       graft.operators.PlanScope.narrowFor(t(s, dir, "embeddings")) {
       val idx = Similarity.buildIvfIndex(t(s, dir, "embeddings"), nList = 16)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_ivfsq_e12").toString
-      try {
+      Scratch.sealedIn("graft_ivfsq_e12") { case Seq(tmp) =>
         Similarity.writeIvfSqIndex(idx, tmp)
         idx.release()
-        graft.operators.CacheScope.sealAfter(
-          Similarity.probeIvfSqPruned(
-            t(s, dir, "embeddings"), tmp,
-            Seq(0L, 1L, 2L, 3L, 4L), k = 10, nProbe = 16))
-      } finally {
-        import java.nio.file.{Files, Paths}
-        import scala.jdk.CollectionConverters._
-        val root = Paths.get(tmp)
-        Files.walk(root).iterator().asScala.toSeq.reverse
-          .foreach(p => Files.deleteIfExists(p))
+        Similarity.probeIvfSqPruned(
+          t(s, dir, "embeddings"), tmp,
+          Seq(0L, 1L, 2L, 3L, 4L), k = 10, nProbe = 16)
       }
       }
     },
@@ -6142,20 +5813,12 @@ object SparkEntry {
       // narrowed planning for the fixture-sized corpus — see e7's note
       graft.operators.PlanScope.narrowFor(t(s, dir, "embeddings")) {
       val idx = Similarity.buildIvfIndex(t(s, dir, "embeddings"), nList = 16)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_ivfpq_e16").toString
-      try {
+      Scratch.sealedIn("graft_ivfpq_e16") { case Seq(tmp) =>
         Similarity.writeIvfPqIndex(idx, tmp, m = 8, k = 16)
         idx.release()
-        graft.operators.CacheScope.sealAfter(
-          Similarity.probeIvfPqPruned(
-            t(s, dir, "embeddings"), tmp, Seq(0L, 1L, 2L, 3L, 4L),
-            k = 10, nProbe = 16))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        val root = java.nio.file.Paths.get(tmp)
-        java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+        Similarity.probeIvfPqPruned(
+          t(s, dir, "embeddings"), tmp, Seq(0L, 1L, 2L, 3L, 4L),
+          k = 10, nProbe = 16)
       }
       }
     },
@@ -6225,18 +5888,10 @@ object SparkEntry {
       // numeric width) breaks the hash. Sealed eagerly so the temp
       // layout can be deleted before returning.
       val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_jsonl").toString
-      try {
+      Scratch.sealedIn("graft_jsonl") { case Seq(tmp) =>
         docs.write.mode("overwrite").json(tmp)
-        graft.operators.CacheScope.sealAfter(
-          s.read.schema(docs.schema).json(tmp)
-            .select(docs.columns.map(col): _*))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        val root = java.nio.file.Paths.get(tmp)
-        java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+        s.read.schema(docs.schema).json(tmp)
+          .select(docs.columns.map(col): _*)
       }
     },
     "io3_bucketed_join" -> { (s, dir) =>
@@ -6279,18 +5934,10 @@ object SparkEntry {
       // explicit quoting knobs left at Spark defaults, which quote on
       // demand); same identity oracle as io1
       val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_csv").toString
-      try {
+      Scratch.sealedIn("graft_csv") { case Seq(tmp) =>
         docs.write.mode("overwrite").option("header", "true").csv(tmp)
-        graft.operators.CacheScope.sealAfter(
-          s.read.schema(docs.schema).option("header", "true").csv(tmp)
-            .select(docs.columns.map(col): _*))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        val root = java.nio.file.Paths.get(tmp)
-        java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+        s.read.schema(docs.schema).option("header", "true").csv(tmp)
+          .select(docs.columns.map(col): _*)
       }
     },
 
@@ -6401,44 +6048,22 @@ object SparkEntry {
       // count is monotone) — hash-checked against the batch GROUP BY
       val sp = s
       import sp.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = sp.sqlContext
       ConfScope(s,
         "spark.sql.streaming.stateStore.providerClass" ->
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-        val all = graft.sources.Tables.events(s, dir)
-          .selectExpr("event_id", "ts", "user_id", "event_type", "value")
-          .as[graft.streaming.EventStreams.Event]
-          .collect()
-        val scrambled = all.sortBy(e =>
-          java.lang.Long.rotateLeft(e.event_id * 0x9E3779B97F4A7C15L, 17))
-        val ms = MemoryStream[graft.streaming.EventStreams.Event]
-        val qname =
-          "st17_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        // state width from the replayed row count — see st10's note
-        graft.operators.PlanScope.narrowForRows(s, all.length.toLong) {
-          val q = graft.streaming.EventStreams.spendLedger(ms.toDS())
-            .writeStream.format("memory").queryName(qname)
-            .outputMode("update").start()
-          try {
-            val (h1, h2) = scrambled.splitAt(scrambled.length / 2)
-            ms.addData(h1.toIndexedSeq)
-            q.processAllAvailable()
-            ms.addData(h2.toIndexedSeq)
-            q.processAllAvailable()
-          } finally q.stop()
+        val scrambled =
+          Replay.scramble(Replay.events(s, dir), 17)(_.event_id)
+        val (h1, h2) = scrambled.splitAt(scrambled.length / 2)
+        Replay.toMemory(s, "st17", "update", Seq(h1.toSeq, h2.toSeq))(
+          graft.streaming.EventStreams.spendLedger) {
+          _.groupBy(col("user_id"))
+            .agg(max_by(
+              struct(col("n_events"), col("total_spend")),
+              col("n_events")).as("b"))
+            .select(
+              col("user_id"), col("b.n_events").as("n_events"),
+              round(col("b.total_spend"), 2).as("total_spend"))
         }
-        val out = s.table(qname)
-          .groupBy(col("user_id"))
-          .agg(max_by(
-            struct(col("n_events"), col("total_spend")),
-            col("n_events")).as("b"))
-          .select(
-            col("user_id"), col("b.n_events").as("n_events"),
-            round(col("b.total_spend"), 2).as("total_spend"))
-          .localCheckpoint() // detaches from the sink view before the drop
-        s.catalog.dropTempView(qname)
-        out
       }
     },
     "st15_stream_topk" -> ((s, dir) =>
@@ -6508,24 +6133,16 @@ object SparkEntry {
       // the pruned scan is hash-checked against the unpartitioned
       // ground truth, certifying pruning lost no rows.
       val ev = graft.sources.Tables.events(s, dir)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_part_io4").toString
-      try {
+      Scratch.sealedIn("graft_part_io4") { case Seq(tmp) =>
         ev.select(col("event_id"), col("user_id"), col("value"),
             col("event_type"))
           .write.mode("overwrite").partitionBy("event_type").parquet(tmp)
-        graft.operators.CacheScope.sealAfter(
-          s.read.parquet(tmp)
-            .filter(col("event_type").isin("click", "purchase"))
-            .groupBy(col("event_type"))
-            .agg(
-              count("*").as("n_events"),
-              round(sum(col("value")), 2).as("sum_value")))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        val root = java.nio.file.Paths.get(tmp)
-        java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+        s.read.parquet(tmp)
+          .filter(col("event_type").isin("click", "purchase"))
+          .groupBy(col("event_type"))
+          .agg(
+            count("*").as("n_events"),
+            round(sum(col("value")), 2).as("sum_value"))
       }
     },
     "st7_enrich" -> ((s, dir) =>
@@ -6553,44 +6170,24 @@ object SparkEntry {
       // bounded stream.
       val sp = s
       import sp.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = sp.sqlContext
       val all = graft.sources.Tables.events(s, dir)
         .select(col("event_id"), col("ts"))
         .as[(Long, java.sql.Timestamp)]
         .collect()
-      val scrambled = all.sortBy { case (id, _) =>
-        java.lang.Long.rotateLeft(id * 0x9E3779B97F4A7C15L, 29)
-      }
-      val ms = MemoryStream[(Long, java.sql.Timestamp)]
-      val qname =
-        "st10_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      // state width from the replayed row count (PlanScope): the dedup
-      // operator commits one state store per shuffle partition per
-      // micro-batch — fixture-sized state at session width pays fixed
-      // store overhead, not data; at scale the count keeps full width
-      graft.operators.PlanScope.narrowForRows(s, all.length.toLong) {
+      val scrambled = Replay.scramble(all, 29)(_._1)
       // delay must exceed the fixture's 30-day event span: the scramble
       // sends old keys in late batches, and a tighter watermark would
       // drop them as late data before dedup ever saw them
-      val q = graft.streaming.EventStreams
-        .dedupWithinWatermark(
-          ms.toDS().toDF("event_id", "ts"), delay = "45 days")
-        .writeStream.format("memory").queryName(qname)
-        .outputMode("append").start()
-      try {
-        scrambled.grouped(math.max(scrambled.length / 4, 1)).foreach { b =>
-          ms.addData(b.toIndexedSeq)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-      }
-      s.table(qname)
-        .agg(
+      Replay.toMemory(s, "st10", "append", Replay.batches(scrambled, 4)) { ds =>
+        graft.streaming.EventStreams
+          .dedupWithinWatermark(ds.toDF("event_id", "ts"), delay = "45 days")
+      } {
+        _.agg(
           count("*").as("n_distinct"),
           count_distinct(col("event_id")).as("n_ids"),
           unix_micros(min(col("ts"))).as("min_ts_us"),
           unix_micros(max(col("ts"))).as("max_ts_us"))
+      }
     },
     "st13_exactly_once_sink" -> { (s, dir) =>
       // EXACTLY-ONCE foreachBatch parquet sink: events replayed in 4
@@ -6602,47 +6199,21 @@ object SparkEntry {
       // the sink, retry included.
       val sp = s
       import sp.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = sp.sqlContext
-      val all = graft.sources.Tables.events(s, dir)
-        .select(
-          col("event_id"), col("ts"), col("user_id"), col("event_type"),
-          col("value"))
-        .as[graft.streaming.EventStreams.Event]
-        .collect()
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_st13").toString
-      try {
-        val ms = MemoryStream[graft.streaming.EventStreams.Event]
-        // state width from the replayed row count — see st10's note
-        var firstBatch: Seq[graft.streaming.EventStreams.Event] = Seq.empty
-        graft.operators.PlanScope.narrowForRows(s, all.length.toLong) {
-          val q = graft.streaming.EventStreams
-            .sinkExactlyOnce(ms.toDS().toDF(), tmp)
-          try {
-            all.grouped(math.max(all.length / 4, 1)).zipWithIndex.foreach {
-              case (b, i) =>
-                if (i == 0) firstBatch = b.toIndexedSeq
-                ms.addData(b.toIndexedSeq)
-                q.processAllAvailable()
-            }
-          } finally q.stop()
+      val all = Replay.events(s, dir)
+      Scratch.sealedIn("graft_st13") { case Seq(tmp) =>
+        val batches = Replay.batches(all, 4)
+        Replay.drive(s, batches) { ds =>
+          graft.streaming.EventStreams.sinkExactlyOnce(ds.toDF(), tmp)
         }
         // the retry: re-run batch 0's idempotent write (what a restarted
         // query does when the sink committed but the checkpoint didn't)
         graft.streaming.EventStreams.writeBatchIdempotent(
-          firstBatch.toDF(), batchId = 0L, tmp)
-        graft.operators.CacheScope.sealAfter(
-          s.read.parquet(tmp)
-            .groupBy(col("event_type"))
-            .agg(
-              count("*").as("n_events"),
-              round(sum(col("value")), 2).as("sum_value")))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        val root = java.nio.file.Paths.get(tmp)
-        java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+          batches.take(1).flatten.toDF(), batchId = 0L, tmp)
+        s.read.parquet(tmp)
+          .groupBy(col("event_type"))
+          .agg(
+            count("*").as("n_events"),
+            round(sum(col("value")), 2).as("sum_value"))
       }
     },
     "st18_cdc_apply" -> { (s, dir) =>
@@ -6659,45 +6230,29 @@ object SparkEntry {
       // batching, and re-delivery all invisible in the result.
       val sp = s
       import sp.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = sp.sqlContext
       val all = graft.sources.Tables.events(s, dir)
         .select(
           col("user_id"), col("event_id"), col("event_type"),
           unix_micros(col("ts")).as("valid_from"))
         .as[(Long, Long, String, Long)]
         .collect()
-      val scrambled = all.sortBy { case (_, id, _, _) =>
-        java.lang.Long.rotateLeft(id * 0x9E3779B97F4A7C15L, 31)
-      }
+      val scrambled = Replay.scramble(all, 31)(_._2)
       var table = Seq.empty[(Long, Long, String, Long)]
         .toDF("user_id", "event_id", "event_type", "valid_from")
         .withColumn("valid_to", lit(-1L))
         .withColumn("is_current", lit(true))
         .localCheckpoint()
-      val ms = MemoryStream[(Long, Long, String, Long)]
-      // state width from the replayed row count — see st10's note
-      graft.operators.PlanScope.narrowForRows(s, all.length.toLong) {
-      val q = ms.toDS()
-        .toDF("user_id", "event_id", "event_type", "valid_from")
-        .writeStream
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          val next = graft.operators.CacheScope.rotate(
-            graft.operators.Cdc.scd2Merge(table, df)) // the "table write"
-          table = next
-        }
-        .start()
-      try {
-        val batches = scrambled.grouped(
-          math.max(scrambled.length / 4, 1)).toSeq
-        batches.foreach { b =>
-          ms.addData(b.toIndexedSeq)
-          q.processAllAvailable()
-        }
-        // at-least-once re-delivery of the first batch's rows
-        ms.addData(batches.head.toIndexedSeq)
-        q.processAllAvailable()
-      } finally q.stop()
+      val batches = Replay.batches(scrambled, 4)
+      // at-least-once re-delivery of the first batch's rows
+      Replay.drive(s, batches, flush = batches.take(1)) {
+        _.toDF("user_id", "event_id", "event_type", "valid_from")
+          .writeStream
+          .foreachBatch { (df: DataFrame, _: Long) =>
+            val next = graft.operators.CacheScope.rotate(
+              graft.operators.Cdc.scd2Merge(table, df)) // the "table write"
+            table = next
+          }
+          .start()
       }
       table
     },
@@ -6710,32 +6265,14 @@ object SparkEntry {
       // state path itself, not just a batch twin.
       val sp = s
       import sp.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = sp.sqlContext
       val all = t(s, dir, "documents")
         .select(col("doc_id"), col("text"))
         .as[(Long, String)]
         .collect()
-      val scrambled = all.sortBy { case (id, _) =>
-        java.lang.Long.rotateLeft(id * 0x9E3779B97F4A7C15L, 23)
-      }
-      val ms = MemoryStream[(Long, String)]
-      val qname =
-        "st8_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      // state width from the replayed row count — see st10's note
-      graft.operators.PlanScope.narrowForRows(s, all.length.toLong) {
-      val q = graft.streaming.EventStreams
-        .dedupDocsStream(ms.toDS().toDF("doc_id", "text"))
-        .writeStream.format("memory").queryName(qname)
-        .outputMode("complete").start()
-      try {
-        scrambled.grouped(math.max(scrambled.length / 5, 1)).foreach { b =>
-          ms.addData(b.toIndexedSeq)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-      }
-      s.table(qname)
+      Replay.toMemory(s, "st8", "complete",
+          Replay.batches(Replay.scramble(all, 23)(_._1), 5)) { ds =>
+        graft.streaming.EventStreams.dedupDocsStream(ds.toDF("doc_id", "text"))
+      }(identity)
     },
     "st19_stream_cms" -> { (s, dir) =>
       // STREAMING sketch maintenance — d53's Count-Min sketch as live
@@ -6749,34 +6286,17 @@ object SparkEntry {
       // path itself (st8 discipline).
       val sp = s
       import sp.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = sp.sqlContext
       val all = t(s, dir, "documents")
         .select(col("doc_id"), col("text"))
         .as[(Long, String)]
         .collect()
-      val scrambled = all.sortBy { case (id, _) =>
-        java.lang.Long.rotateLeft(id * 0x9E3779B97F4A7C15L, 29)
-      }
-      val ms = MemoryStream[(Long, String)]
-      val qname =
-        "st19_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val toks = ms.toDS().toDF("doc_id", "text")
-        .filter(length(trim(col("text"))) > 0)
-        .select(explode(TextOps.tokens(col("text"))).as("t"))
-      // state width from the replayed row count — see st10's note
-      graft.operators.PlanScope.narrowForRows(s, all.length.toLong) {
-      val q = graft.operators.CountMin.sketch(toks, depth = 3, width = 128)
-        .writeStream.format("memory").queryName(qname)
-        .outputMode("complete").start()
-      try {
-        scrambled.grouped(math.max(scrambled.length / 5, 1)).foreach { b =>
-          ms.addData(b.toIndexedSeq)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-      }
-      s.table(qname)
+      Replay.toMemory(s, "st19", "complete",
+          Replay.batches(Replay.scramble(all, 29)(_._1), 5)) { ds =>
+        val toks = ds.toDF("doc_id", "text")
+          .filter(length(trim(col("text"))) > 0)
+          .select(explode(TextOps.tokens(col("text"))).as("t"))
+        graft.operators.CountMin.sketch(toks, depth = 3, width = 128)
+      }(identity)
     },
     "st24_stream_asof" -> { (s, dir) =>
       // STREAM-STREAM AS-OF join through the REAL stateful operator
@@ -6793,44 +6313,20 @@ object SparkEntry {
       // contract, not just its twin.
       val sp = s
       import sp.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = sp.sqlContext
-      val all = graft.sources.Tables.events(s, dir)
-        .selectExpr("event_id", "ts", "user_id", "event_type", "value")
-        .as[graft.streaming.EventStreams.Event]
-        .collect()
-      val scrambled = all.sortBy(e =>
-        java.lang.Long.rotateLeft(e.event_id * 0x9E3779B97F4A7C15L, 23))
-      val maxMs = all.iterator.map(_.ts.getTime).max
-      def sentinel(t: Long) = graft.streaming.EventStreams.Event(
-        -1L, new java.sql.Timestamp(t), -1L, "sentinel", 0.0)
-      val ms = MemoryStream[graft.streaming.EventStreams.Event]
-      val qname =
-        "st24_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      // state width from the replayed row count — see st10's note
-      graft.operators.PlanScope.narrowForRows(s, all.length.toLong) {
-      val q = graft.streaming.EventStreams.asofEnrichStream(ms.toDS())
-        .writeStream.format("memory").queryName(qname)
-        .outputMode("append").start()
-      try {
-        // ONE batch for the whole scrambled history: the watermark only
-        // advances BETWEEN micro-batches, so nothing is late within it
-        // (splitting would drop the older half as late data); the
-        // out-of-order fold is still fully exercised inside the batch
-        ms.addData(scrambled.toIndexedSeq)
-        q.processAllAvailable()
-        ms.addData(sentinel(maxMs + 4L * 3600 * 1000))
-        q.processAllAvailable()
-        ms.addData(sentinel(maxMs + 8L * 3600 * 1000))
-        q.processAllAvailable()
-      } finally q.stop()
+      val all = Replay.events(s, dir)
+      // ONE batch for the whole scrambled history: the watermark only
+      // advances BETWEEN micro-batches, so nothing is late within it
+      // (splitting would drop the older half as late data); the
+      // out-of-order fold is still fully exercised inside the batch
+      Replay.toMemory(s, "st24", "append",
+          Seq(Replay.scramble(all, 23)(_.event_id).toSeq),
+          Replay.sentinels(all, 4, 8))(
+          graft.streaming.EventStreams.asofEnrichStream(_)) {
+        _.filter(col("user_id") >= 0) // drop the sentinel user
+          .select(
+            col("user_id"), col("p_us"), col("p_id"),
+            col("c_id"), col("c_us"))
       }
-      s.table(qname)
-        .filter(col("user_id") >= 0) // drop the sentinel user
-        .select(
-          col("user_id"), col("p_us"), col("p_id"),
-          col("c_id"), col("c_us"))
-        .localCheckpoint() // detach from the sink view before the drop
     },
     "st27_stream_asof_fwd" -> { (s, dir) =>
       // STREAM-STREAM FORWARD AS-OF join with TOLERANCE (pandas
@@ -6845,41 +6341,18 @@ object SparkEntry {
       // q53 window chain + the same tolerance CASE.
       val sp = s
       import sp.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = sp.sqlContext
-      val all = graft.sources.Tables.events(s, dir)
-        .selectExpr("event_id", "ts", "user_id", "event_type", "value")
-        .as[graft.streaming.EventStreams.Event]
-        .collect()
-      val scrambled = all.sortBy(e =>
-        java.lang.Long.rotateLeft(e.event_id * 0x9E3779B97F4A7C15L, 29))
-      val maxMs = all.iterator.map(_.ts.getTime).max
-      def sentinel(t: Long) = graft.streaming.EventStreams.Event(
-        -1L, new java.sql.Timestamp(t), -1L, "sentinel", 0.0)
-      val ms = MemoryStream[graft.streaming.EventStreams.Event]
-      val qname =
-        "st27_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      // state width from the replayed row count — see st10's note
-      graft.operators.PlanScope.narrowForRows(s, all.length.toLong) {
-      val q = graft.streaming.EventStreams
-        .asofEnrichStreamForward(ms.toDS(), 4L * 3600L * 1000000L)
-        .writeStream.format("memory").queryName(qname)
-        .outputMode("append").start()
-      try {
-        ms.addData(scrambled.toIndexedSeq)
-        q.processAllAvailable()
-        ms.addData(sentinel(maxMs + 8L * 3600 * 1000))
-        q.processAllAvailable()
-        ms.addData(sentinel(maxMs + 16L * 3600 * 1000))
-        q.processAllAvailable()
-      } finally q.stop()
+      val all = Replay.events(s, dir)
+      Replay.toMemory(s, "st27", "append",
+          Seq(Replay.scramble(all, 29)(_.event_id).toSeq),
+          Replay.sentinels(all, 8, 16)) {
+        graft.streaming.EventStreams
+          .asofEnrichStreamForward(_, 4L * 3600L * 1000000L)
+      } {
+        _.filter(col("user_id") >= 0) // drop the sentinel user
+          .select(
+            col("user_id"), col("p_us"), col("p_id"),
+            col("c_id"), col("c_us"))
       }
-      s.table(qname)
-        .filter(col("user_id") >= 0)
-        .select(
-          col("user_id"), col("p_us"), col("p_id"),
-          col("c_id"), col("c_us"))
-        .localCheckpoint()
     },
     "st28_stream_asof_near" -> { (s, dir) =>
       // STREAM-STREAM NEAREST AS-OF join with TOLERANCE — the third
@@ -6893,41 +6366,18 @@ object SparkEntry {
       // horizon-argmin SQL.
       val sp = s
       import sp.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = sp.sqlContext
-      val all = graft.sources.Tables.events(s, dir)
-        .selectExpr("event_id", "ts", "user_id", "event_type", "value")
-        .as[graft.streaming.EventStreams.Event]
-        .collect()
-      val scrambled = all.sortBy(e =>
-        java.lang.Long.rotateLeft(e.event_id * 0x9E3779B97F4A7C15L, 41))
-      val maxMs = all.iterator.map(_.ts.getTime).max
-      def sentinel(t: Long) = graft.streaming.EventStreams.Event(
-        -1L, new java.sql.Timestamp(t), -1L, "sentinel", 0.0)
-      val ms = MemoryStream[graft.streaming.EventStreams.Event]
-      val qname =
-        "st28_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      // state width from the replayed row count — see st10's note
-      graft.operators.PlanScope.narrowForRows(s, all.length.toLong) {
-      val q = graft.streaming.EventStreams
-        .asofEnrichStreamNearest(ms.toDS(), 4L * 3600L * 1000000L)
-        .writeStream.format("memory").queryName(qname)
-        .outputMode("append").start()
-      try {
-        ms.addData(scrambled.toIndexedSeq)
-        q.processAllAvailable()
-        ms.addData(sentinel(maxMs + 8L * 3600 * 1000))
-        q.processAllAvailable()
-        ms.addData(sentinel(maxMs + 16L * 3600 * 1000))
-        q.processAllAvailable()
-      } finally q.stop()
+      val all = Replay.events(s, dir)
+      Replay.toMemory(s, "st28", "append",
+          Seq(Replay.scramble(all, 41)(_.event_id).toSeq),
+          Replay.sentinels(all, 8, 16)) {
+        graft.streaming.EventStreams
+          .asofEnrichStreamNearest(_, 4L * 3600L * 1000000L)
+      } {
+        _.filter(col("user_id") >= 0) // drop the sentinel user
+          .select(
+            col("user_id"), col("p_us"), col("p_id"),
+            col("c_id"), col("c_us"))
       }
-      s.table(qname)
-        .filter(col("user_id") >= 0)
-        .select(
-          col("user_id"), col("p_us"), col("p_id"),
-          col("c_id"), col("c_us"))
-        .localCheckpoint()
     },
     "st14_stream_funnel" -> { (s, dir) =>
       // STREAMING funnel (q29's staged minima with 2h per-stage
@@ -6940,37 +6390,14 @@ object SparkEntry {
       // precision both sides: the state fold works in epoch millis).
       val sp = s
       import sp.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = sp.sqlContext
-      val all = graft.sources.Tables.events(s, dir)
-        .selectExpr("event_id", "ts", "user_id", "event_type", "value")
-        .as[graft.streaming.EventStreams.Event]
-        .collect()
-      val scrambled = all.sortBy(e =>
-        java.lang.Long.rotateLeft(e.event_id * 0x9E3779B97F4A7C15L, 17))
-      val maxMs = all.iterator.map(_.ts.getTime).max
-      def sentinel(t: Long) = graft.streaming.EventStreams.Event(
-        -1L, new java.sql.Timestamp(t), -1L, "sentinel", 0.0)
-      val ms = MemoryStream[graft.streaming.EventStreams.Event]
-      val qname =
-        "st14_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      // state width from the replayed row count — see st10's note
-      graft.operators.PlanScope.narrowForRows(s, all.length.toLong) {
-      val q = graft.streaming.EventStreams.funnelEventTime(ms.toDS())
-        .writeStream.format("memory").queryName(qname)
-        .outputMode("append").start()
-      try {
-        ms.addData(scrambled.toIndexedSeq)
-        q.processAllAvailable()
-        ms.addData(sentinel(maxMs + 4L * 3600 * 1000))
-        q.processAllAvailable()
-        ms.addData(sentinel(maxMs + 8L * 3600 * 1000))
-        q.processAllAvailable()
-      } finally q.stop()
+      val all = Replay.events(s, dir)
+      Replay.toMemory(s, "st14", "append",
+          Seq(Replay.scramble(all, 17)(_.event_id).toSeq),
+          Replay.sentinels(all, 4, 8))(
+          graft.streaming.EventStreams.funnelEventTime(_)) {
+        _.filter(col("user_id") >= 0) // drop the sentinel user
+          .select(col("user_id"), col("stage"))
       }
-      s.table(qname)
-        .filter(col("user_id") >= 0) // drop the sentinel user
-        .select(col("user_id"), col("stage"))
     },
     "st6_eventtime_sessions" -> { (s, dir) =>
       // EVENT-TIME sessionization through the REAL streaming operator
@@ -6983,53 +6410,22 @@ object SparkEntry {
       // itself is hash-checked, not just its batch twin.
       val sp = s
       import sp.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = sp.sqlContext
-      val all = graft.sources.Tables.events(s, dir)
-        .selectExpr("event_id", "ts", "user_id", "event_type", "value")
-        .as[graft.streaming.EventStreams.Event]
-        .collect()
-      // deterministic out-of-order replay: scramble by a hash of event_id
-      val scrambled = all.sortBy(e =>
-        java.lang.Long.rotateLeft(e.event_id * 0x9E3779B97F4A7C15L, 17))
-      val maxMs = all.iterator.map(_.ts.getTime).max
-      def sentinel(t: Long) = graft.streaming.EventStreams.Event(
-        -1L, new java.sql.Timestamp(t), -1L, "sentinel", 0.0)
-      val ms = MemoryStream[graft.streaming.EventStreams.Event]
-      val qname =
-        "st6_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      // state width from the replayed row count — see st10's note
-      graft.operators.PlanScope.narrowForRows(s, all.length.toLong) {
-      val q = graft.streaming.EventStreams.sessionizeEventTime(ms.toDS())
-        .writeStream.format("memory").queryName(qname)
-        .outputMode("append").start()
-      try {
-        ms.addData(scrambled.toIndexedSeq)
-        q.processAllAvailable()
-        // two sentinel batches: the first advances the watermark past
-        // every horizon; the second fires the (watermark-lagged) timeouts
-        ms.addData(sentinel(maxMs + 4L * 3600 * 1000))
-        q.processAllAvailable()
-        ms.addData(sentinel(maxMs + 8L * 3600 * 1000))
-        q.processAllAvailable()
-      } finally q.stop()
-      }
+      val all = Replay.events(s, dir)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id")).orderBy(col("start_ts"))
-      val out = s.table(qname)
-        .filter(col("user_id") >= 0) // drop the sentinel user
-        .select(
-          col("user_id"),
-          row_number().over(w).cast("long").as("session_no"),
-          col("n_events"),
-          round(col("sum_value"), 4).as("sum_value"))
-      // Dataset analysis is eager, so the plan above has already resolved
-      // the memory-sink view to its in-memory rows; dropping the temp
-      // view now frees the catalog entry (repeated invocations in one
-      // long-lived gate session would otherwise accumulate one sink
-      // table + its buffered rows per run) without invalidating `out`.
-      s.catalog.dropTempView(qname)
-      out
+      // two sentinel batches: the first advances the watermark past
+      // every horizon; the second fires the (watermark-lagged) timeouts
+      Replay.toMemory(s, "st6", "append",
+          Seq(Replay.scramble(all, 17)(_.event_id).toSeq),
+          Replay.sentinels(all, 4, 8))(
+          graft.streaming.EventStreams.sessionizeEventTime(_)) {
+        _.filter(col("user_id") >= 0) // drop the sentinel user
+          .select(
+            col("user_id"),
+            row_number().over(w).cast("long").as("session_no"),
+            col("n_events"),
+            round(col("sum_value"), 4).as("sum_value"))
+      }
     },
 
     "st20_stream_native_session" -> { (s, dir) =>
@@ -7043,45 +6439,22 @@ object SparkEntry {
       // which is what the shared gapSession oracle recomputes.
       val sp = s
       import sp.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = sp.sqlContext
-      val all = graft.sources.Tables.events(s, dir)
-        .selectExpr("event_id", "ts", "user_id", "event_type", "value")
-        .as[graft.streaming.EventStreams.Event]
-        .collect()
-      val scrambled = all.sortBy(e =>
-        java.lang.Long.rotateLeft(e.event_id * 0x9E3779B97F4A7C15L, 17))
-      val maxMs = all.iterator.map(_.ts.getTime).max
-      val ms = MemoryStream[graft.streaming.EventStreams.Event]
-      val qname =
-        "st20_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      // state width from the replayed row count — see st10's note
-      graft.operators.PlanScope.narrowForRows(s, all.length.toLong) {
-      val q = graft.streaming.EventStreams
-        .sessionizeNativeStream(ms.toDS().toDF())
-        .writeStream.format("memory").queryName(qname)
-        .outputMode("append").start()
-      try {
-        ms.addData(scrambled.toIndexedSeq)
-        q.processAllAvailable()
-        // one sentinel: session_window emits as soon as the watermark
-        // passes a session's end — no timeout lag to double-flush
-        ms.addData(graft.streaming.EventStreams.Event(
-          -1L, new java.sql.Timestamp(maxMs + 4L * 3600 * 1000),
-          -1L, "sentinel", 0.0))
-        q.processAllAvailable()
-      } finally q.stop()
-      }
+      val all = Replay.events(s, dir)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id")).orderBy(col("start_ts"))
-      val out = s.table(qname)
-        .filter(col("user_id") >= 0) // drop the sentinel user
-        .select(
-          col("user_id"),
-          row_number().over(w).cast("long").as("session_no"),
-          col("n_events"), col("sum_value"))
-      s.catalog.dropTempView(qname)
-      out
+      // one sentinel: session_window emits as soon as the watermark
+      // passes a session's end — no timeout lag to double-flush
+      Replay.toMemory(s, "st20", "append",
+          Seq(Replay.scramble(all, 17)(_.event_id).toSeq),
+          Replay.sentinels(all, 4)) { ds =>
+        graft.streaming.EventStreams.sessionizeNativeStream(ds.toDF())
+      } {
+        _.filter(col("user_id") >= 0) // drop the sentinel user
+          .select(
+            col("user_id"),
+            row_number().over(w).cast("long").as("session_no"),
+            col("n_events"), col("sum_value"))
+      }
     },
 
     // ---- temporal joins (operators the reference lacks entirely) ----
@@ -7442,18 +6815,10 @@ object SparkEntry {
       // to parquet — same identity oracle as io1/io2: any type-mapping
       // or null-handling loss in the ORC writer/reader breaks the hash)
       val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_orc").toString
-      try {
+      Scratch.sealedIn("graft_orc") { case Seq(tmp) =>
         docs.write.mode("overwrite").orc(tmp)
-        graft.operators.CacheScope.sealAfter(
-          s.read.schema(docs.schema).orc(tmp)
-            .select(docs.columns.map(col): _*))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        val root = java.nio.file.Paths.get(tmp)
-        java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+        s.read.schema(docs.schema).orc(tmp)
+          .select(docs.columns.map(col): _*)
       }
     },
     "q20_approx_percentiles" -> { (s, dir) =>
@@ -7551,9 +6916,7 @@ object SparkEntry {
       // state hash-matches io15's oracle exactly (same semantics, new
       // surface), untouched_batches riding from the DML report frame.
       val docs = t(s, dir, "documents")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_sql6").toString
-      try {
+      Scratch.sealedIn("graft_sql6") { case Seq(root) =>
         val thr = docs.agg(max(col("doc_id"))).collect()(0).getLong(0) / 2
         val base = docs.filter(pmod(col("doc_id"), lit(3L)) < 2)
         graft.sources.LakeTable.append(
@@ -7571,18 +6934,12 @@ object SparkEntry {
              |FROM documents WHERE doc_id % 3 = 2""".stripMargin)
         val untouched =
           rep.select(col("untouched_batches")).collect()(0).getLong(0)
-        graft.operators.CacheScope.sealAfter(
-          graft.sources.LakeTable.read(s, root)
-            .groupBy(col("lang"))
-            .agg(
-              count(lit(1)).as("n_docs"),
-              sum(col("n_chars")).as("sum_chars"))
-            .withColumn("untouched_batches", lit(untouched)))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        val rootP = java.nio.file.Paths.get(root)
-        java.nio.file.Files.walk(rootP).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+        graft.sources.LakeTable.read(s, root)
+          .groupBy(col("lang"))
+          .agg(
+            count(lit(1)).as("n_docs"),
+            sum(col("n_chars")).as("sum_chars"))
+          .withColumn("untouched_batches", lit(untouched))
       }
     },
     "sql7_delete_dml" -> { (s, dir) =>
@@ -7592,9 +6949,7 @@ object SparkEntry {
       // dropped/rewritten/untouched batch counts — ride back in the
       // DML report frame and into the hash, same oracle as io20.
       val docs = t(s, dir, "documents")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_sql7").toString
-      try {
+      Scratch.sealedIn("graft_sql7") { case Seq(root) =>
         val mx = docs.agg(max(col("doc_id"))).collect()(0).getLong(0)
         val batchCol = least(lit(3L), expr(s"doc_id * 4 div ${mx + 1}"))
         (0L to 3L).foreach { b =>
@@ -7605,20 +6960,14 @@ object SparkEntry {
         val rep = GraftSql.exec(s, dir,
           s"DELETE FROM LAKE '$root' WHERE doc_id BETWEEN 0 AND $cut")
         val r = rep.collect()(0)
-        graft.operators.CacheScope.sealAfter(
-          graft.sources.LakeTable.read(s, root)
-            .groupBy(col("lang"))
-            .agg(
-              count(lit(1)).as("n_docs"),
-              sum(col("n_chars")).as("sum_chars"))
-            .withColumn("dropped_metadata_only", lit(r.getLong(0)))
-            .withColumn("rewritten_batches", lit(r.getLong(1)))
-            .withColumn("untouched_batches", lit(r.getLong(2))))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        val rootP = java.nio.file.Paths.get(root)
-        java.nio.file.Files.walk(rootP).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+        graft.sources.LakeTable.read(s, root)
+          .groupBy(col("lang"))
+          .agg(
+            count(lit(1)).as("n_docs"),
+            sum(col("n_chars")).as("sum_chars"))
+          .withColumn("dropped_metadata_only", lit(r.getLong(0)))
+          .withColumn("rewritten_batches", lit(r.getLong(1)))
+          .withColumn("untouched_batches", lit(r.getLong(2)))
       }
     },
     "sql9_optimize" -> { (s, dir) =>
@@ -7633,9 +6982,7 @@ object SparkEntry {
       // frame — the oracle replays the equal-width bucket arithmetic
       // to predict batches_after.
       val ord = t(s, dir, "orders")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_sql9").toString
-      try {
+      Scratch.sealedIn("graft_sql9") { case Seq(root) =>
         (0L to 3L).foreach { i =>
           graft.sources.LakeTable.append(
             ord.filter(pmod(col("o_orderkey"), lit(4L)) === i),
@@ -7643,18 +6990,12 @@ object SparkEntry {
         }
         val rep = GraftSql.exec(s, dir,
           s"OPTIMIZE LAKE '$root' BUCKETS 4").collect()(0)
-        graft.operators.CacheScope.sealAfter(
-          GraftSql.exec(s, dir,
-            s"""SELECT o_orderstatus, count(*) AS n_orders,
-               |       round(sum(o_totalprice), 2) AS sum_price
-               |FROM LAKE '$root' GROUP BY o_orderstatus""".stripMargin)
-            .withColumn("batches_before", lit(rep.getLong(0)))
-            .withColumn("batches_after", lit(rep.getLong(1))))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        val rootP = java.nio.file.Paths.get(root)
-        java.nio.file.Files.walk(rootP).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+        GraftSql.exec(s, dir,
+          s"""SELECT o_orderstatus, count(*) AS n_orders,
+             |       round(sum(o_totalprice), 2) AS sum_price
+             |FROM LAKE '$root' GROUP BY o_orderstatus""".stripMargin)
+          .withColumn("batches_before", lit(rep.getLong(0)))
+          .withColumn("batches_after", lit(rep.getLong(1)))
       }
     },
     "sql10_vacuum" -> { (s, dir) =>
@@ -7668,9 +7009,7 @@ object SparkEntry {
       // back unchanged, and time travel to the vacuumed generation now
       // fails loudly (asserted in the spec; the stated tradeoff).
       val docs = t(s, dir, "documents")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_sql10").toString
-      try {
+      Scratch.sealedIn("graft_sql10") { case Seq(root) =>
         val thr = docs.agg(max(col("doc_id"))).collect()(0).getLong(0) / 2
         val base = docs.filter(pmod(col("doc_id"), lit(3L)) < 2)
         graft.sources.LakeTable.append(
@@ -7684,19 +7023,13 @@ object SparkEntry {
           root, "doc_id")
         val rep = GraftSql.exec(s, dir,
           s"VACUUM LAKE '$root' RETAIN 0 HOURS").collect()(0)
-        graft.operators.CacheScope.sealAfter(
-          GraftSql.exec(s, dir,
-            s"""SELECT lang, count(*) AS n_docs,
-               |       sum(n_chars) AS sum_chars
-               |FROM LAKE '$root' GROUP BY lang""".stripMargin)
-            .withColumn("gens_swept", lit(rep.getLong(0)))
-            .withColumn("dirs_swept", lit(rep.getLong(1)))
-            .withColumn("batches_live", lit(rep.getLong(2))))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        val rootP = java.nio.file.Paths.get(root)
-        java.nio.file.Files.walk(rootP).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+        GraftSql.exec(s, dir,
+          s"""SELECT lang, count(*) AS n_docs,
+             |       sum(n_chars) AS sum_chars
+             |FROM LAKE '$root' GROUP BY lang""".stripMargin)
+          .withColumn("gens_swept", lit(rep.getLong(0)))
+          .withColumn("dirs_swept", lit(rep.getLong(1)))
+          .withColumn("batches_live", lit(rep.getLong(2)))
       }
     },
     "sql8_time_travel" -> { (s, dir) =>
@@ -7710,9 +7043,7 @@ object SparkEntry {
       // (the as-of side must show the base, the live side the merged
       // updates and inserts).
       val docs = t(s, dir, "documents")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_sql8").toString
-      try {
+      Scratch.sealedIn("graft_sql8") { case Seq(root) =>
         val thr = docs.agg(max(col("doc_id"))).collect()(0).getLong(0) / 2
         val base = docs.filter(pmod(col("doc_id"), lit(3L)) < 2)
         graft.sources.LakeTable.append(
@@ -7729,7 +7060,7 @@ object SparkEntry {
           .withColumn("doc_id", col("doc_id") + 1000000000L)
         graft.sources.LakeTable.merge(
           updates.unionByName(inserts), root, "doc_id")
-        graft.operators.CacheScope.sealAfter(GraftSql.exec(s, dir,
+        GraftSql.exec(s, dir,
           s"""SELECT 'asof' AS src, lang, count(*) AS n_docs,
              |       sum(n_chars) AS sum_chars
              |FROM LAKE '$root' VERSION AS OF '$gAsof'
@@ -7738,12 +7069,7 @@ object SparkEntry {
              |SELECT 'live' AS src, lang, count(*) AS n_docs,
              |       sum(n_chars) AS sum_chars
              |FROM LAKE '$root'
-             |GROUP BY lang""".stripMargin))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        val rootP = java.nio.file.Paths.get(root)
-        java.nio.file.Files.walk(rootP).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+             |GROUP BY lang""".stripMargin)
       }
     },
     "sql11_pagerank" -> { (s, dir) =>
@@ -7784,11 +7110,7 @@ object SparkEntry {
       // recompute, with feed_rows pinning the delta the second hop
       // actually read.
       val docs = t(s, dir, "documents")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_sql13").toString
-      val cons = java.nio.file.Files
-        .createTempDirectory("graft_sql13_consumer").toString
-      try {
+      Scratch.sealedIn("graft_sql13", "graft_sql13_consumer") { case Seq(root, cons) =>
         val thr = docs.agg(max(col("doc_id"))).collect()(0).getLong(0) / 2
         val base = docs.filter(pmod(col("doc_id"), lit(3L)) < 2)
         graft.sources.LakeTable.append(
@@ -7819,23 +7141,15 @@ object SparkEntry {
         val delta = feed.groupBy(col("lang")).agg(
           sum(sign).as("dn"),
           sum(sign * col("n_chars")).as("dchars"))
-        graft.operators.CacheScope.sealAfter(
-          gold0.join(delta, Seq("lang"), "full_outer")
-            .select(
-              col("lang"),
-              (coalesce(col("n_docs"), lit(0L)) +
-                coalesce(col("dn"), lit(0L))).as("n_docs"),
-              (coalesce(col("sum_chars"), lit(0L)) +
-                coalesce(col("dchars"), lit(0L))).as("sum_chars"))
-            .filter(col("n_docs") > 0)
-            .withColumn("feed_rows", lit(feedRows)))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        Seq(root, cons).foreach { d =>
-          val p = java.nio.file.Paths.get(d)
-          java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-            .foreach(q => java.nio.file.Files.deleteIfExists(q))
-        }
+        gold0.join(delta, Seq("lang"), "full_outer")
+          .select(
+            col("lang"),
+            (coalesce(col("n_docs"), lit(0L)) +
+              coalesce(col("dn"), lit(0L))).as("n_docs"),
+            (coalesce(col("sum_chars"), lit(0L)) +
+              coalesce(col("dchars"), lit(0L))).as("sum_chars"))
+          .filter(col("n_docs") > 0)
+          .withColumn("feed_rows", lit(feedRows))
       }
     },
 
@@ -8356,9 +7670,7 @@ object SparkEntry {
       // column surfaces as NULL (counted, not invented); the aggregate
       // over the merged scan is hash-checked against the split rule
       val ev = graft.sources.Tables.events(s, dir)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_evo_io6").toString
-      try {
+      Scratch.sealedIn("graft_evo_io6") { case Seq(tmp) =>
         ev.filter(pmod(col("event_id"), lit(2)) === 0)
           .select(col("event_id"), col("user_id"), col("event_type"))
           .write.mode("overwrite").parquet(s"$tmp/batch=a")
@@ -8366,18 +7678,12 @@ object SparkEntry {
           .select(col("event_id"), col("user_id"), col("event_type"),
             col("value"))
           .write.mode("overwrite").parquet(s"$tmp/batch=b")
-        graft.operators.CacheScope.sealAfter(
-          s.read.option("mergeSchema", "true").parquet(tmp)
-            .groupBy(col("event_type"))
-            .agg(
-              count(lit(1)).as("n_rows"),
-              count(col("value")).as("n_with_value"),
-              round(sum(col("value")), 2).as("sum_value_odd")))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        val root = java.nio.file.Paths.get(tmp)
-        java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+        s.read.option("mergeSchema", "true").parquet(tmp)
+          .groupBy(col("event_type"))
+          .agg(
+            count(lit(1)).as("n_rows"),
+            count(col("value")).as("n_with_value"),
+            round(sum(col("value")), 2).as("sum_value_odd"))
       }
     },
     "g41_node2vec" -> ((s, dir) =>
@@ -8448,9 +7754,7 @@ object SparkEntry {
       // 2 partitions and scanning all of them — bytes never read.
       import org.apache.spark.sql.expressions.Window
       val ev = graft.sources.Tables.events(s, dir)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_dpp_q33").toString
-      try {
+      Scratch.sealedIn("graft_dpp_q33") { case Seq(tmp) =>
         ev.select(col("event_id"), col("user_id"), col("value"),
             col("event_type"))
           .write.mode("overwrite").partitionBy("event_type").parquet(tmp)
@@ -8462,18 +7766,12 @@ object SparkEntry {
             col("n_type") / sum(col("n_type")).over(Window.partitionBy()))
           .filter(col("frac") >= 0.2)
           .select(col("event_type"), col("n_type"))
-        graft.operators.CacheScope.sealAfter(
-          fact.join(dim, Seq("event_type"))
-            .groupBy(col("event_type"))
-            .agg(
-              count(lit(1)).as("n_events"),
-              round(sum(col("value")), 2).as("sum_value"),
-              max(col("n_type")).as("n_type")))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        val root = java.nio.file.Paths.get(tmp)
-        java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+        fact.join(dim, Seq("event_type"))
+          .groupBy(col("event_type"))
+          .agg(
+            count(lit(1)).as("n_events"),
+            round(sum(col("value")), 2).as("sum_value"),
+            max(col("n_type")).as("n_type"))
       }
     }
   )

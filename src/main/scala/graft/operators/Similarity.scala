@@ -1085,10 +1085,11 @@ object Similarity {
     * decision (≤ |probes|·nProbe ids, ranked against the
     * broadcast-small centroid table), so it is collected and pushed as
     * a literal `c_id IN (...)` predicate: on a partitioned disk index
-    * the scan then touches ONLY the probed list directories
-    * (`PartitionFilters`, plan-asserted) — no full-index pass of any
-    * kind, which is what makes a 100 TB index probeable from a small
-    * job. Ranking keys use the rounded similarity + vec_id as
+    * the scoring scan then touches ONLY the probed list directories
+    * (`PartitionFilters`, plan-asserted), which is what makes a 100 TB
+    * index probeable from a small job. The probe vectors are read once,
+    * by a pushed-down `vec_id IN (...)`, in the collect that ranks the
+    * lists. Ranking keys use the rounded similarity + vec_id as
     * everywhere else.
     */
   def probeIvfPruned(
@@ -1109,12 +1110,14 @@ object Similarity {
 
   /** The one pruned-list probe behind the three disk layouts. The
     * (probe, list) pairs are a tiny driver-side decision — ≤ |probes| ×
-    * nProbe rows of a broadcast × broadcast product — collected and
-    * pushed as a literal `c_id IN (...)`, so on a partitioned layout the
-    * scan reads only the probed list directories (`PartitionFilters`,
-    * plan-asserted). `lists` carries each row's decoded vector `vec` and
-    * its norm `nrm`; `allowed`, when given, semi-joins the candidates
-    * before ranking; the rounded score lands in column `sim`.
+    * nProbe rows of a broadcast × broadcast product — collected with
+    * each probe's vector and pushed as a literal `c_id IN (...)`, so on a
+    * partitioned layout the scoring pass reads only the probed list
+    * directories (`PartitionFilters`, plan-asserted) and joins the
+    * probes from those collected rows, never from another scan.
+    * `lists` carries each row's decoded vector `vec` and its norm `nrm`;
+    * `allowed`, when given, semi-joins the candidates before ranking; the
+    * rounded score lands in column `sim`.
     */
   private def probePruned(
       lists: DataFrame, vec: Column, nrm: Column, centroids: DataFrame,
@@ -1123,17 +1126,18 @@ object Similarity {
     val spark = lists.sparkSession
     import spark.implicits._
     val pairs = nearestLists(probes, centroids, nProbe)
-      .select(col("probe_id"), col("c_id"))
+      .select(col("probe_id"), col("c_id"), col("p"), col("p_nrm"))
+      .as[(Long, Long, Seq[Double], Double)]
       .collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
     val pruned = lists // literal IN → partition pruning
       .filter(col("c_id").isin(pairs.map(_._2).distinct.toSeq: _*))
     val candidates = allowed.fold(pruned)(ok =>
       pruned.join(ok.select(col("vec_id")), Seq("vec_id"), "left_semi"))
     topBySim(
       candidates
-        .join(broadcast(pairs.toSeq.toDF("probe_id", "c_id")), Seq("c_id"))
-        .join(probes, Seq("probe_id"))
+        .join(
+          broadcast(pairs.toSeq.toDF("probe_id", "c_id", "p", "p_nrm")),
+          Seq("c_id"))
         .filter(col("vec_id") =!= col("probe_id"))
         .select(col("probe_id"), col("vec_id"), probeSim(vec, nrm).as(sim)),
       k, sim)

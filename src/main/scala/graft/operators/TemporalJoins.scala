@@ -352,19 +352,6 @@ object TemporalJoins {
       .drop("_bucket")
   }
 
-  /** Time-series GAP FILL onto an explicit hourly grid: one row per
-    * (user, hour) across the table's global hour span, carrying the
-    * last event value at or before that hour (latest ts wins within an
-    * hour, event_id breaks exact-ts ties), forward-filled with an
-    * ignore-nulls running `last()`; hours before a user's first event
-    * stay NULL. The resample/interpolate step between an irregular
-    * event stream and the regular observations a model consumes.
-    *
-    * Scale shape: the grid is GENERATED (|users| × |hours| rows from a
-    * 1-row broadcast bounds frame), never scanned; the per-hour
-    * survivor is one map-side-combined max_by aggregate; the fill is
-    * ONE window per user. Output: `user_id, hour_str, filled_value`.
-    */
   /** POINT-IN-TIME state join (the feature-store correctness primitive):
     * every event becomes an SCD2 validity interval `[ts, next_ts)` per
     * user (q24's lead-window build), and each probe row joins the
@@ -408,6 +395,19 @@ object TemporalJoins {
         round(coalesce(col("state_value"), lit(0.0)), 2).as("state_value"))
   }
 
+  /** Time-series GAP FILL onto an explicit hourly grid: one row per
+    * (user, hour) across the table's global hour span, carrying the
+    * last event value at or before that hour (latest ts wins within an
+    * hour, event_id breaks exact-ts ties), forward-filled with an
+    * ignore-nulls running `last()`; hours before a user's first event
+    * stay NULL. The resample/interpolate step between an irregular
+    * event stream and the regular observations a model consumes.
+    *
+    * Scale shape: the grid is GENERATED (|users| × |hours| rows from a
+    * 1-row broadcast bounds frame), never scanned; the per-hour
+    * survivor is one map-side-combined max_by aggregate; the fill is
+    * ONE window per user. Output: `user_id, hour_str, filled_value`.
+    */
   def gapFillHourly(events: DataFrame): DataFrame = {
     val b = events.agg(
       date_trunc("hour", min(col("ts"))).as("mn"),

@@ -168,17 +168,6 @@ object EventStreams {
       batchId, dlqPath)
   }
 
-  /** Watermarked windowed APPROXIMATE distinct-user count per
-    * (window, event_type) — the cardinality question a streaming
-    * dashboard actually asks at 100 TB/day rates, where exact distinct
-    * state is user-cardinality-sized per window and the HLL++ sketch
-    * (`approx_count_distinct`, rsd 0.01) is CONSTANT per group. Runs
-    * unchanged on a batch frame (the oracle/differential path: the
-    * sketch is deterministic for a given input set, so a fully-flushed
-    * stream equals the batch twin exactly — unit-tested); exact count
-    * rides beside it in the batch form's test to pin the rsd contract.
-    * Output: `win_start STRING, event_type, approx_users LONG`.
-    */
   /** Streaming per-key TOP-K through the engine's own bounded aggregate
     * (`graft_topk`, the `TypedImperativeAggregate` behind e9/e11): the
     * k-capped heap IS the streaming state — each micro-batch folds its
@@ -204,6 +193,17 @@ object EventStreams {
         col("t.vec_id").as("event_id"),
         col("t.cos_sim").as("val_r"))
 
+  /** Watermarked windowed APPROXIMATE distinct-user count per
+    * (window, event_type) — the cardinality question a streaming
+    * dashboard actually asks at 100 TB/day rates, where exact distinct
+    * state is user-cardinality-sized per window and the HLL++ sketch
+    * (`approx_count_distinct`, rsd 0.01) is CONSTANT per group. Runs
+    * unchanged on a batch frame (the oracle/differential path: the
+    * sketch is deterministic for a given input set, so a fully-flushed
+    * stream equals the batch twin exactly — unit-tested); exact count
+    * rides beside it in the batch form's test to pin the rsd contract.
+    * Output: `win_start STRING, event_type, approx_users LONG`.
+    */
   def windowedApproxDistinct(
       events: DataFrame,
       window: String = "5 minutes",

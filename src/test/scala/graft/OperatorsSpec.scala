@@ -955,6 +955,22 @@ class StreamingSpec extends AnyFunSuite {
     assert(got == batch)
   }
 
+  test("stream replays drop their memory-sink views and return frames that still evaluate") {
+    val sfDir = "/root/testdata/sf0.001"
+    def memViews(): Set[String] = spark.catalog.listTables().collect()
+      .filter(_.isTemporary).map(_.name).filter(_.contains("_mem_")).toSet
+    val before = memViews()
+    Seq(
+      "st6_eventtime_sessions", "st8_stream_dedup", "st10_watermark_dedup",
+      "st14_stream_funnel", "st17_tws_ledger", "st19_stream_cms",
+      "st20_stream_native_session", "st24_stream_asof",
+      "st27_stream_asof_fwd", "st28_stream_asof_near").foreach { q =>
+      val out = SparkEntry.queries(q)(spark, sfDir)
+      assert(memViews() == before, s"$q left its memory-sink view registered")
+      assert(out.count() > 0, s"$q returned no rows after its view was dropped")
+    }
+  }
+
   test("batch sessionization: session count and sums are gap-consistent") {
     val sp = spark
     import sp.implicits._

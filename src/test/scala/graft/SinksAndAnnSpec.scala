@@ -112,6 +112,14 @@ class AnnRecallSpec extends AnyFunSuite {
       assert(
         "PartitionFilters: \\[[^\\]]*c_id".r.findFirstIn(p).isDefined,
         "c_id pruning missing from scan: " + p)
+      // ... on EVERY scan of the lists: the probe vectors ride the
+      // (probe, list) collect, so scoring reads no list unpruned
+      val listScans = p.split("\n")
+        .filter(l => l.contains("FileScan parquet") && l.contains("/lists"))
+      assert(listScans.nonEmpty, p)
+      listScans.foreach(l => assert(
+        "PartitionFilters: \\[[^\\]]*c_id".r.findFirstIn(l).isDefined,
+        "unpruned lists scan: " + l))
       // and exactness through the round-trip at nProbe = nList
       val exact = Similarity.knnBatch(emb, probes, k = 10)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet

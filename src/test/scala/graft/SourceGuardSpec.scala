@@ -7,8 +7,10 @@ import scala.jdk.CollectionConverters._
 
 /** Each concern keeps its one home in `src/main/scala`: sessions are built
   * only by `GraftSession`, session conf is set or unset only by
-  * `ConfScope`, and `Similarity` states its top-k window and its IVF list
-  * choice once each. A hand-rolled copy elsewhere fails here.
+  * `ConfScope`, `Similarity` states its top-k window and its IVF list
+  * choice once each, and the query registry stages temp dirs only
+  * through `Scratch` and drives memory-sink replays only through
+  * `Replay`. A hand-rolled copy elsewhere fails here.
   */
 class SourceGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -34,11 +36,20 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(offenders("""conf\s*\.\s*(set|unset)\s*\(""", "ConfScope.scala").isEmpty)
   }
 
+  private def occurrences(file: String, literal: String): Int =
+    java.util.regex.Pattern.quote(literal).r
+      .findAllMatchIn(Files.readString(root.resolve(file))).size
+
   test("Similarity has one top-k window and one IVF list choice") {
-    val src = Files.readString(root.resolve("graft/operators/Similarity.scala"))
-    def count(s: String): Int =
-      java.util.regex.Pattern.quote(s).r.findAllMatchIn(src).size
-    assert(count("row_number()") == 1)
-    assert(count("orderBy(desc(\"c_sim\")") == 1)
+    val sim = "graft/operators/Similarity.scala"
+    assert(occurrences(sim, "row_number()") == 1)
+    assert(occurrences(sim, "orderBy(desc(\"c_sim\")") == 1)
+  }
+
+  test("SparkEntry stages temp dirs only through Scratch and streams only through Replay") {
+    val entry = "graft/SparkEntry.scala"
+    assert(occurrences(entry, "createTempDirectory") == 0)
+    assert(occurrences(entry, "Files.walk") == 0)
+    assert(occurrences(entry, "format(\"memory\")") == 0)
   }
 }
