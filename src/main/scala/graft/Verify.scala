@@ -1,6 +1,8 @@
 package graft
 import graft.core.GraftSession
 import java.nio.file.{Files, Paths}
+import org.json4s._
+import org.json4s.jackson.JsonMethods.compact
 import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -28,24 +30,22 @@ object Verify {
         Some(name)
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    Files.writeString(Paths.get(s"$outDir/failed_queries.json"),
-      failed.map(q).mkString("[", ",", "]"))
+    writeJson(outDir,
+      SparkEntry.oracleSql.filter { case (k, _) => only.forall(_.contains(k)) },
+      failed)
     spark.stop()
+  }
+
+  /** `oracle_sql.json` (query → DuckDB SQL) and `failed_queries.json`.
+    * json4s escapes every control char: a tab or CR in builder-authored
+    * SQL must not make the driver's json.load fail and silently zero the
+    * round's correctness.
+    */
+  private[graft] def writeJson(outDir: String, oracle: Iterable[(String, String)],
+      failed: Seq[String]): Unit = {
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      compact(JObject(oracle.map { case (k, v) => k -> JString(v) }.toList)))
+    Files.writeString(Paths.get(s"$outDir/failed_queries.json"),
+      compact(JArray(failed.map(JString(_)).toList)))
   }
 }

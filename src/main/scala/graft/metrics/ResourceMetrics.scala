@@ -41,28 +41,6 @@ final case class ResourceSnapshot(
     inputRecords - o.inputRecords,
     shuffleRecords - o.shuffleRecords)
 
-  private def mb(b: Long): Double = math.round(b / 1048576.0 * 100) / 100.0
-
-  /** Compact JSON fragment (MB-denominated) for bench output.
-    * `executor_run_ms` is task WALL-clock (inflates on a CPU-contended
-    * host); `executor_cpu_ms` is actual CPU time (it does not) — the pair
-    * makes a contended run self-diagnosing.
-    */
-  def toJson: String =
-    s"""{"shuffle_read_mb":${mb(shuffleReadBytes)},""" +
-      s""""shuffle_write_mb":${mb(shuffleWriteBytes)},""" +
-      s""""spill_mb":${mb(memorySpillBytes + diskSpillBytes)},""" +
-      s""""input_mb":${mb(inputBytes)},""" +
-      // row counts are WORK INVARIANTS: they do not drift with host
-      // speed, compression, or contention — the cross-round currency
-      // the r14 verdict asked for when walls and CPU seconds both
-      // inflated on identical plans
-      s""""input_rows":$inputRecords,""" +
-      s""""shuffle_rows":$shuffleRecords,""" +
-      s""""executor_run_ms":$executorRunMs,""" +
-      s""""executor_cpu_ms":$executorCpuMs,""" +
-      s""""gc_ms":$jvmGcMs}"""
-
   /** `metric,value` CSV — the analogue of the reference's per-node
     * monitoring CSVs (PerformanceMonitor.java:83-135), with totals
     * instead of sampled peaks (single-JVM local mode has no per-node

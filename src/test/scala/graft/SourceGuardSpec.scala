@@ -10,7 +10,9 @@ import scala.jdk.CollectionConverters._
   * `ConfScope`, `Similarity` states its top-k window and its IVF list
   * choice once each, and the query registry stages temp dirs only
   * through `Scratch` and drives memory-sink replays only through
-  * `Replay`. A hand-rolled copy elsewhere fails here.
+  * `Replay`, and `Bench` and `Verify` read and write JSON only through
+  * json4s (no regex reads JSON back, no JSON is built by `mkString`). A
+  * hand-rolled copy elsewhere fails here.
   */
 class SourceGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -51,5 +53,13 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(occurrences(entry, "createTempDirectory") == 0)
     assert(occurrences(entry, "Files.walk") == 0)
     assert(occurrences(entry, "format(\"memory\")") == 0)
+  }
+
+  test("Bench and Verify read and write JSON only through json4s") {
+    for {
+      file <- Seq("graft/Bench.scala", "graft/Verify.scala")
+      literal <- Seq("findFirstMatchIn", "findAllMatchIn", "mkString(\"{\"",
+        "mkString(\"[\", \",\", \"]\")")
+    } assert(occurrences(file, literal) == 0, s"$literal in $file")
   }
 }

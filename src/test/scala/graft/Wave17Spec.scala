@@ -1,7 +1,6 @@
 package graft
 
 import graft.core.ConfScope
-import graft.metrics.RegressionRule
 import graft.operators.{PageRank, PageRankConfig, PlanScope}
 import graft.sources.{ClaimTimeoutException, CommitClaim, LakeTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -10,64 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-17: the SQL graph verbs (PAGERANK/COMPONENTS — plumbing over
   * the audited operators), the offset-relative CHANGES … CONSUMER verb,
-  * the tiny-graph planning scope, the CPU-evidenced regression rule on
-  * the r16 false-flag snapshot, and claim ownership + heartbeat.
+  * the tiny-graph planning scope, and claim ownership + heartbeat.
   */
-class RegressionRuleSpec extends AnyFunSuite {
-
-  // the r16 end-of-round window VERBATIM (BENCH_EOD.json vs the
-  // committed idle BENCH_DETAIL.json at the same HEAD): three flags,
-  // all idle-clean — the rule must now emit zero regressions while
-  // still demoting all three to discounted suspects
-  private val r16HostRatio = math.max(1.0, math.max(0.81 / 0.78, 0.86 / 0.97))
-  private val r16Samples = Seq(
-    // wall 2.2× idle, cpu 2.0× (hyperthread stealing), gc 5.7× — the
-    // co-tenant GC-wake shape
-    RegressionRule.Sample("g18_hub_salt32", 23.8, 5120.19, 419.273, 65.685),
-    // 1.7 s of idle cpu "quadrupling" under a burst — sub-5 s noise
-    RegressionRule.Sample("g19_bfs_hops", 1.7, 0.74, 7.032, 5.216),
-    // wall 2.3× at FLAT cpu — scheduling delay by definition
-    RegressionRule.Sample("g35_modularity", 4.5, 1.12, 24.505, 1.060))
-  private val r16Idle = Map(
-    "g18_hub_salt32" -> RegressionRule.IdleRef(10.75, 4609.16, 207.470, 11.612),
-    "g19_bfs_hops" -> RegressionRule.IdleRef(0.65, 0.70, 1.672, 0.0),
-    "g35_modularity" -> RegressionRule.IdleRef(1.95, 1.01, 20.105, 0.988))
-
-  test("the r16 contended window emits ZERO regressions, 3 demotions") {
-    val v = RegressionRule.judge(r16Samples, r16Idle, r16HostRatio, Set.empty)
-    assert(v.regressions.isEmpty, s"false flags survived: ${v.regressions}")
-    assert(v.demoted.toSet ==
-      Set("g18_hub_salt32", "g19_bfs_hops", "g35_modularity"))
-    assert(v.workChanged.isEmpty)
-  }
-
-  test("a genuine regression (cpu up, gc flat, work matched) still fires") {
-    val v = RegressionRule.judge(
-      Seq(RegressionRule.Sample("real_regression", 5.0, 100.0, 30.0, 1.0)),
-      Map("real_regression" -> RegressionRule.IdleRef(2.0, 100.0, 10.0, 0.9)),
-      r16HostRatio, Set.empty)
-    assert(v.regressions == Seq("real_regression"))
-    assert(v.demoted.isEmpty)
-  }
-
-  test("work moved ⇒ workChanged, never a wall regression") {
-    val v = RegressionRule.judge(
-      Seq(RegressionRule.Sample("plan_moved", 9.0, 200.0, 30.0, 1.0)),
-      Map("plan_moved" -> RegressionRule.IdleRef(2.0, 100.0, 10.0, 0.9)),
-      1.0, Set.empty)
-    assert(v.workChanged == Seq("plan_moved"))
-    assert(v.regressions.isEmpty)
-  }
-
-  test("an existing contention suspect is excluded outright") {
-    val v = RegressionRule.judge(
-      Seq(RegressionRule.Sample("suspect", 5.0, 100.0, 30.0, 1.0)),
-      Map("suspect" -> RegressionRule.IdleRef(2.0, 100.0, 10.0, 0.9)),
-      1.0, Set("suspect"))
-    assert(v.regressions.isEmpty && v.demoted.isEmpty)
-  }
-}
-
 class SqlGraphVerbSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   private val sfDir = "/root/testdata/sf0.001"

@@ -43,33 +43,6 @@ class Wave18Spec extends AnyFunSuite {
     assert(spark.conf.getOption(bloomKey) == beforeBloom)
   }
 
-  test("confirmDemoted: canned snapshots close the one-round blind spot") {
-    import graft.metrics.RegressionRule.{confirmDemoted, IdleRef, Sample}
-    val idle = IdleRef(wallSec = 10.0, workMb = 100.0, cpuSec = 40.0,
-      gcSec = 1.0)
-    // allocation-heavy true regression: re-run still 3x wall at matched
-    // work, cpu genuinely up -> confirmed even though gc tripled (the
-    // gc-wake demotion is not honored on a fresh System.gc'd re-run)
-    assert(confirmDemoted(
-      Sample("q", 30.0, 101.0, 90.0, 9.0), idle, hostRatio = 1.0))
-    // contention that moved on: wall recovered -> stays demoted
-    assert(!confirmDemoted(
-      Sample("q", 11.0, 101.0, 42.0, 1.0), idle, hostRatio = 1.0))
-    // slow wall but cpu flat (scheduling delay persists, not engine)
-    assert(!confirmDemoted(
-      Sample("q", 30.0, 101.0, 41.0, 1.0), idle, hostRatio = 1.0))
-    // work moved on the re-run: plan signal, not a wall verdict
-    assert(!confirmDemoted(
-      Sample("q", 30.0, 200.0, 90.0, 1.0), idle, hostRatio = 1.0))
-    // sub-5s idle cpu carries no ratio signal
-    assert(!confirmDemoted(
-      Sample("q", 3.0, 1.0, 4.0, 0.0),
-      IdleRef(1.0, 1.0, 2.0, 0.0), hostRatio = 1.0))
-    // host-speed discount: 2.2x wall on a 1.2x-slower host is clean
-    assert(!confirmDemoted(
-      Sample("q", 22.0, 101.0, 90.0, 1.0), idle, hostRatio = 1.2))
-  }
-
   test("an explicit session bloom setting survives the scope round-trip") {
     // set by hand, not through ConfScope: an outer ConfScope would hold
     // the key, and the narrowing scope under test would then leave it
