@@ -374,26 +374,15 @@ object GraftSql {
       root: String,
       key: String,
       consumerDir: String): DataFrame = {
-    import org.apache.spark.sql.functions.lit
-    val lk = graft.sources.LakeTable
-    val head = lk.currentName(spark, root)
-      .getOrElse(sys.error(s"nothing committed under $root"))
-    graft.streaming.LakeChangeFeed.committedGen(spark, consumerDir) match {
-      case Some(f) if f == head =>
-        // caught up: typed empty feed frame, offset untouched
-        lk.changesBetween(spark, root, key, head, head)
-      case Some(f) =>
-        val feed =
-          lk.changesBetween(spark, root, key, f, head).localCheckpoint()
-        graft.streaming.LakeChangeFeed.commitGen(spark, consumerDir, head)
-        feed
-      case None =>
-        val snap = lk.readAt(spark, root, head)
-          .withColumn("_change_type", lit("insert"))
-          .withColumn("_generation", lit(lk.ordinal(head)))
-          .localCheckpoint()
-        graft.streaming.LakeChangeFeed.commitGen(spark, consumerDir, head)
-        snap
+    var feed = Option.empty[DataFrame]
+    graft.streaming.LakeChangeFeed.poll(spark, root, key, consumerDir) {
+      (delta, _, _) => feed = Some(delta.localCheckpoint())
+    }
+    feed.getOrElse {
+      // caught up: typed empty feed frame, offset untouched
+      val lk = graft.sources.LakeTable
+      val head = lk.currentName(spark, root).get
+      lk.changesBetween(spark, root, key, head, head)
     }
   }
 }

@@ -4063,10 +4063,11 @@ object SparkEntry {
       // SNAPSHOT / VERSION-AS-OF read (Delta time travel / Iceberg
       // snapshots; completes the lifecycle family with io7 compaction
       // and io11 deletion vectors): three deterministic batches commit
-      // as versions 1..3 (data dirs first, manifest rows last), the
-      // read plans VERSION AS OF 2 from the manifest — version 3's
-      // rows must be invisible even though its files sit in the same
-      // tree. The oracle replays the batch rule at the cut.
+      // as versions 1..3 (data dirs first, then a manifest generation
+      // and the pointer swap), the read plans VERSION AS OF 2 from the
+      // live generation — version 3's rows must be invisible even
+      // though its files sit in the same tree. The oracle replays the
+      // batch rule at the cut.
       val docs = t(s, dir, "documents")
       Scratch.sealedIn("graft_io12") { case Seq(root) =>
         (0 to 2).foreach { b =>
@@ -4085,13 +4086,13 @@ object SparkEntry {
       // SNAPSHOT EXPIRATION / VACUUM — io12's lifecycle close: the
       // same three mod-3 batches commit as versions 1..3 plus a fake
       // ORPHAN dir (a crashed commit), then expire(cut=2) checkpoints
-      // the as-of-2 state into one dir, swaps the manifest to
+      // the as-of-2 state into one dir, publishes the generation
       // {(2, ckpt), (3, v3)} and sweeps expired + orphan dirs. The
       // result is the as-of-3 read AFTER expiry — byte-identical to
       // the full table (the oracle is the plain ground truth), with
       // the post-expiry manifest row count riding as a hash-locked
       // column. Expired-read-fails + orphan-swept + dirs-deleted are
-      // spec-locked (Wave12).
+      // spec-locked (SnapshotExpireSpec).
       val docs = t(s, dir, "documents")
       Scratch.sealedIn("graft_io12b") { case Seq(root) =>
         (0 to 2).foreach { b =>
@@ -4099,10 +4100,12 @@ object SparkEntry {
             docs.filter(pmod(col("doc_id"), lit(3L)) === b),
             root, version = b + 1)
         }
-        // crashed commit: data landed, manifest row never did
+        // crashed commit: data landed, no generation published
         docs.limit(5).write.parquet(s"$root/data/v=9")
-        graft.sources.Snapshots.expire(s, root, cut = 2)
-        val mrows = s.read.parquet(s"$root/manifest")
+        // single-maintenance-writer collect-now (grace 0)
+        graft.sources.Snapshots.expire(s, root, cut = 2, graceMs = 0L)
+        val gen = graft.sources.Snapshots.currentGen(s, root).get
+        val mrows = s.read.parquet(s"$root/manifest/g=$gen")
           .agg(count(lit(1)).as("manifest_rows"))
         graft.sources.Snapshots.readVersion(s, root, asOf = 3)
           .groupBy(col("lang"))
@@ -4113,14 +4116,13 @@ object SparkEntry {
       }
     },
     "io12c_atomic_expire" -> { (s, dir) =>
-      // ATOMIC-POINTER snapshot lifecycle — io12b's one named
-      // non-atomic step (the manifest rewrite) closed: manifests are
+      // ATOMIC-POINTER snapshot lifecycle under crashes: manifests are
       // immutable GENERATIONS and the live one is a tiny `_current`
       // pointer updated by ONE atomic rename, so every crash state
-      // reads consistently. Commits 1..3 go through commitPtr; a
-      // crashed COMMIT's orphan data dir and a crashed EXPIRE's
-      // unswapped generation are both planted (each invisible — the
-      // pointer never moved); expirePtr(2) then checkpoints, publishes
+      // reads consistently. After commits 1..3, a crashed COMMIT's
+      // orphan data dir and a crashed EXPIRE's unswapped generation
+      // are both planted (each invisible — the pointer never moved);
+      // expire(2) then checkpoints, publishes
       // with one rename, and sweeps expired dirs + orphans + stale
       // generations. As-of-3 after expiry is byte-identical to the
       // full table; manifest_rows = 2 locks the published generation,
@@ -4130,7 +4132,7 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       Scratch.sealedIn("graft_io12c") { case Seq(root) =>
         (0 to 2).foreach { b =>
-          graft.sources.Snapshots.commitPtr(
+          graft.sources.Snapshots.commit(
             docs.filter(pmod(col("doc_id"), lit(3L)) === b),
             root, version = b + 1)
         }
@@ -4142,13 +4144,13 @@ object SparkEntry {
           s, root, 99L, Seq((1, s"$root/data/v=1")))
         // single-maintenance-writer collect-now (grace 0): this row
         // hash-locks n_gens = 1, the VACUUM-style immediate sweep
-        graft.sources.Snapshots.expirePtr(s, root, cut = 2, graceMs = 0L)
+        graft.sources.Snapshots.expire(s, root, cut = 2, graceMs = 0L)
         val gen = graft.sources.Snapshots.currentGen(s, root).get
         val mrows = s.read.parquet(s"$root/manifest/g=$gen")
           .agg(count(lit(1)).as("manifest_rows"))
         val nGens = new java.io.File(s"$root/manifest").listFiles()
           .count(f => f.isDirectory && f.getName.startsWith("g="))
-        graft.sources.Snapshots.readVersionPtr(s, root, asOf = 3)
+        graft.sources.Snapshots.readVersion(s, root, asOf = 3)
           .groupBy(col("lang"))
           .agg(
             count(lit(1)).as("n_docs"),
@@ -4169,14 +4171,14 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       Scratch.sealedIn("graft_io14") { case Seq(root) =>
         (0 to 2).foreach { b =>
-          graft.sources.Snapshots.commitPtr(
+          graft.sources.Snapshots.commit(
             docs.filter(pmod(col("doc_id"), lit(3L)) === b),
             root, version = b + 1)
         }
         val changes =
-          graft.sources.Snapshots.changesSincePtr(s, root, 1, 3)
+          graft.sources.Snapshots.changesSince(s, root, 1, 3)
         val emptyPoll =
-          graft.sources.Snapshots.changesSincePtr(s, root, 3, 9).count()
+          graft.sources.Snapshots.changesSince(s, root, 3, 9).count()
         changes
           .groupBy(col("lang"))
           .agg(
@@ -4275,20 +4277,20 @@ object SparkEntry {
               .option("partitionOverwriteMode", "dynamic")
               .partitionBy("feed_to")
               .parquet(out)
-          graft.sources.Snapshots.commitPtr(
+          graft.sources.Snapshots.commit(
             docs.filter(pmod(col("doc_id"), lit(3L)) === 0), bronze, 1)
           val ticks = MemoryStream[Int]
           val q = graft.streaming.ChangeFeed.streamingConsumer(
             ticks.toDS().toDF(), bronze, consumer)(sink)
           try {
             ticks.addData(1); q.processAllAvailable() // consumes (0, 1]
-            graft.sources.Snapshots.commitPtr(
+            graft.sources.Snapshots.commit(
               docs.filter(pmod(col("doc_id"), lit(3L)) === 1), bronze, 2)
-            graft.sources.Snapshots.commitPtr(
+            graft.sources.Snapshots.commit(
               docs.filter(pmod(col("doc_id"), lit(3L)) === 2), bronze, 3)
             // the crash: (1, 3] was processed but the offset commit died
             sink(graft.sources.Snapshots
-              .changesSincePtr(s, bronze, 1, 3), 1, 3)
+              .changesSince(s, bronze, 1, 3), 1, 3)
             ticks.addData(2); q.processAllAvailable() // redelivers (1, 3]
             ticks.addData(3); q.processAllAvailable() // caught up: no-op
           } finally q.stop()
@@ -4483,11 +4485,11 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       Scratch.sealedIn("graft_p13b", "graft_p13c", "graft_p13s") {
         case Seq(bronze, consumer, silver) =>
-          graft.sources.Snapshots.commitPtr(docs, bronze, 1)
+          graft.sources.Snapshots.commit(docs, bronze, 1)
           var first = true
           def applyPoll(from: Int, to: Int): Unit = {
             val delta = graft.sources.Snapshots
-              .changesSinceVersionedPtr(s, bronze, from, to)
+              .changesSinceVersioned(s, bronze, from, to)
             val dataCols = delta.columns.filter(_ != "_commit_version")
             val latest = delta.groupBy(col("doc_id"))
               .agg(max_by(
@@ -4502,10 +4504,10 @@ object SparkEntry {
           graft.streaming.ChangeFeed.poll(s, bronze, consumer) {
             (_, from, to) => applyPoll(from, to)
           }
-          graft.sources.Snapshots.commitPtr(
+          graft.sources.Snapshots.commit(
             docs.filter(pmod(col("doc_id"), lit(2L)) === 0)
               .withColumn("n_chars", col("n_chars") + 10L), bronze, 2)
-          graft.sources.Snapshots.commitPtr(
+          graft.sources.Snapshots.commit(
             docs.filter(pmod(col("doc_id"), lit(4L)) === 0)
               .withColumn("n_chars", col("n_chars") + 100L), bronze, 3)
           graft.streaming.ChangeFeed.poll(s, bronze, consumer) {
@@ -5525,12 +5527,12 @@ object SparkEntry {
       val all = EdgeListReader.fromOrdersCached(s, dir)
       val pred = (col("src") + col("dst")) % 5 =!= 0
       Scratch.sealedIn("graft_p12") { case Seq(root) =>
-        graft.sources.Snapshots.commitPtr(all.filter(pred), root, 1)
-        graft.sources.Snapshots.commitPtr(all.filter(!pred), root, 2)
+        graft.sources.Snapshots.commit(all.filter(pred), root, 1)
+        graft.sources.Snapshots.commit(all.filter(!pred), root, 2)
         val oldEdges =
-          graft.sources.Snapshots.changesSincePtr(s, root, 0, 1)
+          graft.sources.Snapshots.changesSince(s, root, 0, 1)
         val delta =
-          graft.sources.Snapshots.changesSincePtr(s, root, 1, 2)
+          graft.sources.Snapshots.changesSince(s, root, 1, 2)
         val prior = PageRank.runFixed(s, oldEdges, k = 3).ranks
         val res = PageRank.runFixed(
           s, oldEdges.union(delta), k = 2, initRanks = Some(prior))
@@ -5588,24 +5590,24 @@ object SparkEntry {
       // narrowed planning for the fixture-sized corpus — see e7's note
       graft.operators.PlanScope.narrowFor(emb) {
       Scratch.sealedIn("graft_p15_feed", "graft_p15_idx") { case Seq(feed, idxRoot) =>
-        graft.sources.Snapshots.commitPtr(
+        graft.sources.Snapshots.commit(
           emb.filter(pmod(col("vec_id"), lit(3)) < 2), feed, version = 1)
-        graft.sources.Snapshots.commitPtr(
+        graft.sources.Snapshots.commit(
           emb.filter(pmod(col("vec_id"), lit(3)) === 2), feed,
           version = 2)
-        graft.sources.Snapshots.commitPtr(
+        graft.sources.Snapshots.commit(
           emb.filter(pmod(col("vec_id"), lit(7)) === 0)
             .select(col("vec_id")), feed, version = 3)
-        val day0 = graft.sources.Snapshots.changesSincePtr(s, feed, 0, 1)
+        val day0 = graft.sources.Snapshots.changesSince(s, feed, 0, 1)
         val idx = Similarity.buildIvfIndex(day0, nList = 16)
         Similarity.writeIvfIndex(idx, idxRoot)
         idx.release()
         Similarity.appendToIvfIndex(
           s, idxRoot,
-          graft.sources.Snapshots.changesSincePtr(s, feed, 1, 2))
+          graft.sources.Snapshots.changesSince(s, feed, 1, 2))
         Similarity.deleteFromIvfIndex(
           s, idxRoot,
-          graft.sources.Snapshots.changesSincePtr(s, feed, 2, 3))
+          graft.sources.Snapshots.changesSince(s, feed, 2, 3))
         val disk = Similarity.readIvfIndex(s, idxRoot)
         Similarity.probeIvfPruned(
           disk, Seq(1L, 2L, 3L, 4L, 5L), k = 10,

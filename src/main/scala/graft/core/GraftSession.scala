@@ -4,17 +4,28 @@ import org.apache.spark.sql.SparkSession
 
 /** SparkSession factory for the engine.
   *
-  * Defaults are tuned for the driver's local[32] test environment but the
-  * settings are the ones that matter on a real cluster too: AQE on (runtime
-  * re-planning, skew-join splitting, dynamic coalescing of shuffle
-  * partitions), UTC session time zone (oracle parity with DuckDB), and a
-  * shuffle-partition count sized to the actual parallelism instead of the
-  * 200 default.
+  * The settings are the ones that matter on a real cluster too: AQE on
+  * (runtime re-planning, skew-join splitting, dynamic coalescing of
+  * shuffle partitions), UTC session time zone (oracle parity with
+  * DuckDB), and a shuffle-partition count sized to the actual
+  * parallelism instead of the 200 default.
   */
 object GraftSession {
 
-  def cpus: Int =
-    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(32)
+  /** Local parallelism: `SPARK_GRAFT_CPUS` when set, else the cores the
+    * JVM sees.
+    */
+  def cpus: Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  /** A set `SPARK_GRAFT_CPUS` must be a positive integer; anything else
+    * fails naming the variable instead of starting `local[0]`.
+    */
+  private[graft] def parseCpus(raw: Option[String]): Int = raw match {
+    case None => Runtime.getRuntime.availableProcessors
+    case Some(v) =>
+      v.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+  }
 
   def local(appName: String = "graft", nCpus: Int = cpus): SparkSession = {
     val spark = SparkSession

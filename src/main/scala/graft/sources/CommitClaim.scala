@@ -206,7 +206,7 @@ private[graft] object ClaimBackend {
   *
   * HEARTBEAT (r16 verdict #5): while the body runs, a daemon thread
   * advances the claim's mtime every `staleMs / 3`, so a HEALTHY slow
-  * holder — an expirePtr escalation running a full Spark rewrite under
+  * holder — an expire escalation running a full Spark rewrite under
   * the claim — is never judged a corpse, however long it runs. Only a
   * crashed holder stops heartbeating, which is exactly what `staleMs`
   * should measure. The heartbeat checks ownership before each touch

@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{
+  AnalysisException, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** KEYED lake table with a STATS manifest — the WRITE-path close of the
@@ -103,19 +104,8 @@ object LakeTable {
     * from ever sharing a path.
     */
   private[graft] def currentName(
-      spark: SparkSession, root: String): Option[String] = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(ptrPath(root))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-      val in = fs.open(p)
-      try in.readFully(0, buf)
-      finally in.close()
-      Some(new String(buf, "UTF-8").trim)
-    }
-  }
+      spark: SparkSession, root: String): Option[String] =
+    PointerFile.read(spark, ptrPath(root))
 
   def isInitialized(spark: SparkSession, root: String): Boolean =
     currentName(spark, root).nonEmpty
@@ -224,7 +214,6 @@ object LakeTable {
       observed: Option[String],
       key: Option[String] = None): Boolean = {
     import spark.implicits._
-    import org.apache.hadoop.fs.{CreateFlag, Options, Path}
     // the JVM lock serializes in-process writers cheaply; the claim
     // file serializes ACROSS processes (create-exclusive put-if-absent
     // — see CommitClaim; the r15 verdict's cross-JVM gap)
@@ -237,7 +226,14 @@ object LakeTable {
       // wait on.
       val kcol: Option[String] = key.orElse(observed.flatMap(o =>
         try readManifest(spark, s"$root/manifest/$o")._2
-        catch { case _: Exception => None })) // superseded+swept: stale
+        catch {
+          // superseded and swept since observed: the pointer moved, so
+          // the validate below refuses this publish anyway. Any other
+          // read failure propagates — publishing without the recorded
+          // key would silently drop the key guard.
+          case e: AnalysisException if e.getCondition == "PATH_NOT_FOUND" =>
+            None
+        }))
       CommitClaim.withClaim(spark, s"$root/manifest") {
       if (currentName(spark, root) != observed) false
       else {
@@ -250,20 +246,7 @@ object LakeTable {
             "sec_cols", "sec_los", "sec_his", "kcol")
           .coalesce(1)
           .write.mode(SaveMode.Overwrite).parquet(s"$root/manifest/$name")
-        val conf = spark.sparkContext.hadoopConfiguration
-        val dst = new Path(ptrPath(root))
-        val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-          dst.getFileSystem(conf).getUri, conf)
-        val tmp = new Path(s"$root/manifest/_current_tmp_${token()}")
-        fc.mkdir(
-          tmp.getParent,
-          org.apache.hadoop.fs.permission.FsPermission.getDirDefault, true)
-        val out = fc.create(
-          tmp,
-          java.util.EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE))
-        try out.write(name.getBytes("UTF-8"))
-        finally out.close()
-        fc.rename(tmp, dst, Options.Rename.OVERWRITE)
+        PointerFile.write(spark, ptrPath(root), name)
         true
       }
       }
@@ -1246,6 +1229,12 @@ object LakeTable {
         .filter(col(column) >= lo && col(column) <= hi)
   }
 
+  /** What [[sweep]] collected, for the VACUUM report (sql10): swept
+    * generation count and swept data-dir count — both deterministic
+    * given the write history and the grace, so they can ride a hash.
+    */
+  final case class SweepReport(gensSwept: Long, dirsSwept: Long)
+
   /** Sweep data dirs and manifest generations the RETAINED generations
     * do not reference — merge's replaced batches, crashed writers'
     * orphans, expired generations. Everything is age-gated by ONE
@@ -1275,15 +1264,8 @@ object LakeTable {
     * batches are gbucket subdirs of one cmp=<n> staging dir —
     * partially-superseded staging dirs are kept whole, a disk-only
     * over-approximation the next full compact collects). Idempotent,
-    * pure cleanup, safe to lose — identical discipline to
-    * `Snapshots.ptrSweep`.
+    * pure cleanup, safe to lose.
     */
-  /** What [[sweep]] collected, for the VACUUM report (sql10): swept
-    * generation count and swept data-dir count — both deterministic
-    * given the write history and the grace, so they can ride a hash.
-    */
-  final case class SweepReport(gensSwept: Long, dirsSwept: Long)
-
   def sweep(
       spark: SparkSession,
       root: String,

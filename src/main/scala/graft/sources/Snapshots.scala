@@ -8,131 +8,42 @@ import org.apache.spark.sql.functions._
   * snapshots, re-expressed Spark-first), completing the table-lifecycle
   * family next to io7 compaction and io11 deletion vectors.
   *
-  * Layout: `root/data/v=<n>/` holds version n's data files;
-  * `root/manifest/` is a tiny parquet log with one `(version, path)`
-  * row per committed batch. The COMMIT protocol writes data files
-  * first and appends the manifest row LAST — the standard ordering: a
-  * crash between the two leaves an orphan data dir that no reader ever
-  * sees (spec-asserted), never a manifest row pointing at missing data.
+  * Layout: `root/data/v=<n>/` holds version n's data files. The
+  * `(version, path)` log lives in IMMUTABLE manifest GENERATIONS
+  * (`root/manifest/g=<gen>/`, each a complete snapshot of the log), and
+  * the live one is named by the `root/manifest/_current` [[PointerFile]],
+  * whose update is ONE atomic rename. A commit writes data first, then a
+  * new generation, then swaps the pointer — the Delta commit protocol.
+  * Every crash state reads consistently: a data dir or a generation
+  * without a pointer swap is invisible (spec-asserted), and the swap
+  * either happened entirely or not at all.
   *
-  * A versioned READ plans from the manifest, not from directory
-  * listing: `VERSION AS OF n` = scan exactly the paths of manifest rows
-  * with `version <= n`. The manifest collect is file-batch-sized — the
-  * same driver-side planning step every production table format runs —
+  * A versioned READ plans from the live generation, not from directory
+  * listing: `VERSION AS OF n` = scan exactly the paths of rows with
+  * `version <= n`. The manifest collect is file-batch-sized — the same
+  * driver-side planning step every production table format runs —
   * while the data scan stays fully distributed with pushdown intact
   * (it is a plain multi-path parquet scan). Later commits never touch
   * earlier version dirs, so an as-of read is byte-stable forever —
   * snapshot isolation by construction.
+  *
+  * Writers: one logical writer per VERSION ([[commit]]'s contract;
+  * retries dedup); INDEPENDENT concurrent appenders go through
+  * [[appendNext]], which picks the version under the commit lock so
+  * exactly one writer wins each version number. Readers are
+  * concurrent-safe because generations are never mutated, only
+  * superseded and later swept.
   */
 object Snapshots {
 
-  /** Commit `df` as version `version`: data first, manifest last.
-    * Versions are caller-assigned and strictly increasing; single
-    * committer at a time assumed (the e27/io11 contract).
-    */
-  def commit(df: DataFrame, root: String, version: Int): Unit = {
-    val path = s"$root/data/v=$version"
-    df.write.mode(SaveMode.Overwrite).parquet(path)
-    val spark = df.sparkSession
-    import spark.implicits._
-    Seq((version, path)).toDF("version", "path")
-      .coalesce(1)
-      .write.mode(SaveMode.Append).parquet(s"$root/manifest")
-  }
-
-  /** `VERSION AS OF asOf`: scan exactly the committed batches with
-    * `version <= asOf`. Fails loudly when nothing is committed at or
-    * before `asOf` (an empty table is a caller bug, not an empty scan).
-    * Paths are DEDUPLICATED before the scan: a committer that crashed
-    * after the manifest append and retried the whole commit leaves two
-    * manifest rows pointing at the same (idempotently overwritten) data
-    * dir — double-scanning it would silently duplicate every row of
-    * that version.
-    */
-  def readVersion(spark: SparkSession, root: String, asOf: Int): DataFrame = {
-    val paths = spark.read.parquet(s"$root/manifest")
-      .filter(col("version") <= asOf)
-      .select(col("path")).collect().map(_.getString(0)).distinct.sorted
-    require(
-      paths.nonEmpty,
-      s"no committed version <= $asOf under $root")
-    spark.read.parquet(paths.toIndexedSeq: _*)
-  }
-
-  /** EXPIRATION / VACUUM (io12b — Delta `VACUUM` + checkpoint, Iceberg
-    * `expireSnapshots`, completing the time-travel lifecycle the way
-    * e28/io13 completed the index's and the deletion vectors'). In a
-    * pure-append model every batch is referenced by EVERY later
-    * snapshot, so old batches can never just be unlinked — expiration
-    * must first CHECKPOINT: the full state as of `cut` is consolidated
-    * into one new data dir (a distributed read of the old dirs, paid
-    * once — the cost every format's checkpoint pays), the manifest is
-    * rewritten to `(cut, checkpoint) ∪ rows > cut`, and then every
-    * data dir the new manifest does not reference is removed — which
-    * sweeps BOTH the expired batch dirs and any ORPHANS from crashed
-    * commits (the cleanup path for the crash window [[commit]]
-    * documents). Afterwards:
-    *
-    *  - `readVersion(asOf ≥ cut)` is BYTE-STABLE: checkpoint ∪ the
-    *    retained later batches ≡ the old union (spec + oracle-locked);
-    *  - `readVersion(asOf < cut)` FAILS LOUDLY (no manifest row ≤
-    *    asOf — history below the cut is genuinely retired, not
-    *    silently empty);
-    *  - a crash after the checkpoint write but before the manifest
-    *    swap leaves an invisible orphan the next expire sweeps; the
-    *    manifest rewrite itself is the one non-atomic step — a real
-    *    deployment swaps an atomic pointer file instead (documented,
-    *    single maintenance writer assumed, the e27/io11 contract).
-    *
-    * Driver work is manifest-sized (collect of the batch list — the
-    * standard table-format planning step); deletion uses the
-    * Path-resolved FileSystem, never a hardcoded scheme.
-    */
-  // ---- io12c: ATOMIC-POINTER manifest (versioned generations) ----
-  //
-  // The gap [[expire]] names — its manifest rewrite is the one
-  // non-atomic step — closed the way real table formats close it:
-  // manifests become IMMUTABLE GENERATIONS (`root/manifest/g=<gen>/`,
-  // each a complete snapshot of the (version, path) log) and the live
-  // one is named by a tiny `root/manifest/_current` pointer file whose
-  // update is ONE ATOMIC RENAME (FileContext rename with OVERWRITE —
-  // atomic on HDFS and POSIX; the Delta `_last_checkpoint` / Iceberg
-  // `version-hint` pattern). Every reader plans from the pointer, so
-  // every intermediate crash state reads consistently: a generation
-  // without a pointer swap is invisible, and the swap either happened
-  // entirely or not at all. One logical writer per VERSION (commitPtr's
-  // contract; retries dedup); INDEPENDENT concurrent appenders go
-  // through appendNextPtr, whose observe→publish→swap runs under the
-  // commit lock so exactly one writer wins each version number.
-  // Readers are concurrent-safe because generations are never
-  // mutated, only superseded and later swept.
-
   private def ptrPath(root: String) = s"$root/manifest/_current"
-
-  private def fileContext(spark: SparkSession, root: String) = {
-    import org.apache.hadoop.fs.{FileContext, Path}
-    val conf = spark.sparkContext.hadoopConfiguration
-    FileContext.getFileContext(
-      new Path(root).getFileSystem(conf).getUri, conf)
-  }
 
   /** The live generation number, read through the pointer; None before
     * the first commit.
     */
   private[graft] def currentGen(
-      spark: SparkSession, root: String): Option[Long] = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(ptrPath(root))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-      val in = fs.open(p)
-      try in.readFully(0, buf)
-      finally in.close()
-      Some(new String(buf, "UTF-8").trim.toLong)
-    }
-  }
+      spark: SparkSession, root: String): Option[Long] =
+    PointerFile.read(spark, ptrPath(root)).map(_.toLong)
 
   /** Write generation `gen` as a complete manifest snapshot. NOT yet
     * visible — visibility is [[swapPointer]]'s job (the two are split
@@ -149,28 +60,18 @@ object Snapshots {
       .write.mode(SaveMode.Overwrite).parquet(s"$root/manifest/g=$gen")
   }
 
-  /** Atomically point `_current` at `gen`: write a tmp file, then ONE
-    * rename with OVERWRITE — the only mutation any reader can observe.
+  /** Atomically point `_current` at `gen` — the only mutation any
+    * reader can observe.
     */
   private[graft] def swapPointer(
-      spark: SparkSession, root: String, gen: Long): Unit = {
-    import org.apache.hadoop.fs.{CreateFlag, Options, Path}
-    val fc = fileContext(spark, root)
-    val tmp = new Path(s"$root/manifest/_current_tmp")
-    val dst = new Path(ptrPath(root))
-    fc.mkdir(
-      tmp.getParent,
-      org.apache.hadoop.fs.permission.FsPermission.getDirDefault, true)
-    val out = fc.create(
-      tmp, java.util.EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE))
-    try out.write(gen.toString.getBytes("UTF-8"))
-    finally out.close()
-    fc.rename(tmp, dst, Options.Rename.OVERWRITE)
-  }
+      spark: SparkSession, root: String, gen: Long): Unit =
+    PointerFile.write(spark, ptrPath(root), gen.toString)
 
-  private def currentRows(
-      spark: SparkSession, root: String): Seq[(Int, String)] =
-    currentGen(spark, root) match {
+  private def rowsOf(
+      spark: SparkSession,
+      root: String,
+      gen: Option[Long]): Seq[(Int, String)] =
+    gen match {
       case None => Seq.empty
       case Some(g) =>
         spark.read.parquet(s"$root/manifest/g=$g")
@@ -178,37 +79,56 @@ object Snapshots {
           .collect().map(r => (r.getInt(0), r.getString(1))).toSeq
     }
 
+  private def currentRows(
+      spark: SparkSession, root: String): Seq[(Int, String)] =
+    rowsOf(spark, root, currentGen(spark, root))
+
   // serializes the observe → write-generation → swap critical section
   // across writers in THIS JVM; cross-process exclusivity comes from
   // the CREATE-EXCLUSIVE claim file each section also takes (see
   // [[CommitClaim]] — the HDFS put-if-absent primitive with
   // stale-claim breaking; the same pairing as LakeTable's commitLock)
-  private val ptrCommitLock = new Object
+  private val commitLock = new Object
 
-  /** [[commit]] through the pointer: data dir first, then a NEW manifest
-    * generation (previous rows + this one, deduped — a retried commit
-    * converges instead of double-listing), then the atomic swap. A crash
-    * before the swap leaves the new generation invisible; the retry
-    * overwrites both idempotently.
+  /** The one publish step, under the commit lock + claim: `next` sees
+    * the live generation and returns the rows of the next one (None
+    * refuses the publish); those rows become generation live + 1 and
+    * the pointer swaps to it. Returns the published rows.
+    */
+  private def publish(spark: SparkSession, root: String)(
+      next: Option[Long] => Option[Seq[(Int, String)]])
+      : Option[Seq[(Int, String)]] =
+    commitLock.synchronized {
+      CommitClaim.withClaim(spark, s"$root/manifest") {
+        val live = currentGen(spark, root)
+        val rows = next(live)
+        rows.foreach { rs =>
+          val gen = live.getOrElse(0L) + 1L
+          writeManifestGen(spark, root, gen, rs)
+          swapPointer(spark, root, gen)
+        }
+        rows
+      }
+    }
+
+  /** Commit `df` as version `version`: data dir first, then a NEW
+    * manifest generation (previous rows + this one, deduped — a retried
+    * commit converges instead of double-listing), then the atomic swap.
+    * A crash before the swap leaves the new generation invisible; the
+    * retry overwrites both idempotently.
     *
     * CONTRACT: `version` identifies ONE logical commit — this call is
     * for the single writer that owns it (and its retries, which dedup).
     * Two INDEPENDENT writers must not name the same version (they
     * would race the same data dir); independent appenders use
-    * [[appendNextPtr]], which picks the version under the commit lock.
+    * [[appendNext]], which picks the version under the commit lock.
     */
-  def commitPtr(df: DataFrame, root: String, version: Int): Unit = {
+  def commit(df: DataFrame, root: String, version: Int): Unit = {
     val spark = df.sparkSession
     val path = s"$root/data/v=$version"
     df.write.mode(SaveMode.Overwrite).parquet(path)
-    ptrCommitLock.synchronized {
-      CommitClaim.withClaim(spark, s"$root/manifest") {
-        val prev = currentRows(spark, root)
-        val gen = currentGen(spark, root).getOrElse(0L) + 1L
-        writeManifestGen(
-          spark, root, gen, (prev :+ ((version, path))).distinct)
-        swapPointer(spark, root, gen)
-      }
+    publish(spark, root) { live =>
+      Some((rowsOf(spark, root, live) :+ ((version, path))).distinct)
     }
   }
 
@@ -220,41 +140,54 @@ object Snapshots {
     * one writer wins each version number, every append lands exactly
     * once. Returns the version this batch committed as.
     */
-  def appendNextPtr(df: DataFrame, root: String): Int = {
+  def appendNext(df: DataFrame, root: String): Int = {
     val spark = df.sparkSession
     val tok = java.util.UUID.randomUUID().toString.take(8)
     val stage = s"$root/data/a=$tok"
     df.write.mode(SaveMode.Overwrite).parquet(stage)
-    ptrCommitLock.synchronized {
-      CommitClaim.withClaim(spark, s"$root/manifest") {
-        val prev = currentRows(spark, root)
-        val v = prev.map(_._1).foldLeft(0)(math.max) + 1
-        val gen = currentGen(spark, root).getOrElse(0L) + 1L
-        writeManifestGen(spark, root, gen, prev :+ ((v, stage)))
-        swapPointer(spark, root, gen)
-        v
-      }
+    val published = publish(spark, root) { live =>
+      val prev = rowsOf(spark, root, live)
+      Some(prev :+ ((prev.map(_._1).foldLeft(0)(math.max) + 1, stage)))
     }
+    published.get.last._1
   }
 
-  /** Newest committed version through the pointer; None before the
-    * first commit. What a change-feed consumer's poll compares its
-    * committed offset against (manifest-sized driver work).
+  /** Newest committed version; None before the first commit. What a
+    * change-feed consumer's poll compares its committed offset against
+    * (manifest-sized driver work).
     */
-  def headVersionPtr(spark: SparkSession, root: String): Option[Int] = {
+  def headVersion(spark: SparkSession, root: String): Option[Int] = {
     val rows = currentRows(spark, root)
     if (rows.isEmpty) None else Some(rows.map(_._1).max)
   }
 
-  /** [[readVersion]] through the pointer: plan from the live generation
-    * only — every crash state of a writer reads consistently.
+  /** `VERSION AS OF asOf`: scan exactly the committed batches with
+    * `version <= asOf`, planned from the live generation only — every
+    * crash state of a writer reads consistently. Fails loudly when
+    * nothing is committed at or before `asOf` (an empty table is a
+    * caller bug, not an empty scan).
     */
-  def readVersionPtr(
-      spark: SparkSession, root: String, asOf: Int): DataFrame = {
+  def readVersion(spark: SparkSession, root: String, asOf: Int): DataFrame = {
     val paths = currentRows(spark, root)
       .filter(_._1 <= asOf).map(_._2).distinct.sorted
     require(paths.nonEmpty, s"no committed version <= $asOf under $root")
     spark.read.parquet(paths: _*)
+  }
+
+  /** The live rows, and those with `fromExclusive < version <=
+    * toInclusive` — the plan both change reads share.
+    */
+  private def rowsInRange(
+      spark: SparkSession,
+      root: String,
+      fromExclusive: Int,
+      toInclusive: Int): (Seq[(Int, String)], Seq[(Int, String)]) = {
+    require(
+      fromExclusive <= toInclusive,
+      s"empty range: from $fromExclusive (exclusive) to $toInclusive")
+    val rows = currentRows(spark, root)
+    require(rows.nonEmpty, "nothing committed — not a table")
+    (rows, rows.filter(r => r._1 > fromExclusive && r._1 <= toInclusive))
   }
 
   /** INCREMENTAL CONSUMPTION (io14 — the Delta change-data-feed /
@@ -269,14 +202,19 @@ object Snapshots {
     * scan reads ONLY the delta bytes — the property that makes a daily
     * 100 TB refresh read gigabytes, not the lake.
     */
-  def changesSincePtr(
+  def changesSince(
       spark: SparkSession,
       root: String,
       fromExclusive: Int,
-      toInclusive: Int): DataFrame =
-    changesOver(spark, currentRows(spark, root), fromExclusive, toInclusive)
+      toInclusive: Int): DataFrame = {
+    val (rows, hit) = rowsInRange(spark, root, fromExclusive, toInclusive)
+    val paths = hit.map(_._2).distinct.sorted
+    if (paths.nonEmpty) spark.read.parquet(paths: _*)
+    // a poll that found nothing new: empty frame, table schema
+    else spark.read.parquet(rows.maxBy(_._1)._2).limit(0)
+  }
 
-  /** [[changesSincePtr]] with COMMIT-VERSION ATTRIBUTION — the
+  /** [[changesSince]] with COMMIT-VERSION ATTRIBUTION — the
     * `_commit_version` column Delta's change feed carries. A consumer
     * whose poll spans several commits needs it to reduce the delta to
     * latest-per-key BEFORE merging downstream (two commits may restate
@@ -285,69 +223,32 @@ object Snapshots {
     * branch a plain pushdown-intact parquet scan — the version is a
     * literal, it costs nothing).
     */
-  def changesSinceVersionedPtr(
+  def changesSinceVersioned(
       spark: SparkSession,
       root: String,
       fromExclusive: Int,
       toInclusive: Int): DataFrame = {
-    require(
-      fromExclusive <= toInclusive,
-      s"empty range: from $fromExclusive (exclusive) to $toInclusive")
-    val rows = currentRows(spark, root)
-    require(rows.nonEmpty, "nothing committed — not a table")
-    val hit = rows
-      .filter(r => r._1 > fromExclusive && r._1 <= toInclusive)
+    val (rows, inRange) =
+      rowsInRange(spark, root, fromExclusive, toInclusive)
+    val hit = inRange
       .groupBy(_._2).map { case (p, vs) => (vs.map(_._1).max, p) }
       .toSeq.sortBy(_._1)
     if (hit.nonEmpty)
       hit.map { case (v, p) =>
         spark.read.parquet(p).withColumn("_commit_version", lit(v))
       }.reduce(_.unionByName(_))
-    else {
-      val newest = rows.maxBy(_._1)._2
-      spark.read.parquet(newest).limit(0)
+    else
+      spark.read.parquet(rows.maxBy(_._1)._2).limit(0)
         .withColumn("_commit_version", lit(0))
-    }
   }
 
-  /** [[changesSincePtr]] over the classic append-manifest layout. */
-  def changesSince(
-      spark: SparkSession,
-      root: String,
-      fromExclusive: Int,
-      toInclusive: Int): DataFrame = {
-    val rows = spark.read.parquet(s"$root/manifest")
-      .select(col("version"), col("path"))
-      .collect().map(r => (r.getInt(0), r.getString(1))).toSeq
-    changesOver(spark, rows, fromExclusive, toInclusive)
-  }
-
-  private def changesOver(
-      spark: SparkSession,
-      rows: Seq[(Int, String)],
-      fromExclusive: Int,
-      toInclusive: Int): DataFrame = {
-    require(
-      fromExclusive <= toInclusive,
-      s"empty range: from $fromExclusive (exclusive) to $toInclusive")
-    require(rows.nonEmpty, "nothing committed — not a table")
-    val hit = rows
-      .filter(r => r._1 > fromExclusive && r._1 <= toInclusive)
-      .map(_._2).distinct.sorted
-    if (hit.nonEmpty) spark.read.parquet(hit: _*)
-    else {
-      // a poll that found nothing new: empty frame, table schema
-      val newest = rows.maxBy(_._1)._2
-      spark.read.parquet(newest).limit(0)
-    }
-  }
-
-  /** io12b's checkpoint step against the live generation: consolidate
-    * the ≤ cut state into `ckpt=<cut>` (skipped when the history below
-    * the cut is already exactly that checkpoint — the idempotent
-    * re-expire), return the rows the next generation should carry.
+  /** The checkpoint step of [[expire]] against the live generation:
+    * consolidate the ≤ cut state into `ckpt=<cut>` (skipped when the
+    * history below the cut is already exactly that checkpoint — the
+    * idempotent re-expire, which must not read the checkpoint dir while
+    * overwriting it), return the rows the next generation should carry.
     */
-  private[graft] def ptrCheckpoint(
+  private[graft] def checkpoint(
       spark: SparkSession, root: String, cut: Int): Seq[(Int, String)] = {
     val all = currentRows(spark, root).distinct
     require(all.exists(_._1 <= cut), s"nothing committed at or before $cut")
@@ -355,7 +256,7 @@ object Snapshots {
     val alreadyFolded =
       all.filter(_._1 <= cut).map(_._2).distinct == Seq(ckptPath)
     if (!alreadyFolded)
-      readVersionPtr(spark, root, cut)
+      readVersion(spark, root, cut)
         .write.mode(SaveMode.Overwrite).parquet(ckptPath)
     ((cut, ckptPath)) +: all.filter(_._1 > cut)
   }
@@ -370,18 +271,18 @@ object Snapshots {
     *    generation published between a stale read and the deletes can
     *    never lose its just-referenced data dir;
     *  - unreferenced dirs AGE-GATE on `graceMs` (LakeTable.sweep's
-    *    discipline): an [[appendNextPtr]] stager writes its `a=<tok>`
+    *    discipline): an [[appendNext]] stager writes its `a=<tok>`
     *    dir BEFORE taking the lock, and only time distinguishes that
     *    in-flight dir from a crashed writer's corpse. Pass 0 in
     *    single-writer maintenance to collect everything now — the
     *    VACUUM tradeoff, stated.
     */
-  private[graft] def ptrSweep(
+  private[graft] def sweep(
       spark: SparkSession,
       root: String,
       graceMs: Long = 15L * 60L * 1000L): Unit = {
     import org.apache.hadoop.fs.Path
-    ptrCommitLock.synchronized {
+    commitLock.synchronized {
       CommitClaim.withClaim(spark, s"$root/manifest") {
         val gen = currentGen(spark, root)
           .getOrElse(sys.error(s"no committed manifest under $root"))
@@ -406,15 +307,24 @@ object Snapshots {
     }
   }
 
-  /** [[expire]] through the pointer — the io12c close. Three steps,
-    * each crash window unit-tested to read consistently:
-    * checkpoint (invisible until published) → publish (ONE atomic
-    * pointer rename — the step [[expire]] could not make atomic) →
-    * sweep (pure cleanup; a lost sweep is re-swept by the next
+  /** EXPIRATION / VACUUM (io12b/io12c — Delta `VACUUM` + checkpoint,
+    * Iceberg `expireSnapshots`). In a pure-append model every batch is
+    * referenced by EVERY later snapshot, so old batches can never just
+    * be unlinked — expiration must first CHECKPOINT the full state as
+    * of `cut` into one new data dir (a distributed read of the old
+    * dirs, paid once — the cost every format's checkpoint pays). Three
+    * steps, each crash window unit-tested to read consistently:
+    * checkpoint (invisible until published) → publish `(cut,
+    * checkpoint) ∪ rows > cut` (ONE atomic pointer rename) → sweep
+    * (pure cleanup of expired dirs, crashed commits' orphans and
+    * superseded generations; a lost sweep is re-swept by the next
     * expire). Re-expiring at the same cut is idempotent end to end.
-    * `graceMs` rides through to [[ptrSweep]]: the default retains
-    * young unreferenced dirs (a concurrent appender's staged batch);
-    * single-writer maintenance passes 0 to collect now.
+    * Afterwards `readVersion(asOf ≥ cut)` is BYTE-STABLE (checkpoint ∪
+    * the retained later batches ≡ the old union) and `readVersion(asOf
+    * < cut)` FAILS LOUDLY — history below the cut is retired, not
+    * silently empty. `graceMs` rides through to [[sweep]]: the default
+    * retains young unreferenced dirs (a concurrent appender's staged
+    * batch); single-writer maintenance passes 0 to collect now.
     *
     * The publish is OPTIMISTIC against the generation the checkpoint
     * observed: the (expensive) checkpoint runs outside the lock, and
@@ -428,82 +338,25 @@ object Snapshots {
     * blocking committers instead of starving forever under constant
     * commit traffic — optimism with a bounded-starvation fallback.
     */
-  def expirePtr(
+  def expire(
       spark: SparkSession,
       root: String,
       cut: Int,
       graceMs: Long = 15L * 60L * 1000L): Unit = {
-    def publishKept(observed: Option[Long], kept: Seq[(Int, String)])
-        : Boolean =
-      if (currentGen(spark, root) != observed) false
-      else {
-        val gen = observed.getOrElse(0L) + 1L
-        writeManifestGen(spark, root, gen, kept)
-        swapPointer(spark, root, gen)
-        true
-      }
     var published = false
     var attempts = 0
     while (!published && attempts < 4) {
       attempts += 1
       val observed = currentGen(spark, root)
-      val kept = ptrCheckpoint(spark, root, cut)
-      published = ptrCommitLock.synchronized {
-        CommitClaim.withClaim(spark, s"$root/manifest") {
-          publishKept(observed, kept)
-        }
-      }
+      val kept = checkpoint(spark, root, cut)
+      published = publish(spark, root) { live =>
+        if (live == observed) Some(kept) else None
+      }.nonEmpty
     }
     if (!published)
       // escalation: checkpoint under the lock — committers wait one
       // checkpoint's length, the expire cannot be starved
-      ptrCommitLock.synchronized {
-        CommitClaim.withClaim(spark, s"$root/manifest") {
-          val observed = currentGen(spark, root)
-          val kept = ptrCheckpoint(spark, root, cut)
-          require(
-            publishKept(observed, kept),
-            "expirePtr: pointer moved inside the commit lock — broken " +
-              "claim discipline (an uncooperative writer bypassed it)")
-        }
-      }
-    ptrSweep(spark, root, graceMs)
-  }
-
-  def expire(spark: SparkSession, root: String, cut: Int): Unit = {
-    import org.apache.hadoop.fs.Path
-    val manifest = spark.read.parquet(s"$root/manifest")
-    val all = manifest.select(col("version"), col("path"))
-      .collect().map(r => (r.getInt(0), r.getString(1))).distinct
-    require(all.exists(_._1 <= cut), s"nothing committed at or before $cut")
-    val ckptPath = s"$root/data/ckpt=$cut"
-    // idempotence: re-expiring at the same cut would otherwise read the
-    // existing checkpoint dir while overwriting it — when the history
-    // below the cut is already exactly this checkpoint, skip the rewrite
-    // and fall through to the sweep (a crashed previous sweep resumes)
-    val alreadyFolded =
-      all.filter(_._1 <= cut).map(_._2).distinct.sameElements(
-        Array(ckptPath))
-    val kept =
-      if (alreadyFolded) (cut, ckptPath) +: all.filter(_._1 > cut)
-      else {
-        readVersion(spark, root, cut)
-          .write.mode(SaveMode.Overwrite).parquet(ckptPath)
-        (cut, ckptPath) +: all.filter(_._1 > cut)
-      }
-    val spark2 = spark
-    import spark2.implicits._
-    // rows were collected above — writing the manifest from a local
-    // Seq never reads the dir it overwrites
-    kept.toSeq.toDF("version", "path")
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/manifest")
-    val fs = new Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val keepNames = kept.map(p => new Path(p._2).getName).toSet
-    val dataDir = new Path(s"$root/data")
-    fs.listStatus(dataDir)
-      .filter(st => !keepNames.contains(st.getPath.getName))
-      .foreach(st => fs.delete(st.getPath, true))
+      publish(spark, root)(_ => Some(checkpoint(spark, root, cut)))
+    sweep(spark, root, graceMs)
   }
 }

@@ -1,14 +1,16 @@
 package graft.streaming
 
+import graft.sources.{PointerFile, Snapshots}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** STREAMING CONSUMPTION of the snapshot change feed (st25 — the Delta
   * streaming-source / Kafka-consumer-group shape over the engine's own
   * table format): a downstream job that keeps a COMMITTED OFFSET (the
   * highest bronze version it has fully processed) and per poll reads
-  * exactly `(offset, head]` through `Snapshots.changesSincePtr` — delta
-  * bytes, never the table — then advances the offset with one atomic
-  * rename. The driver of each poll does manifest-sized work only.
+  * exactly `(offset, head]` through `Snapshots.changesSince` — delta
+  * bytes, never the table — then advances the offset, a
+  * [[graft.sources.PointerFile]] at `consumerDir/_offset`, with one
+  * atomic rename. The driver of each poll does manifest-sized work only.
   *
   * Delivery contract (the Kafka one): offsets commit AFTER processing,
   * so a crash inside the window between "sink wrote" and "offset
@@ -42,41 +44,15 @@ object ChangeFeed {
     * bootstrap poll reads the whole table as its first delta, the
     * Delta streaming-source initial-snapshot behavior).
     */
-  def committedOffset(spark: SparkSession, consumerDir: String): Int = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(offsetPath(consumerDir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) 0
-    else {
-      val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-      val in = fs.open(p)
-      try in.readFully(0, buf)
-      finally in.close()
-      new String(buf, "UTF-8").trim.toInt
-    }
-  }
+  def committedOffset(spark: SparkSession, consumerDir: String): Int =
+    PointerFile.read(spark, offsetPath(consumerDir)).map(_.toInt).getOrElse(0)
 
-  /** Advance the committed offset: tmp file + ONE atomic rename (the
-    * io12c pointer discipline — a reader/crasher never sees a torn
-    * offset).
+  /** Advance the committed offset with one atomic pointer-file rename
+    * (a reader/crasher never sees a torn offset).
     */
   private[graft] def commitOffset(
-      spark: SparkSession, consumerDir: String, version: Int): Unit = {
-    import org.apache.hadoop.fs.{CreateFlag, FileContext, Options, Path}
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dst = new Path(offsetPath(consumerDir))
-    val fc = FileContext.getFileContext(
-      dst.getFileSystem(conf).getUri, conf)
-    val tmp = new Path(s"$consumerDir/_offset_tmp")
-    fc.mkdir(
-      tmp.getParent,
-      org.apache.hadoop.fs.permission.FsPermission.getDirDefault, true)
-    val out = fc.create(
-      tmp, java.util.EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE))
-    try out.write(version.toString.getBytes("UTF-8"))
-    finally out.close()
-    fc.rename(tmp, dst, Options.Rename.OVERWRITE)
-  }
+      spark: SparkSession, consumerDir: String, version: Int): Unit =
+    PointerFile.write(spark, offsetPath(consumerDir), version.toString)
 
   /** One poll: if the bronze head moved past the committed offset, hand
     * `(offset, head]`'s rows to `process` and THEN commit `head`.
@@ -90,13 +66,11 @@ object ChangeFeed {
       consumerDir: String)(
       process: (DataFrame, Int, Int) => Unit): Option[(Int, Int)] = {
     val from = committedOffset(spark, consumerDir)
-    val head = graft.sources.Snapshots
-      .headVersionPtr(spark, bronzeRoot)
+    val head = Snapshots.headVersion(spark, bronzeRoot)
       .getOrElse(sys.error(s"nothing committed under $bronzeRoot"))
     if (head <= from) None
     else {
-      val delta = graft.sources.Snapshots
-        .changesSincePtr(spark, bronzeRoot, from, head)
+      val delta = Snapshots.changesSince(spark, bronzeRoot, from, head)
       process(delta, from, head)
       commitOffset(spark, consumerDir, head)
       Some((from, head))

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sources.PointerFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -44,40 +45,13 @@ object LakeChangeFeed {
     * bootstrap poll.
     */
   def committedGen(
-      spark: SparkSession, consumerDir: String): Option[String] = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(offsetPath(consumerDir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-      val in = fs.open(p)
-      try in.readFully(0, buf)
-      finally in.close()
-      Some(new String(buf, "UTF-8").trim)
-    }
-  }
+      spark: SparkSession, consumerDir: String): Option[String] =
+    PointerFile.read(spark, offsetPath(consumerDir))
 
-  /** Advance the committed offset: tmp file + ONE atomic rename (the
-    * io12c pointer discipline).
-    */
+  /** Advance the committed offset with one atomic pointer-file rename. */
   private[graft] def commitGen(
-      spark: SparkSession, consumerDir: String, gen: String): Unit = {
-    import org.apache.hadoop.fs.{CreateFlag, FileContext, Options, Path}
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dst = new Path(offsetPath(consumerDir))
-    val fc = FileContext.getFileContext(
-      dst.getFileSystem(conf).getUri, conf)
-    val tmp = new Path(s"$consumerDir/_offset_gen_tmp")
-    fc.mkdir(
-      tmp.getParent,
-      org.apache.hadoop.fs.permission.FsPermission.getDirDefault, true)
-    val out = fc.create(
-      tmp, java.util.EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE))
-    try out.write(gen.getBytes("UTF-8"))
-    finally out.close()
-    fc.rename(tmp, dst, Options.Rename.OVERWRITE)
-  }
+      spark: SparkSession, consumerDir: String, gen: String): Unit =
+    PointerFile.write(spark, offsetPath(consumerDir), gen)
 
   /** One poll: if the lake head moved past the committed offset, hand
     * the feed rows to `process` and THEN commit the head generation.

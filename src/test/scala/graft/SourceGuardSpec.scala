@@ -10,9 +10,12 @@ import scala.jdk.CollectionConverters._
   * `ConfScope`, `Similarity` states its top-k window and its IVF list
   * choice once each, and the query registry stages temp dirs only
   * through `Scratch` and drives memory-sink replays only through
-  * `Replay`, and `Bench` and `Verify` read and write JSON only through
-  * json4s (no regex reads JSON back, no JSON is built by `mkString`). A
-  * hand-rolled copy elsewhere fails here.
+  * `Replay`, `Bench` and `Verify` read and write JSON only through
+  * json4s (no regex reads JSON back, no JSON is built by `mkString`),
+  * the tmp-plus-rename pointer protocol (`Options.Rename`) lives only
+  * in `PointerFile`, and snapshots have one layout: neither `Snapshots`
+  * nor the query registry reads or writes the whole `manifest/` dir as
+  * one parquet log. A hand-rolled copy elsewhere fails here.
   */
 class SourceGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -61,5 +64,14 @@ class SourceGuardSpec extends AnyFunSuite {
       literal <- Seq("findFirstMatchIn", "findAllMatchIn", "mkString(\"{\"",
         "mkString(\"[\", \",\", \"]\")")
     } assert(occurrences(file, literal) == 0, s"$literal in $file")
+  }
+
+  test("the pointer file's rename lives only in PointerFile") {
+    assert(offenders("""Options\.Rename""", "PointerFile.scala").isEmpty)
+  }
+
+  test("Snapshots has one layout: no parquet log over the whole manifest dir") {
+    for (file <- Seq("graft/sources/Snapshots.scala", "graft/SparkEntry.scala"))
+      assert(occurrences(file, "parquet(s\"$root/manifest\")") == 0, file)
   }
 }

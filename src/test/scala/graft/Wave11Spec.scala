@@ -386,68 +386,6 @@ class McPprSpec extends AnyFunSuite {
   }
 }
 
-/** io12 snapshots: version cuts exact, as-of reads byte-stable under
-  * later commits, orphan data dirs (crash before manifest) invisible.
-  */
-class SnapshotsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = TestSpark.spark
-
-  private def withRoot(f: String => Unit): Unit = {
-    val root = java.nio.file.Files.createTempDirectory("snap").toString
-    try f(root)
-    finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(root))
-        .iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
-  }
-
-  private def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
-    df.select("k").collect().map(_.getLong(0)).sorted.toSeq
-
-  test("as-of cuts exact; earlier versions stable under later commits") {
-    val sp = spark
-    import sp.implicits._
-    withRoot { root =>
-      graft.sources.Snapshots.commit(
-        Seq(1L, 2L).toDF("k"), root, version = 1)
-      graft.sources.Snapshots.commit(
-        Seq(3L).toDF("k"), root, version = 2)
-      val v2Before = ids(
-        graft.sources.Snapshots.readVersion(spark, root, asOf = 2))
-      assert(ids(graft.sources.Snapshots
-        .readVersion(spark, root, asOf = 1)) == Seq(1L, 2L))
-      assert(v2Before == Seq(1L, 2L, 3L))
-      graft.sources.Snapshots.commit(
-        Seq(4L, 5L).toDF("k"), root, version = 3)
-      // snapshot isolation: the old as-of view is unchanged
-      assert(ids(graft.sources.Snapshots
-        .readVersion(spark, root, asOf = 2)) == v2Before)
-      assert(ids(graft.sources.Snapshots
-        .readVersion(spark, root, asOf = 3)) == Seq(1L, 2L, 3L, 4L, 5L))
-      // asOf past the head reads the head (version <= asOf)
-      assert(ids(graft.sources.Snapshots
-        .readVersion(spark, root, asOf = 99)) == Seq(1L, 2L, 3L, 4L, 5L))
-    }
-  }
-
-  test("orphan data dir (crash before manifest append) is invisible") {
-    val sp = spark
-    import sp.implicits._
-    withRoot { root =>
-      graft.sources.Snapshots.commit(Seq(1L).toDF("k"), root, version = 1)
-      // simulate a crash: data files land, manifest row never does
-      Seq(9L).toDF("k").write.parquet(s"$root/data/v=2")
-      assert(ids(graft.sources.Snapshots
-        .readVersion(spark, root, asOf = 2)) == Seq(1L))
-      intercept[IllegalArgumentException] {
-        graft.sources.Snapshots.readVersion(spark, root, asOf = 0)
-      }
-    }
-  }
-}
-
 /** io11 deletion vectors: accumulate-and-union delete batches, exact
   * survivors, double-delete idempotence, and the plan contract (base
   * scan keeps pushdown; the DV side broadcasts as LEFT ANTI).

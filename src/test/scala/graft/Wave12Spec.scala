@@ -5,41 +5,9 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-13 advice hardening: the retried-commit manifest dedup, the
-  * Louvain integral-weight contract, and the as-of internal-name
-  * defenses.
+/** Round-13 advice hardening: the Louvain integral-weight contract and
+  * the as-of internal-name defenses.
   */
-class SnapshotRetrySpec extends AnyFunSuite {
-  lazy val spark: SparkSession = TestSpark.spark
-
-  private def withRoot(f: String => Unit): Unit = {
-    val root = java.nio.file.Files.createTempDirectory("snapr").toString
-    try f(root)
-    finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(root))
-        .iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
-  }
-
-  test("a retried commit (duplicate manifest row) does not double-read") {
-    val sp = spark
-    import sp.implicits._
-    withRoot { root =>
-      graft.sources.Snapshots.commit(Seq(1L, 2L).toDF("k"), root, 1)
-      // the retry window the Scaladoc discusses: the committer crashed
-      // AFTER the manifest append and replayed the whole commit — data
-      // dir idempotently overwritten, manifest now holds TWO rows for
-      // version 1 pointing at the same path
-      graft.sources.Snapshots.commit(Seq(1L, 2L).toDF("k"), root, 1)
-      val got = graft.sources.Snapshots.readVersion(spark, root, asOf = 1)
-        .select("k").collect().map(_.getLong(0)).sorted.toSeq
-      assert(got == Seq(1L, 2L), "duplicate manifest path must scan once")
-    }
-  }
-}
-
 class LouvainWeightContractSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
 
@@ -160,87 +128,6 @@ class ConvergedTwinsSpec extends AnyFunSuite {
   }
 }
 
-/** io12b snapshot expiration/VACUUM: retained as-of reads byte-stable,
-  * expired reads fail loudly, orphan + expired dirs swept.
-  */
-class SnapshotExpireSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = TestSpark.spark
-
-  private def withRoot(f: String => Unit): Unit = {
-    val root = java.nio.file.Files.createTempDirectory("snapx").toString
-    try f(root)
-    finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(root))
-        .iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
-  }
-
-  private def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
-    df.select("k").collect().map(_.getLong(0)).sorted.toSeq
-
-  private def dataDirs(root: String): Set[String] = {
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.list(java.nio.file.Paths.get(s"$root/data"))
-      .iterator().asScala.map(_.getFileName.toString).toSet
-  }
-
-  test("expire checkpoints the cut, keeps later reads byte-stable") {
-    val sp = spark
-    import sp.implicits._
-    withRoot { root =>
-      graft.sources.Snapshots.commit(Seq(1L, 2L).toDF("k"), root, 1)
-      graft.sources.Snapshots.commit(Seq(3L).toDF("k"), root, 2)
-      graft.sources.Snapshots.commit(Seq(4L).toDF("k"), root, 3)
-      // orphan from a crashed commit — expire must sweep it
-      Seq(99L).toDF("k").write.parquet(s"$root/data/v=7")
-      val v2Before = ids(graft.sources.Snapshots.readVersion(spark, root, 2))
-      val v3Before = ids(graft.sources.Snapshots.readVersion(spark, root, 3))
-      graft.sources.Snapshots.expire(spark, root, cut = 2)
-      // retained as-of views are byte-stable through the checkpoint
-      assert(ids(graft.sources.Snapshots.readVersion(spark, root, 2))
-        == v2Before)
-      assert(ids(graft.sources.Snapshots.readVersion(spark, root, 3))
-        == v3Before)
-      // history below the cut is retired LOUDLY
-      intercept[IllegalArgumentException] {
-        graft.sources.Snapshots.readVersion(spark, root, asOf = 1)
-      }
-      // only the checkpoint and the retained batch dir remain; the
-      // expired v=1, v=2 dirs and the v=7 orphan are gone
-      assert(dataDirs(root) == Set("ckpt=2", "v=3"), dataDirs(root))
-      // the table keeps working: a later commit appends past the cut
-      graft.sources.Snapshots.commit(Seq(5L).toDF("k"), root, 4)
-      assert(ids(graft.sources.Snapshots.readVersion(spark, root, 4))
-        == Seq(1L, 2L, 3L, 4L, 5L))
-    }
-  }
-
-  test("expire below the earliest commit fails; repeat expire is sound") {
-    val sp = spark
-    import sp.implicits._
-    withRoot { root =>
-      graft.sources.Snapshots.commit(Seq(1L).toDF("k"), root, 2)
-      intercept[IllegalArgumentException] {
-        graft.sources.Snapshots.expire(spark, root, cut = 1)
-      }
-      graft.sources.Snapshots.commit(Seq(2L).toDF("k"), root, 3)
-      graft.sources.Snapshots.expire(spark, root, cut = 2)
-      // re-expiring at the SAME cut is a no-op (must not read the
-      // checkpoint dir while overwriting it)
-      graft.sources.Snapshots.expire(spark, root, cut = 2)
-      assert(ids(graft.sources.Snapshots.readVersion(spark, root, 3))
-        == Seq(1L, 2L))
-      // re-expiring at a later cut folds the previous checkpoint in
-      graft.sources.Snapshots.expire(spark, root, cut = 3)
-      assert(ids(graft.sources.Snapshots.readVersion(spark, root, 3))
-        == Seq(1L, 2L))
-      assert(dataDirs(root) == Set("ckpt=3"), dataDirs(root))
-    }
-  }
-}
-
 /** q52 interval-overlap join: bucketed ≡ naive theta, half-open edges,
   * shared-bucket dedup, width fail-fast.
   */
@@ -299,95 +186,6 @@ class IntervalOverlapSpec extends AnyFunSuite {
         bucketWidth = 10L).collect()
     }
     assert(ex.getMessage.contains("left interval wider"), ex.getMessage)
-  }
-}
-
-/** Generative lifecycle invariants: random commit/expire schedules and
-  * random delete-batch sequences must be indistinguishable from their
-  * from-scratch ground truths.
-  */
-class LifecyclePropertySpec extends AnyFunSuite {
-  lazy val spark: SparkSession = TestSpark.spark
-
-  private def withRoot(f: String => Unit): Unit = {
-    val root = java.nio.file.Files.createTempDirectory("lcp").toString
-    try f(root)
-    finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(root))
-        .iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
-  }
-
-  test("random commit/expire schedule: every retained as-of ≡ batch rule") {
-    val sp = spark
-    import sp.implicits._
-    val rnd = new scala.util.Random(13)
-    (1 to 3).foreach { trial =>
-      withRoot { root =>
-        val nV = 5 + rnd.nextInt(3)
-        val batches = (1 to nV).map { v =>
-          v -> (0 until 1 + rnd.nextInt(4)).map(i => v * 100L + i)
-        }.toMap
-        var cut = 0
-        (1 to nV).foreach { v =>
-          graft.sources.Snapshots.commit(batches(v).toDF("k"), root, v)
-          // occasionally expire at a random cut ≤ the committed head
-          if (v >= 2 && rnd.nextBoolean()) {
-            cut = math.max(cut, 1 + rnd.nextInt(v))
-            graft.sources.Snapshots.expire(spark, root, cut)
-          }
-        }
-        (math.max(cut, 1) to nV).foreach { asOf =>
-          val want = (1 to asOf).flatMap(batches).sorted
-          val got = graft.sources.Snapshots.readVersion(spark, root, asOf)
-            .select("k").collect().map(_.getLong(0)).sorted.toSeq
-          assert(got == want, s"trial $trial asOf $asOf after cut $cut")
-        }
-        if (cut >= 1) intercept[IllegalArgumentException] {
-          graft.sources.Snapshots.readVersion(spark, root, cut - 1)
-        }
-      }
-    }
-  }
-
-  test("random delete batches + fold points: view ≡ base minus all deletes") {
-    val sp = spark
-    import sp.implicits._
-    val rnd = new scala.util.Random(17)
-    (1 to 3).foreach { trial =>
-      val base0 = (1L to 60L).map(k => (k, s"v$k"))
-      withRoot { root =>
-        val baseDir = s"$root/base0"
-        val dvDir = s"$root/dv"
-        base0.toDF("k", "v").write.parquet(baseDir)
-        java.nio.file.Files.createDirectories(
-          java.nio.file.Paths.get(dvDir))
-        var curBase = baseDir
-        var gen = 0
-        val deleted = scala.collection.mutable.Set[Long]()
-        (1 to 5).foreach { step =>
-          val batch = (0 until 1 + rnd.nextInt(5))
-            .map(_ => 1L + rnd.nextInt(60)).distinct
-          deleted ++= batch
-          graft.sources.DeletionVectors.appendDeletes(
-            batch.toDF("k"), dvDir)
-          if (rnd.nextBoolean()) { // fold at random points
-            gen += 1
-            val next = s"$root/base$gen"
-            graft.sources.DeletionVectors.foldCompact(
-              spark, curBase, dvDir, "k", next)
-            curBase = next
-          }
-          val got = graft.sources.DeletionVectors
-            .readMergeOnRead(spark, curBase, dvDir, "k")
-            .select("k").collect().map(_.getLong(0)).toSet
-          val want = base0.map(_._1).toSet -- deleted
-          assert(got == want, s"trial $trial step $step (folds: $gen)")
-        }
-      }
-    }
   }
 }
 

@@ -389,137 +389,6 @@ class StreamAsofSpec extends AnyFunSuite {
   }
 }
 
-/** io12c atomic-pointer snapshots: every crash window of commit and
-  * expire reads consistently; re-runs converge.
-  */
-class AtomicSnapshotSpec extends AnyFunSuite {
-  import graft.sources.Snapshots
-  lazy val spark: SparkSession = TestSpark.spark
-
-  private def withRoot(f: String => Unit): Unit = {
-    val root = java.nio.file.Files.createTempDirectory("snapc").toString
-    try f(root)
-    finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(root))
-        .iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
-  }
-
-  private def ks(df: org.apache.spark.sql.DataFrame): Set[Long] =
-    df.select("k").collect().map(_.getLong(0)).toSet
-
-  private def commit3(root: String): Unit = {
-    val sp = spark
-    import sp.implicits._
-    Snapshots.commitPtr(Seq(1L, 2L).toDF("k"), root, 1)
-    Snapshots.commitPtr(Seq(3L, 4L).toDF("k"), root, 2)
-    Snapshots.commitPtr(Seq(5L, 6L).toDF("k"), root, 3)
-  }
-
-  test("commit/read/expire through the pointer round-trips") {
-    withRoot { root =>
-      commit3(root)
-      assert(ks(Snapshots.readVersionPtr(spark, root, 2)) == Set(1L, 2L, 3L, 4L))
-      Snapshots.expirePtr(spark, root, cut = 2, graceMs = 0L)
-      assert(ks(Snapshots.readVersionPtr(spark, root, 3)) ==
-        Set(1L, 2L, 3L, 4L, 5L, 6L), "as-of-3 byte-stable after expiry")
-      intercept[IllegalArgumentException] {
-        Snapshots.readVersionPtr(spark, root, 1) // history retired
-      }
-      // superseded generations swept: exactly one g= dir remains
-      val gens = new java.io.File(s"$root/manifest").listFiles()
-        .count(f => f.isDirectory && f.getName.startsWith("g="))
-      assert(gens == 1)
-    }
-  }
-
-  test("crash between checkpoint and publish: reads untouched, retry converges") {
-    withRoot { root =>
-      commit3(root)
-      val before = ks(Snapshots.readVersionPtr(spark, root, 3))
-      // step 1 only — the writer dies before any generation is written
-      Snapshots.ptrCheckpoint(spark, root, cut = 2)
-      assert(ks(Snapshots.readVersionPtr(spark, root, 3)) == before)
-      assert(ks(Snapshots.readVersionPtr(spark, root, 1)) == Set(1L, 2L),
-        "pre-cut history must still read — nothing was published")
-      // full retry from scratch converges
-      Snapshots.expirePtr(spark, root, cut = 2, graceMs = 0L)
-      assert(ks(Snapshots.readVersionPtr(spark, root, 3)) == before)
-      intercept[IllegalArgumentException] {
-        Snapshots.readVersionPtr(spark, root, 1)
-      }
-    }
-  }
-
-  test("crash between generation write and pointer swap: invisible; retry converges") {
-    withRoot { root =>
-      commit3(root)
-      val before = ks(Snapshots.readVersionPtr(spark, root, 3))
-      val kept = Snapshots.ptrCheckpoint(spark, root, cut = 2)
-      val gen = Snapshots.currentGen(spark, root).get + 1L
-      Snapshots.writeManifestGen(spark, root, gen, kept)
-      // died HERE: the new generation exists but the pointer never moved
-      assert(ks(Snapshots.readVersionPtr(spark, root, 3)) == before)
-      assert(ks(Snapshots.readVersionPtr(spark, root, 1)) == Set(1L, 2L),
-        "unswapped generation must be invisible")
-      Snapshots.expirePtr(spark, root, cut = 2, graceMs = 0L)
-      assert(ks(Snapshots.readVersionPtr(spark, root, 3)) == before)
-    }
-  }
-
-  test("crash between swap and sweep: consistent; re-expire sweeps") {
-    withRoot { root =>
-      commit3(root)
-      val before = ks(Snapshots.readVersionPtr(spark, root, 3))
-      val kept = Snapshots.ptrCheckpoint(spark, root, cut = 2)
-      val gen = Snapshots.currentGen(spark, root).get + 1L
-      Snapshots.writeManifestGen(spark, root, gen, kept)
-      Snapshots.swapPointer(spark, root, gen)
-      // died HERE: stale dirs + old generations remain on disk, but the
-      // published manifest already reads exactly right
-      assert(ks(Snapshots.readVersionPtr(spark, root, 3)) == before)
-      intercept[IllegalArgumentException] {
-        Snapshots.readVersionPtr(spark, root, 1)
-      }
-      // re-expire is the documented recovery: idempotent, sweeps
-      Snapshots.expirePtr(spark, root, cut = 2, graceMs = 0L)
-      assert(ks(Snapshots.readVersionPtr(spark, root, 3)) == before)
-      val files = new java.io.File(s"$root/data").listFiles().map(_.getName)
-      assert(files.sorted.toSeq == Seq("ckpt=2", "v=3"),
-        s"sweep must leave only the checkpoint and v3: ${files.toSeq}")
-    }
-  }
-
-  test("crashed commit (data dir, no publish) is invisible and swept") {
-    val sp = spark
-    import sp.implicits._
-    withRoot { root =>
-      commit3(root)
-      Seq(99L).toDF("k").write.parquet(s"$root/data/v=9")
-      assert(ks(Snapshots.readVersionPtr(spark, root, 9)) ==
-        Set(1L, 2L, 3L, 4L, 5L, 6L), "orphan must not be planned")
-      Snapshots.expirePtr(spark, root, cut = 1, graceMs = 0L)
-      assert(!new java.io.File(s"$root/data/v=9").exists(),
-        "expire must sweep crashed-commit orphans")
-    }
-  }
-
-  test("retried commitPtr converges to one manifest row per version") {
-    val sp = spark
-    import sp.implicits._
-    withRoot { root =>
-      Snapshots.commitPtr(Seq(1L).toDF("k"), root, 1)
-      Snapshots.commitPtr(Seq(1L).toDF("k"), root, 1) // full replay
-      assert(ks(Snapshots.readVersionPtr(spark, root, 1)) == Set(1L))
-      val gen = Snapshots.currentGen(spark, root).get
-      val rows = spark.read.parquet(s"$root/manifest/g=$gen").count()
-      assert(rows == 1L, "retried commit must dedup, not double-list")
-    }
-  }
-}
-
 /** Louvain fixed-point weight rescale: similarity-weighted near-dup
   * graphs cluster; the overflow bound is re-checked on the rescaled
   * graph; sub-half-ulp weights drop.
@@ -659,17 +528,17 @@ class WarmCcSpec extends AnyFunSuite {
     import sp.implicits._
     val root = java.nio.file.Files.createTempDirectory("io14t").toString
     try {
-      graft.sources.Snapshots.commitPtr(Seq(1L, 2L).toDF("k"), root, 1)
-      graft.sources.Snapshots.commitPtr(Seq(3L).toDF("k"), root, 2)
-      graft.sources.Snapshots.commitPtr(Seq(4L).toDF("k"), root, 3)
-      val delta = graft.sources.Snapshots.changesSincePtr(spark, root, 1, 3)
+      graft.sources.Snapshots.commit(Seq(1L, 2L).toDF("k"), root, 1)
+      graft.sources.Snapshots.commit(Seq(3L).toDF("k"), root, 2)
+      graft.sources.Snapshots.commit(Seq(4L).toDF("k"), root, 3)
+      val delta = graft.sources.Snapshots.changesSince(spark, root, 1, 3)
         .collect().map(_.getLong(0)).toSet
       assert(delta == Set(3L, 4L), s"only batches 2 and 3: $delta")
-      val empty = graft.sources.Snapshots.changesSincePtr(spark, root, 3, 7)
+      val empty = graft.sources.Snapshots.changesSince(spark, root, 3, 7)
       assert(empty.count() == 0L && empty.columns.toSeq == Seq("k"),
         "past-head poll: zero rows, schema intact")
       intercept[IllegalArgumentException] {
-        graft.sources.Snapshots.changesSincePtr(spark, root, 5, 4)
+        graft.sources.Snapshots.changesSince(spark, root, 5, 4)
       }
     } finally {
       import scala.jdk.CollectionConverters._

@@ -847,7 +847,7 @@ class ChangeFeedSpec extends AnyFunSuite {
   private def commitBronze(root: String, version: Int, ks: Long*): Unit = {
     val sp = spark
     import sp.implicits._
-    graft.sources.Snapshots.commitPtr(
+    graft.sources.Snapshots.commit(
       ks.map(k => (k, s"v$k")).toDF("k", "v"), root, version)
   }
 
@@ -893,7 +893,7 @@ class ChangeFeedSpec extends AnyFunSuite {
     withDirs { (bronze, consumer, out) =>
       commitBronze(bronze, 1, 1L, 2L)
       // the crash: processing ran, offset commit never happened
-      val delta = graft.sources.Snapshots.changesSincePtr(spark, bronze, 0, 1)
+      val delta = graft.sources.Snapshots.changesSince(spark, bronze, 0, 1)
       sinkRange(out)(delta, 0, 1)
       assert(ChangeFeed.committedOffset(spark, consumer) == 0)
       // the restarted consumer re-polls the SAME range — the sink's
@@ -964,7 +964,7 @@ class ChangeFeedSpec extends AnyFunSuite {
       ChangeFeed.poll(spark, bronze, consumer)(applyToSilver)
       // v2 re-states key 2 (an update flowing through the feed) and
       // adds key 4; the next poll merges just that delta
-      graft.sources.Snapshots.commitPtr(
+      graft.sources.Snapshots.commit(
         Seq((2L, "v2-NEW"), (4L, "v4")).toDF("k", "v"), bronze, 2)
       ChangeFeed.poll(spark, bronze, consumer)(applyToSilver)
       val got = LakeTable.read(spark, silver + "/t").collect()

@@ -352,13 +352,13 @@ class ChangeFeedBetweenSpec extends AnyFunSuite {
     withRoot { root =>
       val sp = spark
       import sp.implicits._
-      graft.sources.Snapshots.commitPtr(
+      graft.sources.Snapshots.commit(
         Seq((0L, "base")).toDF("k", "v"), root, version = 1)
       val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
       val got = new java.util.concurrent.ConcurrentLinkedQueue[Integer]
       val threads = (1 to 4).map { i =>
         new Thread(() =>
-          try got.add(graft.sources.Snapshots.appendNextPtr(
+          try got.add(graft.sources.Snapshots.appendNext(
             Seq((i.toLong, s"w$i")).toDF("k", "v"), root))
           catch { case t: Throwable => errs.add(t); () })
       }
@@ -368,9 +368,9 @@ class ChangeFeedBetweenSpec extends AnyFunSuite {
       import scala.jdk.CollectionConverters._
       assert(got.asScala.map(_.toInt).toSet == Set(2, 3, 4, 5),
         "each appender must win exactly one consecutive version")
-      assert(graft.sources.Snapshots.headVersionPtr(spark, root)
+      assert(graft.sources.Snapshots.headVersion(spark, root)
         .contains(5))
-      val all = graft.sources.Snapshots.readVersionPtr(spark, root, 5)
+      val all = graft.sources.Snapshots.readVersion(spark, root, 5)
         .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
       assert(all == Map(0L -> "base", 1L -> "w1", 2L -> "w2",
         3L -> "w3", 4L -> "w4"),
@@ -383,13 +383,13 @@ class ChangeFeedBetweenSpec extends AnyFunSuite {
       val sp = spark
       import sp.implicits._
       val batch = Seq((1L, "a")).toDF("k", "v")
-      graft.sources.Snapshots.commitPtr(batch, root, version = 1)
+      graft.sources.Snapshots.commit(batch, root, version = 1)
       // the retry (crash-after-swap redelivery) converges: one manifest
       // row, one copy of the data
-      graft.sources.Snapshots.commitPtr(batch, root, version = 1)
-      assert(graft.sources.Snapshots.readVersionPtr(spark, root, 1)
+      graft.sources.Snapshots.commit(batch, root, version = 1)
+      assert(graft.sources.Snapshots.readVersion(spark, root, 1)
         .count() == 1L)
-      assert(graft.sources.Snapshots.headVersionPtr(spark, root)
+      assert(graft.sources.Snapshots.headVersion(spark, root)
         .contains(1))
     }
   }

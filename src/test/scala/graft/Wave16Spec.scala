@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Round-16: manifest-recorded key enforcement (a wrong key must fail
   * loudly, never silently misprune), secondary-stat survival across
   * merge/delete/compact, overflow-safe z-scaling, the cross-process
-  * commit claim, and the grace-gated ptrSweep.
+  * commit claim, and the grace-gated Snapshots.sweep.
   */
 class LakeKeyGuardSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
@@ -72,6 +72,42 @@ class LakeKeyGuardSpec extends AnyFunSuite {
       val e = intercept[IllegalArgumentException](
         LakeTable.merge(kv(4L -> 40L), root, "v"))
       assert(e.getMessage.contains("key mismatch"))
+      assert(LakeTable.read(spark, root).count() == 3L)
+    }
+  }
+
+  test("a key-less publish over an unreadable live manifest fails loudly") {
+    withRoot { root =>
+      LakeTable.append(kv(1L -> 10L, 2L -> 20L), root, "k")
+      val (rows, obs) = LakeTable.currentState(spark, root)
+      // junk bytes in the live manifest's parquet file (checksums gone,
+      // so the reader sees the junk itself)
+      val manDir = new java.io.File(s"$root/manifest/${obs.get}")
+      manDir.listFiles().filter(_.getName.endsWith(".crc"))
+        .foreach(f => java.nio.file.Files.delete(f.toPath))
+      manDir.listFiles().filter(_.getName.endsWith(".parquet"))
+        .foreach(f => java.nio.file.Files.write(
+          f.toPath, "not a parquet file".getBytes("UTF-8")))
+      // the recorded key cannot be read: publishing without it would
+      // drop the key guard, so the publish must fail, not go key-less
+      intercept[Exception](
+        LakeTable.publishIfCurrent(spark, root, rows, obs))
+      assert(LakeTable.currentName(spark, root) == obs, "nothing published")
+    }
+  }
+
+  test("a key-less publish over a swept observed generation is refused, not failed") {
+    withRoot { root =>
+      LakeTable.append(kv(1L -> 10L, 2L -> 20L), root, "k")
+      val (rowsA, obsA) = LakeTable.currentState(spark, root)
+      LakeTable.merge(kv(3L -> 30L), root, "k")
+      LakeTable.sweep(spark, root, orphanGraceMs = 0L)
+      assert(!new java.io.File(s"$root/manifest/${obsA.get}").exists())
+      assert(!LakeTable.publishIfCurrent(spark, root, rowsA, obsA))
+      // the live observation still publishes and keeps the recorded key
+      val (rows, obs) = LakeTable.currentState(spark, root)
+      assert(LakeTable.publishIfCurrent(spark, root, rows, obs))
+      assert(LakeTable.currentStateKeyed(spark, root)._3.contains("k"))
       assert(LakeTable.read(spark, root).count() == 3L)
     }
   }
@@ -280,7 +316,7 @@ class CommitClaimSpec extends AnyFunSuite {
   }
 }
 
-/** The grace-gated ptrSweep: an in-flight appender's staged dir and a
+/** The grace-gated Snapshots.sweep: an in-flight appender's staged dir and a
   * young superseded generation survive a concurrent expire; grace 0 is
   * the single-writer collect-now mode the io12c row uses.
   */
@@ -307,23 +343,23 @@ class PtrSweepGraceSpec extends AnyFunSuite {
     val sp = spark
     import sp.implicits._
     withRoot { root =>
-      Snapshots.commitPtr(Seq(0L).toDF("k"), root, 1)
+      Snapshots.commit(Seq(0L).toDF("k"), root, 1)
       val appended = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
       val appender = new Thread(() => {
         (1 to 8).foreach { i =>
-          Snapshots.appendNextPtr(Seq(100L + i).toDF("k"), root)
+          Snapshots.appendNext(Seq(100L + i).toDF("k"), root)
           appended.add(100L + i)
           ()
         }
       })
       appender.start()
       (1 to 3).foreach { _ =>
-        Snapshots.expirePtr(spark, root, cut = 1)
+        Snapshots.expire(spark, root, cut = 1)
         Thread.sleep(30L)
       }
       appender.join()
-      Snapshots.expirePtr(spark, root, cut = 1)
-      val live = Snapshots.readVersionPtr(spark, root, Int.MaxValue)
+      Snapshots.expire(spark, root, cut = 1)
+      val live = Snapshots.readVersion(spark, root, Int.MaxValue)
         .select(col("k")).collect().map(_.getLong(0)).toSet
       import scala.jdk.CollectionConverters._
       val lost = appended.asScala.toSet -- live
@@ -335,16 +371,16 @@ class PtrSweepGraceSpec extends AnyFunSuite {
     val sp = spark
     import sp.implicits._
     withRoot { root =>
-      Snapshots.commitPtr(Seq(1L, 2L).toDF("k"), root, 1)
-      Snapshots.commitPtr(Seq(3L).toDF("k"), root, 2)
-      // an appendNextPtr mid-stage: data written, lock not yet taken
+      Snapshots.commit(Seq(1L, 2L).toDF("k"), root, 1)
+      Snapshots.commit(Seq(3L).toDF("k"), root, 2)
+      // an appendNext mid-stage: data written, lock not yet taken
       Seq(9L).toDF("k").write.parquet(s"$root/data/a=inflight")
-      Snapshots.expirePtr(spark, root, cut = 1)
+      Snapshots.expire(spark, root, cut = 1)
       assert(new java.io.File(s"$root/data/a=inflight").exists(),
         "the default grace must protect an in-flight stager")
       // the published state reads right regardless
-      assert(Snapshots.readVersionPtr(spark, root, 2).count() == 3L)
-      Snapshots.expirePtr(spark, root, cut = 1, graceMs = 0L)
+      assert(Snapshots.readVersion(spark, root, 2).count() == 3L)
+      Snapshots.expire(spark, root, cut = 1, graceMs = 0L)
       assert(!new java.io.File(s"$root/data/a=inflight").exists(),
         "grace 0 is the single-writer collect-now mode")
     }
