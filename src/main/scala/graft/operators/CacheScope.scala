@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
 import scala.util.control.NonFatal
 
 /** Deterministic cache lifetimes for multi-stage operator pipelines.
@@ -58,4 +60,26 @@ private[graft] object CacheScope {
   def rotate(state: DataFrame): DataFrame =
     org.apache.spark.sql.classic.GraftSqlBridge
       .resetStats(state.localCheckpoint())
+
+  /** [[rotate]] that also returns `metrics` (aggregate columns)
+    * evaluated over `state`'s rows, in the order given. The metrics
+    * ride the rotation's own checkpoint job through a fresh
+    * [[org.apache.spark.sql.Observation]] (uniquely named per call, so
+    * repeated rotations never collide), so a loop's stop test costs no
+    * second SQL execution. If the checkpoint fails, its error is
+    * rethrown here before any wait on the observation.
+    *
+    * EXACTNESS RULE: pass only integral counts or sums. The
+    * `CollectMetrics` node sits at the plan root, in the result stage,
+    * and Spark merges that stage's accumulator updates once per
+    * partition — so a count or an integer sum is exact. A floating sum
+    * would be merged in task-completion order, which varies from run to
+    * run; such metrics must keep their own aggregate action.
+    */
+  def rotate(
+      state: DataFrame, metric: Column, metrics: Column*): (DataFrame, Row) = {
+    val seen = Observation()
+    val out = rotate(state.observe(seen, metric, metrics: _*))
+    (out, Await.result(seen.future, Duration.Inf))
+  }
 }

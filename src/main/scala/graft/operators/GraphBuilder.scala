@@ -520,8 +520,9 @@ object GraphBuilder {
     * count: peel until the survivor count stops shrinking. Peeling is
     * monotone (survivor sets only shrink), so a stable COUNT is a
     * stable SET is the fixpoint — no vertex can drop in a later round.
-    * Costs one driver-side count per round (the same single action per
-    * iteration the PageRank convergence loop pays); `maxRounds` bounds
+    * The survivor count is observed inside each round's rotation
+    * ([[CacheScope.rotate]]'s observed form), so a round costs one SQL
+    * execution, as in the fixed form; `maxRounds` bounds
     * the loop defensively (the fixpoint is reached in ≤ |V| rounds on
     * any graph). Returns the converged core plus the number of peel
     * rounds run (reported like the PageRank result's iteration count),
@@ -547,16 +548,19 @@ object GraphBuilder {
     var rounds = 0
     var stable = false
     while (!stable && rounds < maxRounds) {
-      val next = kCoreInternalDeg(und, s)
+      val peeled = kCoreInternalDeg(und, s)
         .filter(col("deg") >= k)
         .select(col("id"))
-        .transform(CacheScope.rotate) // eager: truncates lineage AND feeds the count
       rounds += 1
-      if (stopOnStable) {
-        val c = next.count()
-        stable = c == prevCount
-        prevCount = c
-      }
+      val next =
+        if (!stopOnStable) CacheScope.rotate(peeled)
+        else {
+          val (rotated, seen) = CacheScope.rotate(peeled, count(lit(1)))
+          val c = seen.getLong(0)
+          stable = c == prevCount
+          prevCount = c
+          rotated
+        }
       s.unpersist(false)
       s = next
     }

@@ -80,6 +80,15 @@ import org.apache.spark.storage.StorageLevel
   * multiplies the round plan's depth (and Catalyst's optimization
   * time) by k — it trades the checkpoint jobs for strictly slower
   * planning while changing no value.
+  *
+  * In SQL executions, a round costs ONE in both forms: the converged
+  * form's stop test (the round's moves, and the labels that are not the
+  * identity) is observed inside the rotation's own checkpoint job
+  * ([[CacheScope.rotate]]'s observed form), not counted by a second
+  * action. A level costs 2 + rounds (the m aggregate, the initial
+  * rotation, the rounds), plus one for the mapping's rotation after the
+  * first level; the converged ladder adds one more for the contracted
+  * graph's rotation, and only when a later level will read it.
   */
 object Louvain {
 
@@ -165,8 +174,10 @@ object Louvain {
     * caller sees).
     */
   def moveRoundsConverged(
-      wedges: DataFrame, maxRounds: Int = 20): (DataFrame, Int) =
-    runMoves(wedges, maxRounds, stopOnStable = true)
+      wedges: DataFrame, maxRounds: Int = 20): (DataFrame, Int) = {
+    val (labels, rounds, _) = runMoves(wedges, maxRounds, stopOnStable = true)
+    (labels, rounds)
+  }
 
   /** WARM-START gain-move pass (g58 — the g56/g57 incremental
     * discipline applied to Louvain): the level-0 community assignment
@@ -205,8 +216,11 @@ object Louvain {
   def moveRoundsConvergedWarm(
       wedges: DataFrame,
       init: DataFrame,
-      maxRounds: Int = 20): (DataFrame, Int) =
-    runMoves(wedges, maxRounds, stopOnStable = true, Some(init))
+      maxRounds: Int = 20): (DataFrame, Int) = {
+    val (labels, rounds, _) =
+      runMoves(wedges, maxRounds, stopOnStable = true, Some(init))
+    (labels, rounds)
+  }
 
   /** Unweighted convenience: [[fromEdges]] + [[moveRoundsWeighted]]. */
   def moveRounds(edges: DataFrame, rounds: Int): DataFrame =
@@ -253,11 +267,12 @@ object Louvain {
     * are the identity), because then the contraction is a no-op and
     * every further level would replay the same graph — Blondel et al.'s
     * own termination ("when no further improvement is possible"), the
-    * O14/O16 discipline applied to the ladder. The identity check (one
-    * count over the |V_level|-sized label frame per level) is
-    * deliberately stricter than "no merges": a permutation fixpoint
-    * with all-singleton communities would relabel the graph and could
-    * re-tie-break downstream levels.
+    * O14/O16 discipline applied to the ladder. The identity check (a
+    * count of the |V_level|-sized label frame's non-identity rows,
+    * observed inside the level's last round rotation, so it runs no
+    * job of its own) is deliberately stricter than "no merges": a
+    * permutation fixpoint with all-singleton communities would relabel
+    * the graph and could re-tie-break downstream levels.
     *
     * Per-level ROUNDS stay a capped budget, honestly: each level runs
     * [[moveRoundsConverged]], which cuts early when stability is
@@ -336,12 +351,11 @@ object Louvain {
     PlanScope.narrowFor(w) {
     while (level < maxLevels && !done) {
       val seed = if (level == 0) init else None
-      val lab = runMoves(w, roundsPerLevel, stopOnStable, seed)._1
+      val (lab, _, relabeled) = runMoves(w, roundsPerLevel, stopOnStable, seed)
       level += 1
       // a warm level 0 keeps runMoves' own stability rule: its seeded
       // labels are not the identity even at a fixpoint
-      if (stopOnStable && seed.isEmpty)
-        done = lab.filter(col("id") =!= col("lbl")).count() == 0L
+      if (stopOnStable && seed.isEmpty) done = relabeled == 0L
       mapping =
         if (mapping == null) lab
         else CacheScope.rotate(
@@ -349,10 +363,13 @@ object Louvain {
             .join(lab.select(col("id").as("lbl"), col("lbl").as("lbl2")),
               Seq("lbl"))
             .select(col("id"), col("lbl2").as("lbl")))
-      if (!done) {
-        // the converged ladder rotates the (|C|²-bounded, small)
-        // contracted graph so its lineage stays flat at any depth; the
-        // fixed ladder keeps it lazy, saving a job per level
+      if (!done && level < maxLevels) {
+        // only a later level reads the contraction, so the last level
+        // builds none. The converged ladder rotates the (|C|²-bounded,
+        // small) contracted graph so its lineage stays flat at any
+        // depth, one SQL execution per contracting level (see the
+        // object Scaladoc for a level's whole cost); the fixed ladder
+        // keeps it lazy, saving that execution
         val next = contractWeighted(w, lab)
         w = if (stopOnStable) CacheScope.rotate(next) else next
       }
@@ -502,11 +519,17 @@ object Louvain {
     (we, und, kv, m)
   }
 
+  /** The one move loop. Returns (labels, rounds run, labels that are
+    * not the identity). The converged form reads its stop test and that
+    * count from metrics observed in each round's rotation, so a round
+    * costs one SQL execution, as in the fixed form; the fixed form
+    * observes nothing and returns -1 for the count.
+    */
   private def runMoves(
       wedges: DataFrame,
       maxRounds: Int,
       stopOnStable: Boolean,
-      init: Option[DataFrame] = None): (DataFrame, Int) = {
+      init: Option[DataFrame] = None): (DataFrame, Int, Long) = {
     require(maxRounds >= 1, "maxRounds must be >= 1")
     PlanScope.narrowFor(wedges) {
     val (we, und, kv, m) = louvainFrames(wedges)
@@ -525,22 +548,29 @@ object Louvain {
     var iters = 0
     var stable = false
     var prevQuiet = false
+    var relabeled = -1L
     var prev: DataFrame = labels
     while (iters < maxRounds && !stable) {
       val (next0, cand) = louvainRound(und, kv, labels, m, iters + 1)
-      // the per-round chg flag checkpoints WITH the labels, so the
-      // stability count below scans the materialized frame instead of
-      // paying a |V|-row join+exchange per round
-      val nextFull = next0.transform(CacheScope.rotate)
-      val next = nextFull.select(col("id"), col("lbl"))
       iters += 1
-      if (stopOnStable) {
-        val changed = nextFull.filter(col("chg")).count()
-        // a fixpoint needs BOTH parity classes quiet: one zero-move
-        // round only proves the currently-active class is settled
-        if (changed == 0L && prevQuiet) stable = true
-        prevQuiet = changed == 0L
-      }
+      // the round's moves (the chg flag) and its non-identity labels are
+      // counted inside the rotation's own job: no second pass over the
+      // materialized frame
+      val nextFull =
+        if (!stopOnStable) CacheScope.rotate(next0)
+        else {
+          val (rotated, seen) = CacheScope.rotate(next0,
+            count(when(col("chg"), 1)),
+            count(when(col("id") =!= col("lbl"), 1)))
+          val changed = seen.getLong(0)
+          relabeled = seen.getLong(1)
+          // a fixpoint needs BOTH parity classes quiet: one zero-move
+          // round only proves the currently-active class is settled
+          if (changed == 0L && prevQuiet) stable = true
+          prevQuiet = changed == 0L
+          rotated
+        }
+      val next = nextFull.select(col("id"), col("lbl"))
       cand.unpersist(false)
       prev.unpersist(false)
       prev = nextFull
@@ -549,7 +579,7 @@ object Louvain {
     we.unpersist(false)
     und.unpersist(false)
     kv.unpersist(false)
-    (labels, iters)
+    (labels, iters, relabeled)
     }
   }
 }

@@ -89,6 +89,14 @@ object Mis {
       maxRounds: Int): DataFrame =
     misOnCounted(und, verts, salt, maxRounds)._1
 
+  /** The loops' state rotation with its row count, observed inside
+    * the rotation's own job: a stop test that costs no second action.
+    */
+  private def rotateCounted(state: DataFrame): (DataFrame, Long) = {
+    val (out, seen) = CacheScope.rotate(state, count(lit(1)))
+    (out, seen.getLong(0))
+  }
+
   /** [[misOn]] plus the fixpoint depth it used — the depth feeds the
     * oracle unroll-bound assertions.
     */
@@ -97,10 +105,9 @@ object Mis {
       verts: DataFrame,
       salt: String,
       maxRounds: Int): (DataFrame, Int) = {
-    var active = verts.transform(CacheScope.rotate)
+    var (active, nActive) = rotateCounted(verts)
     var mis: DataFrame = null
     var r = 0
-    var nActive = active.count()
     while (nActive > 0) {
       require(r < maxRounds,
         s"lubyMis: $nActive vertices still active after $maxRounds " +
@@ -119,9 +126,10 @@ object Mis {
         winners.join(und.hint("shuffle_hash"), col("id") === col("src"))
           .select(col("dst").as("id")))
         .distinct()
-      active = active.join(removed, Seq("id"), "left_anti")
-        .transform(CacheScope.rotate)
-      nActive = active.count()
+      val (left, n) =
+        rotateCounted(active.join(removed, Seq("id"), "left_anti"))
+      active = left
+      nActive = n
       r += 1
     }
     (if (mis == null) verts.limit(0) else mis, r)
@@ -151,11 +159,9 @@ object Mis {
       maxColors: Int = 64,
       maxRounds: Int = 64): DataFrame = PlanScope.narrowFor(edges) {
     val und = symmetrize(edges)
-    var remaining = GraphBuilder.vertices(edges)
-      .transform(CacheScope.rotate)
+    var (remaining, nRem) = rotateCounted(GraphBuilder.vertices(edges))
     var colored: DataFrame = null
     var k = 0
-    var nRem = remaining.count()
     while (nRem > 0) {
       require(k < maxColors,
         s"lubyColoring: $nRem vertices uncolored after $maxColors " +
@@ -163,9 +169,10 @@ object Mis {
       val misK = misOn(und, remaining, s"$salt:$k", maxRounds)
       val ck = misK.withColumn("color", lit(k.toLong))
       colored = if (colored == null) ck else colored.unionByName(ck)
-      remaining = remaining.join(misK, Seq("id"), "left_anti")
-        .transform(CacheScope.rotate)
-      nRem = remaining.count()
+      val (left, n) =
+        rotateCounted(remaining.join(misK, Seq("id"), "left_anti"))
+      remaining = left
+      nRem = n
       k += 1
     }
     CacheScope.sealAfter(
@@ -301,11 +308,11 @@ object Mis {
         if (matched == null) winners else matched.unionByName(winners)
       val mVtx = winners.select(col("u").as("x"))
         .union(winners.select(col("v").as("x"))).distinct()
-      active = active
+      val (left, n) = rotateCounted(active
         .join(mVtx.withColumnRenamed("x", "u"), Seq("u"), "left_anti")
-        .join(mVtx.withColumnRenamed("x", "v"), Seq("v"), "left_anti")
-        .transform(CacheScope.rotate)
-      nActive = active.count()
+        .join(mVtx.withColumnRenamed("x", "v"), Seq("v"), "left_anti"))
+      active = left
+      nActive = n
       r += 1
     }
     (if (matched == null) canon.limit(0) else matched, r)

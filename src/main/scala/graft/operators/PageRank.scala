@@ -107,12 +107,17 @@ final case class PageRankResult(
   *   - Contribution aggregation gets map-side partial aggregation for free
   *     (the reference configures no combiner, paying full shuffle).
   *   - All three global metrics (Σ PR, Σ|Δ|, dangling sum) fold into ONE
-  *     aggregation action per iteration over the already-persisted new
-  *     state — one job, one pass, mirroring the reference's piggybacked
-  *     counters without the scaled-long quantization quirk.
-  *   - Lineage is cut with an eager-on-first-action localCheckpoint every
-  *     iteration — the Spark analogue of the reference's iteration-dir
-  *     rotation; without it the plan tree doubles per iteration.
+  *     aggregation action per iteration over the new state — one pass,
+  *     mirroring the reference's piggybacked counters without the
+  *     scaled-long quantization quirk. They are doubles, so they keep
+  *     that action instead of being observed inside the checkpoint's
+  *     job (see [[CacheScope.rotate]]'s exactness rule).
+  *   - Lineage is cut with a lazy localCheckpoint every iteration,
+  *     materialized by the metrics action — the Spark analogue of the
+  *     reference's iteration-dir rotation; without it the plan tree
+  *     doubles per iteration. The lazy checkpoint still posts its own
+  *     SQL execution, so an iteration costs two (LoopCostSpec pins it
+  *     on the broadcast and the shuffled path).
   */
 object PageRank {
 
@@ -492,8 +497,9 @@ object PageRank {
         .select(
           col("id") +: col("outdeg") +: carry :+
             rankExpr.as("rank") :+ col("rank").as("prev_rank"): _*)
-        .localCheckpoint(false) // lazy: the metrics pass below both
-      // materializes and truncates in ONE job instead of two
+        .localCheckpoint(false) // lazy: the metrics pass below
+      // materializes it. The call still posts a SQL execution of its
+      // own, so an iteration runs two: this one and the metrics .first()
 
       // One pass for all three global metrics + next iteration's dangling
       // mass (preserving the reference's one-iteration lag).
